@@ -18,6 +18,23 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+# Dim id types whose values str() renders in a form Spark casts back
+# exactly; a dim with any other id type takes the struct-min form.
+_LITERAL_ID_TYPES = (
+    T.StringType, T.IntegralType, T.BooleanType, T.FractionalType, T.DateType,
+)
+
+
+def _sql_literal(v, sql_type: str = "string") -> str:
+    """``str(v)`` as a SQL literal of ``sql_type`` that parses the same
+    under either ``spark.sql.parser.escapedStringLiterals`` setting: its
+    UTF-8 bytes as a hex binary literal, cast to a string and then to
+    ``sql_type``. Constant folding turns it into a plain literal, so the
+    optimised plan is unchanged."""
+    text = f"CAST(X'{str(v).encode('utf-8').hex()}' AS STRING)"
+    return text if sql_type == "string" else f"CAST({text} AS {sql_type})"
 
 
 def fuzzy_containment_lookup(
@@ -46,13 +63,21 @@ def fuzzy_containment_lookup(
     Two physical strategies, picked by dim size:
 
     1. **Projection path** (dim ≤ ``max_dim_expr_rows``): the dim rows are
-       collected once at plan time (bounded — same budget as a broadcast)
-       and unrolled into a single narrow expression
-       ``array_min(array_compact(array(when(contains, struct(ord, id)),
-       ...)))``. No join node, no shuffle, no row explosion — the fact side
-       streams through whole-stage codegen untouched. This is the 100 TB
-       path for the reference's actual dims (≤10⁴ rows): per-row work is
-       identical to the theta-join's predicate evaluation, but nothing else.
+       collected once at plan time (bounded — same budget as a broadcast),
+       sorted by (``dim_order``, id) and unrolled into one narrow
+       expression ``coalesce(CASE WHEN instr(lower(text), name) > 0 THEN id
+       END, …, CAST(NULL AS <id type>))``. No join node, no shuffle, no row
+       explosion — the fact side streams through whole-stage codegen
+       untouched. This is the 100 TB path for the reference's actual dims
+       (≤10⁴ rows): per-row work is identical to the theta-join's
+       predicate evaluation, but nothing else. The chain is rendered as
+       ONE SQL string and parsed by one ``F.expr`` call, not built from
+       about six py4j ``Column`` calls per dim row: names are written as
+       hex literals (parsed alike under any
+       ``spark.sql.parser.escapedStringLiterals``), ids as literals cast to
+       the dim's id type. A dim with a null id, a NaN order, or an id
+       type outside ``_LITERAL_ID_TYPES`` takes an equivalent struct-min
+       form instead.
     2. **Theta-join path** (larger dims): broadcast non-equi join + a
        ``min_by`` hash aggregate to keep the first match per fact row.
     """
@@ -80,7 +105,11 @@ def fuzzy_containment_lookup(
         has_nan_order = any(
             isinstance(r[2], float) and r[2] != r[2] for r in dim_rows
         )
-        if all(r[0] is not None for r in dim_rows) and not has_nan_order:
+        if (
+            isinstance(dim.schema[dim_id].dataType, _LITERAL_ID_TYPES)
+            and all(r[0] is not None for r in dim_rows)
+            and not has_nan_order
+        ):
             # Sorted-COALESCE encoding (the common case: non-null dim ids).
             # "First match by dim order" = min over (ord, id) structs; with
             # the rows SORTED at plan time by the same (nulls-first ord, id)
@@ -108,21 +137,20 @@ def fuzzy_containment_lookup(
             while low in fact.columns:
                 low = f"_{low}"  # never clobber a real fact column
             branches = [
-                F.when(
-                    F.instr(F.col(low), F.lit(str(r[1]).lower())) > 0,
-                    F.lit(r[0]).cast(id_type),
-                )
+                f"CASE WHEN instr(`{low}`, {_sql_literal(str(r[1]).lower())})"
+                f" > 0 THEN {_sql_literal(r[0], id_type)} END"
                 for r in ordered
             ]
-            branches.append(F.lit(None).cast(id_type))
+            branches.append(f"CAST(NULL AS {id_type})")
             return (
                 fact.withColumn(low, F.lower(F.col(fact_text)))
-                .withColumn(out_col, F.coalesce(*branches))
+                .withColumn(out_col, F.expr(f"coalesce({', '.join(branches)})"))
                 .drop(low)
             )
         # A NULL dim id must surface as a null lookup result when its row
         # is the first match — coalesce would skip that branch — so the
-        # struct-min form remains for that (degenerate) dim shape.
+        # struct-min form remains for that (degenerate) dim shape, and for
+        # the NaN orders and id types the coalesce chain does not cover.
         lowered = F.lower(F.col(fact_text))
         candidates = F.array(
             *[

@@ -46,6 +46,10 @@ RUNTIME_REQUIRED_CONFS: dict[str, str] = {
     # data scan for every timestamp column. TIMESTAMP_MICROS is the
     # modern stats-capable encoding every lakehouse writer uses.
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
+    # SQL text the engine renders escapes backslashes in string literals
+    # (plans/fixtures._spark_literal), which holds only while backslash
+    # escapes are parsed: under `true` a literal backslash would double.
+    "spark.sql.parser.escapedStringLiterals": "false",
 }
 
 

@@ -9,7 +9,8 @@ Re-runs are idempotent by construction.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -73,6 +74,21 @@ def jdbc_append_sink(
     writer.save()
 
 
+def _observed_append(fresh: DataFrame, write) -> int:
+    """Run ``write`` on ``fresh`` as ONE Spark job that also counts the rows
+    it writes (an ``observe`` metric), and return that count.
+
+    No ``cache()`` + ``count()`` pass: with
+    ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning=false`` a
+    cache pins all ``spark.sql.shuffle.partitions`` output partitions, so
+    a few hundred rows landed as 32 data files; uncached, AQE coalesces
+    them into one.
+    """
+    seen = Observation()
+    write(fresh.observe(seen, F.count(F.lit(1)).alias("n")))
+    return seen.get["n"]
+
+
 def incremental_insert_only_jdbc(
     incoming: DataFrame,
     url: str,
@@ -87,31 +103,31 @@ def incremental_insert_only_jdbc(
 
     The existing side reads only the key columns (column pruning pushes
     into the remote SELECT), so the anti-join probe ships |table| key
-    tuples, not whole rows. Same single-writer caveat as the path-backed
-    form."""
+    tuples, not whole rows. The anti-join and the append are one job
+    (:func:`_observed_append`). A call that appends zero rows leaves the
+    database as it found it; since Spark's JDBC append creates a missing
+    table before it inserts, a first call checks ``isEmpty()`` up front.
+    Same single-writer caveat as the path-backed form."""
     spark = incoming.sparkSession
+    reader = spark.read.format("jdbc").option("url", url).option("dbtable", table)
+    for k, v in options.items():
+        reader = reader.option(k, v)
     try:
-        reader = spark.read.format("jdbc").option("url", url).option(
-            "dbtable", table
-        )
-        for k, v in options.items():
-            reader = reader.option(k, v)
+        # load() resolves the remote schema, so a missing table raises here
         existing = reader.load().select(*keys)
-        existing.take(1)  # force table-existence check now
     except Exception:
         existing = None
+        if incoming.isEmpty():
+            return 0
 
     fresh = (
         incoming
         if existing is None
         else incremental_new_rows(incoming, existing, keys)
     )
-    fresh = fresh.cache()
-    n = fresh.count()
-    if n:
-        jdbc_append_sink(fresh, url, table, **options)
-    fresh.unpersist()
-    return n
+    return _observed_append(
+        fresh, lambda df: jdbc_append_sink(df, url, table, **options)
+    )
 
 
 def incremental_insert_only(
@@ -123,28 +139,46 @@ def incremental_insert_only(
     """S7 end-to-end against a path-backed table: anti-join against current
     contents, append only novel keys. Returns the number of appended rows.
 
+    One Spark job reads, filters, writes and counts
+    (:func:`_observed_append`). Reading and appending to the same path in
+    one job is safe: the existing side's file list is fixed when the query
+    is analysed, and an append publishes its files only at job commit, so
+    the anti-join never sees the rows it is writing.
+
+    A call that appends zero rows leaves the target exactly as it found
+    it. Spark still writes one schema-only file for an empty append; the
+    files this write added (those not in ``existing.inputFiles()``) are
+    deleted again, and a directory the write created is removed.
+
     NOTE (non-atomic): read-then-append is the reference's exact semantic and
     is safe for a single writer; concurrent writers need a transactional
     table format (Delta MERGE) — documented, not silently pretended.
     """
     spark = incoming.sparkSession
+    jvm = spark._jvm
+    target = jvm.org.apache.hadoop.fs.Path(path)
+    fs = target.getFileSystem(spark._jsc.hadoopConfiguration())
     try:
         existing = spark.read.format(fmt).load(path)
-    except Exception:
-        existing = None
+        before = set(existing.inputFiles())
+    except AnalysisException:  # no table yet (or an empty directory)
+        existing, before = None, (set() if fs.exists(target) else None)
 
     fresh = (
         incoming
         if existing is None
         else incremental_new_rows(incoming, existing, keys)
     )
-    # The count also forces evaluation *before* the append below reads the
-    # same path, keeping read-before-write ordering explicit.
-    fresh = fresh.cache()
-    n = fresh.count()
-    if n:
-        fresh.write.mode("append").format(fmt).save(path)
-    fresh.unpersist()
+    n = _observed_append(
+        fresh, lambda df: df.write.mode("append").format(fmt).save(path)
+    )
+    if n == 0:
+        if before is None:
+            fs.delete(target, True)
+        else:
+            added = set(spark.read.format(fmt).load(path).inputFiles()) - before
+            for f in added:  # the file system drops each file's checksum too
+                fs.delete(jvm.org.apache.hadoop.fs.Path(f), False)
     return n
 
 

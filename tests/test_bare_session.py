@@ -85,3 +85,16 @@ def test_guard_is_idempotent(spark):
     ensure_runtime_confs(spark)
     for key, want in RUNTIME_REQUIRED_CONFS.items():
         assert spark.conf.get(key) == want
+
+
+def test_guard_resets_escaped_string_literals(spark):
+    # Rendered SQL literals escape backslashes (plans/fixtures.py), which
+    # a session parsing literals raw would read back doubled
+    key = "spark.sql.parser.escapedStringLiterals"
+    spark.conf.set(key, "true")
+    try:
+        ensure_runtime_confs(spark)
+        assert spark.conf.get(key) == "false"
+        assert spark.sql(r"SELECT 'a\\b' AS s").first().s == "a\\b"
+    finally:
+        spark.conf.set(key, "false")

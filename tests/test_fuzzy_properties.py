@@ -8,6 +8,9 @@ are frequent; each property is checked against a pure-Python reference of
 
 from __future__ import annotations
 
+from datetime import date, timedelta
+from decimal import Decimal
+
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -188,3 +191,78 @@ def test_fuzzy_fact_column_named_like_temp_is_preserved(spark):
     row = res.collect()[0]
     assert row.out == 1
     assert row["__fuzzy_lowered"] == "keep-me"
+
+
+# --- dim names and ids rendered as SQL literals (projection path) ----------
+# The projection path writes every dim name and id into one SQL string. A
+# name holding a quote, backslash, LIKE wildcard, backtick or non-ASCII
+# letter must match only itself, under either backslash-escape setting of
+# the SQL parser, and ids must come back with the dim's id type.
+
+NASTY_NAMES = [
+    "o'brien", "back\\slash", 'say "hi"', "100%", "a_b", "tick`tock",
+    "ñandú", "über", "ßtraße",
+]
+NASTY_FACTS = [
+    "O'BRIEN & sons", "o''brien", "obrien", "BACK\\SLASH ltd", "backslash",
+    "back\\\\slash", 'they say "hi"', "say hi", "100% juice", "100x",
+    "a_b corp", "axb", "TICK`TOCK", "ticktock", "ÑANDÚ s.a.", "ÜBER",
+    "uber", "ßtraße", "", None,
+]
+ID_KINDS = {
+    "int": ("INT", lambda i: i + 1),
+    "bigint": ("BIGINT", lambda i: (1 << 40) + i),
+    "string": ("STRING", lambda i: f"id-{i}'\\\"`"),
+    "double": ("DOUBLE", lambda i: i / 3 - 1),
+    "decimal": ("DECIMAL(12,3)", lambda i: Decimal(i) / 8 - Decimal("0.5")),
+    "date": ("DATE", lambda i: date(2024, 2, 27) + timedelta(days=i)),
+}
+
+
+@pytest.mark.parametrize("escaped", ["false", "true"])
+@pytest.mark.parametrize("id_kind", sorted(ID_KINDS))
+def test_fuzzy_literal_rendering_matches_udf_and_theta(spark, id_kind, escaped):
+    from data_management_service_run_etl_imputations_spark.operators.joins import (
+        fuzzy_containment_lookup_udf,
+    )
+
+    sql_type, make_id = ID_KINDS[id_kind]
+    ids = [make_id(i) for i in range(len(NASTY_NAMES))]
+    dim = spark.createDataFrame(
+        [(ids[i], name, i) for i, name in enumerate(NASTY_NAMES)],
+        f"empresa_id {sql_type}, nombre STRING, ord INT",
+    )
+    fact_df = spark.createDataFrame(
+        list(enumerate(NASTY_FACTS)), "k INT, company STRING"
+    )
+    key = "spark.sql.parser.escapedStringLiterals"
+    spark.conf.set(key, escaped)
+    try:
+        got = {}
+        for label, max_expr in (("projection", 1024), ("theta", 0)):
+            res = fuzzy_containment_lookup(
+                fact_df, dim, "company", "nombre", "empresa_id", "out",
+                dim_order="ord", fact_key="k", max_dim_expr_rows=max_expr,
+            )
+            assert res.schema["out"].dataType.simpleString() == sql_type.lower()
+            if label == "projection":
+                plan = res._jdf.queryExecution().executedPlan().toString()
+                assert "coalesce" in plan  # the rendered chain, not a fallback
+            got[label] = {r.k: r.out for r in res.collect()}
+        # the UDF mirrors the reference loop with int ids: give it each
+        # row's position and map the answer back to the real id
+        udf = fuzzy_containment_lookup_udf(
+            fact_df, list(enumerate(NASTY_NAMES)), "company", "out"
+        )
+        got["udf"] = {
+            r.k: None if r.out is None else ids[r.out] for r in udf.collect()
+        }
+    finally:
+        spark.conf.set(key, "false")
+    assert got["projection"] == got["theta"] == got["udf"]
+    # every name matches its own fact and nothing it only resembles
+    assert got["projection"][NASTY_FACTS.index("O'BRIEN & sons")] == ids[0]
+    assert got["projection"][NASTY_FACTS.index("back\\\\slash")] is None
+    assert got["projection"][NASTY_FACTS.index("100x")] is None
+    assert got["projection"][NASTY_FACTS.index("axb")] is None
+    assert got["projection"][NASTY_FACTS.index("ÑANDÚ s.a.")] == ids[6]

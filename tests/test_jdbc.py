@@ -123,6 +123,20 @@ def test_jdbc_incremental_insert_only_is_idempotent(spark, sf_dir, derby_url):
     assert back.select("n_nationkey").distinct().count() == nation.count()
 
 
+def test_jdbc_incremental_insert_only_empty_first_batch_creates_no_table(
+    spark, sf_dir, derby_url
+):
+    """An empty first batch appends nothing and leaves no table behind,
+    though Spark's JDBC append would create its target before inserting."""
+    empty = _nation(spark, sf_dir).select("n_nationkey").filter(F.lit(False))
+    n = incremental_insert_only_jdbc(
+        empty, derby_url, "nation_empty", ["n_nationkey"], driver=DERBY_DRIVER
+    )
+    assert n == 0
+    with pytest.raises(Exception):
+        jdbc_source(spark, derby_url, "nation_empty", driver=DERBY_DRIVER)
+
+
 def test_jdbc_parallel_write_controls(spark, sf_dir, derby_url):
     """S6 at scale: the writer honors explicit parallelism and batching —
     ``numPartitions`` coalesces the write to N concurrent connections
