@@ -547,15 +547,16 @@ _NATIVE_READ_MAX_FILES = 64
 
 
 def _native_read_frame(spark, path: str, version: int):
-    """A plain ``spark.read.parquet(<live files>)`` DataFrame for the
-    bound snapshot, or ``None`` when the snapshot needs the Python
-    DataSource. Taken only when results are PROVABLY byte-identical:
-    parquet format, no pending merge-on-read deletes, no column mapping,
-    and every live directory's schema equals the table schema (so no
-    executor-side null-fill/up-cast is ever needed), with the whole
-    snapshot at most ``$MANIFEST_SQL_NATIVE_READ_MAX_FILES`` (default
-    64) files — the dimension-table shape, where plan-time partition
-    pruning cannot pay for Python scan tasks. Snapshot isolation is
+    """A Spark-native DataFrame for the bound snapshot, built by the same
+    loader the DML verbs read with (``sinks._load_table_files`` under
+    ``sinks._apply_deletes``), or ``None`` when the snapshot needs the
+    Python DataSource: a non-parquet format, a legacy manifest listed by
+    directory (no explicit file list), or more than
+    ``$MANIFEST_SQL_NATIVE_READ_MAX_FILES`` (default 64) live files —
+    above that, plan-time partition pruning of the DataSource pays for
+    its Python scan tasks. Merge-on-read deletes become JVM anti-joins,
+    column mapping a re-labelling projection, and evolved directories
+    per-schema groups aligned to the table schema. Snapshot isolation is
     preserved by construction: the file list is resolved here, once,
     and baked into the plan."""
     import json
@@ -564,8 +565,10 @@ def _native_read_frame(spark, path: str, version: int):
     from pyspark.sql.types import StructType
 
     from data_management_service_run_etl_imputations_spark.sources.sinks import (
-        _live_dirs,
+        _apply_deletes,
+        _has_pos_deletes,
         _load_files_pruned,
+        _load_table_files,
         _materialize,
         _pruned_resolve,
     )
@@ -599,17 +602,9 @@ def _native_read_frame(spark, path: str, version: int):
         return None
     if "files" not in content:
         return None  # legacy dir-listing manifest: DS path only
-    if content.get("deletes") or content.get("col_ids"):
-        return None
     schema_json = content.get("schema_json")
     if not schema_json:
         return None
-    schema = StructType.fromJson(json.loads(schema_json))
-    want = schema.simpleString()
-    dir_schemas = content.get("dir_schemas", {})
-    live = _live_dirs(content)
-    if any(dir_schemas.get(d, want) != want for d in live):
-        return None  # evolved table: old dirs need null-fill — DS path
     files = content.get("files", {})
     rels = [
         e[0]
@@ -619,9 +614,13 @@ def _native_read_frame(spark, path: str, version: int):
     if len(rels) > max_files:
         return None
     if not rels:
-        return spark.createDataFrame([], schema)
-    paths = [os.path.join(path, *r.split("/")) for r in rels]
-    return spark.read.schema(schema).parquet(*paths)
+        return spark.createDataFrame(
+            [], StructType.fromJson(json.loads(schema_json))
+        )
+    df = _load_table_files(
+        spark, path, content, rels, with_pos=_has_pos_deletes(content)
+    )
+    return _apply_deletes(spark, path, df, content)
 
 
 class ManifestTableDataSource(DataSource):
@@ -650,12 +649,14 @@ class ManifestTableDataSource(DataSource):
 
 
 # view name (lowercased) -> (original view name, table root path,
-# follow_head, version the view is currently bound to): the resolution
-# table manifest_sql's DML dispatch uses to map a SQL table identifier
-# back to the manifest table it was registered from, and — for
-# follow_head registrations — to detect a moved head cheaply before a
-# SELECT falls through to spark.sql
-_SQL_TABLES: "dict[str, tuple[str, str, bool, int, bool]]" = {}
+# follow_head, version the view is currently bound to, prune
+# preference, native): the resolution table manifest_sql's DML dispatch
+# uses to map a SQL table identifier back to the manifest table it was
+# registered from, and — for follow_head registrations — to detect a
+# moved head cheaply before a SELECT falls through to spark.sql.
+# ``native`` marks a Spark-native binding (_native_read_frame), which
+# the per-statement rebind pass leaves alone unless its head moved
+_SQL_TABLES: "dict[str, tuple[str, str, bool, int, bool, bool]]" = {}
 
 # SQL VIEW definitions (round 12): view name (lowercased) ->
 # (original name, SQL text, seq). An engine view is a stored DEFINITION,
@@ -668,11 +669,13 @@ _SQL_TABLES: "dict[str, tuple[str, str, bool, int, bool]]" = {}
 # ascending seq). Durable mirror: catalog_store.catalog_set_view.
 _SQL_VIEWS: "dict[str, tuple[str, str, int]]" = {}
 
-# views whose CURRENT binding may hold a filter-pruned cached scan:
-# Spark's Python-DataSource readInfo cache is per relation instance and
-# is served to later no-filter scans of the same relation (see
-# ManifestBatchReader.prune) — after any SELECT ran against a binding,
-# the next manifest_sql statement referencing it re-binds first
+# views whose CURRENT Python-DataSource binding may hold a
+# filter-pruned cached scan: Spark's readInfo cache is per relation
+# instance and is served to later no-filter scans of the same relation
+# (see ManifestBatchReader.prune) — after any SELECT ran against such a
+# binding, the next manifest_sql statement referencing it re-binds
+# first. Native bindings never enter: their file list is fixed in the
+# plan and Spark prunes it per query, so no filter context can leak
 _VIEW_DIRTY: set = set()
 
 # serializes registry bookkeeping (register + per-statement rebinds):
@@ -715,7 +718,9 @@ def manifest_sql_register(
     register with ``prune=False``: the scan then never prunes from
     pushed filters (every predicate is still applied by Spark —
     correct, just unpruned), making the binding safe for unlimited
-    reuse.
+    reuse. The contract concerns DataSource bindings only: a parquet
+    snapshot of at most ``$MANIFEST_SQL_NATIVE_READ_MAX_FILES`` files
+    binds natively (:func:`_native_read_frame`) and is reusable as is.
 
     ``follow_head=True`` opts a view into always-current binding THROUGH
     :func:`manifest_sql`: before a statement referencing the view runs,
@@ -747,14 +752,16 @@ def manifest_sql_register(
             int(version) if version is not None else None,
             as_of=float(as_of) if as_of is not None else None,
         )
-        # Native parquet scan for plain dimension-sized snapshots (r13):
-        # byte-identical results with zero Python read tasks; falls back
-        # to the DataSource for every state that needs executor-side
-        # logic (deletes, column mapping, evolution null-fill) or whose
-        # file list outgrows one plan. Native plans push filters and
-        # prune columns in the JVM, so the prune-contract bookkeeping
-        # below is simply inert for them.
+        # Native parquet scan for every parquet snapshot of at most
+        # _NATIVE_READ_MAX_FILES files, through the loader DML reads
+        # with (pending deletes, column mapping and evolved dirs
+        # included): zero Python read tasks. Legacy dir-listed
+        # manifests and larger file lists keep the DataSource. Native
+        # plans push filters and prune columns in the JVM, so the
+        # prune-contract bookkeeping (_VIEW_DIRTY, the no-prune rebind
+        # of multi-reference statements) skips them.
         df = _native_read_frame(spark, path, bound_v) if bound_v > 0 else None
+        native = df is not None
         if df is None:
             reader = spark.read.format("manifest").option("path", path)
             if bound_v > 0:
@@ -784,6 +791,7 @@ def manifest_sql_register(
             follow_head,
             bound_v,
             prune,
+            native,
         )
         # a fresh binding has an empty scan cache — clean by construction
         _VIEW_DIRTY.discard(view_name.lower())
@@ -2574,7 +2582,7 @@ def _reregister_current(spark, view_name: str, path: str) -> None:
     refresh every mutating dispatcher branch uses."""
     t = _SQL_TABLES.get(view_name.lower())
     follow = t[2] if t else False
-    pref = t[4] if t and len(t) > 4 else True
+    pref = t[4] if t else True
     manifest_sql_register(
         spark, view_name, path, follow_head=follow, prune=pref
     )
@@ -2700,6 +2708,10 @@ def _rebind_referenced_views(spark, stmt: str) -> None:
       applied by Spark — correct, just unpruned) and marked dirty so
       the next single-reference statement restores a pruning binding.
 
+    Native bindings (:func:`_native_read_frame`) hold neither hazard —
+    their file list is fixed in the plan and has no Python scan cache —
+    so only a moved follow_head re-binds them.
+
     Reference detection is a word-boundary name match OUTSIDE quoted
     regions — a false positive (the name used as a column, say) merely
     triggers a harmless rebind; a miss is impossible for a real table
@@ -2792,8 +2804,7 @@ def _rebind_referenced_views_locked(spark, text: str) -> None:
     )
 
     for key, t in list(_SQL_TABLES.items()):
-        view, path, follow, bound_v = t[0], t[1], t[2], t[3]
-        pref = t[4] if len(t) > 4 else True
+        view, path, follow, bound_v, pref, native = t
         n_refs = len(
             re.findall(
                 r"(?<![\w`])" + re.escape(view) + r"(?![\w`])", text, re.I
@@ -2801,8 +2812,12 @@ def _rebind_referenced_views_locked(spark, text: str) -> None:
         )
         if not n_refs:
             continue
-        want_prune = pref and n_refs == 1
         moved = follow and _resolve_version(path, None) != bound_v
+        if native and not moved:
+            # a fixed file list with no Python scan cache: sound for any
+            # number of references and filter contexts
+            continue
+        want_prune = pref and n_refs == 1
         if key in _VIEW_DIRTY or moved or want_prune != pref:
             if follow:
                 manifest_sql_register(
@@ -2820,14 +2835,15 @@ def _rebind_referenced_views_locked(spark, text: str) -> None:
                 # the no-prune binding is for THIS statement only: keep
                 # the registered preference and force a rebind next time
                 nt = _SQL_TABLES[key]
-                _SQL_TABLES[key] = (nt[0], nt[1], nt[2], nt[3], pref)
+                _SQL_TABLES[key] = (*nt[:4], pref, nt[5])
         # this statement may push filters through the binding — the
         # next statement referencing the view must start from a fresh
         # relation (or one whose cache provably matches its context).
         # prune=False bindings never bake a filter context into the
         # cached scan, so they stay clean forever (no per-statement
-        # rebind tax on a no-prune workload)
-        if pref:
+        # rebind tax on a no-prune workload); nor do native ones, which
+        # a moved head may just have produced
+        if pref and not _SQL_TABLES[key][5]:
             _VIEW_DIRTY.add(key)
 
 

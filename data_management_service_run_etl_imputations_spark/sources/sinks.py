@@ -1065,7 +1065,10 @@ def _load_table_files(
     columns — an int→bigint widening makes it fail with
     CANNOT_MERGE_SCHEMAS, so homogeneous groups are the only safe unit.
     One group (the overwhelmingly common case) short-circuits to a plain
-    load.
+    load. A group whose recorded dir schema IS the table schema, with a
+    column mapping that re-labels nothing, is read with that schema
+    instead of ``mergeSchema`` — no footer-inference job; a dir without
+    a recorded schema groups under ``""`` and always merges.
 
     ``with_pos=True`` threads the file source's hidden ``_metadata``
     columns through as ``__mf_file`` (file path URI) / ``__mf_pos``
@@ -1074,9 +1077,20 @@ def _load_table_files(
     (it does not survive projections), which is why this is a load
     option rather than something :func:`_apply_deletes` could recover
     after the fact."""
+    import json
+
+    from pyspark.sql.types import StructType
+
     fmt = content.get("fmt", "parquet")
     dir_schemas: dict = content.get("dir_schemas", {})
     dir_col_ids: dict = content.get("dir_col_ids", {})
+    table_schema = (
+        StructType.fromJson(json.loads(content["schema_json"]))
+        if fmt == "parquet"
+        and content.get("schema")
+        and content.get("schema_json")
+        else None
+    )
 
     def group_key(rel: str):
         d = rel.rsplit("/", 1)[0]
@@ -1100,13 +1114,18 @@ def _load_table_files(
     )
 
     def load(group_rels: list[str]):
+        d = group_rels[0].rsplit("/", 1)[0]
         reader = spark.read.format(fmt)
-        if fmt == "parquet":
+        if (
+            table_schema is not None
+            and dir_schemas.get(d) == content.get("schema")
+            and _rename_exprs_for_dir(content, d, table_schema.names) is None
+        ):
+            reader = reader.schema(table_schema)
+        elif fmt == "parquet":
             reader = reader.option("mergeSchema", "true")
         df = reader.load([f"{path}/{rel}" for rel in group_rels])
-        exprs = _rename_exprs_for_dir(
-            content, group_rels[0].rsplit("/", 1)[0], df.columns
-        )
+        exprs = _rename_exprs_for_dir(content, d, df.columns)
         if exprs is not None:
             return df.select(*exprs, *pos_cols)
         return df.select("*", *pos_cols) if pos_cols else df
@@ -1856,6 +1875,9 @@ def _live_stages(content: dict) -> set[str]:
 # POSITIONAL delete masks.
 _POS_FILE = "__mf_file"
 _POS_IDX = "__mf_pos"
+# every positional sidecar's layout (table-relative file, row index):
+# fixed, so reads name it instead of inferring it from the footer
+_POS_SIDECAR_SCHEMA = "file string, pos bigint"
 
 
 def _has_pos_deletes(content: dict) -> bool:
@@ -1897,10 +1919,18 @@ def _apply_deletes(
     deletes = content.get("deletes") or []
     if not deletes:
         return df
-    out = df.withColumn("__src", F.input_file_name())
+    # only equality entries scope by source stage; the nondeterministic
+    # input_file_name() would also stop filters from reaching the scan
+    out = (
+        df.withColumn("__src", F.input_file_name())
+        if any(e.get("kind") != "pos" for e in deletes)
+        else df
+    )
     for i, entry in enumerate(deletes):
-        keys = spark.read.parquet(f"{path}/{entry['ref']}")
         if entry.get("kind") == "pos":
+            keys = spark.read.schema(_POS_SIDECAR_SCHEMA).parquet(
+                f"{path}/{entry['ref']}"
+            )
             pk = keys.select(
                 F.substring_index(F.col("file"), "/", -1).alias(
                     f"__pk_{i}_name"
@@ -1921,6 +1951,7 @@ def _apply_deletes(
         # key FILES are immutable: a column rename re-labels the entry's
         # logical match columns ("cols") but the file keeps its original
         # names ("key_cols", defaulted for pre-rename entries)
+        keys = spark.read.parquet(f"{path}/{entry['ref']}")
         file_cols = entry.get("key_cols", entry["cols"])
         renamed = keys.select(
             *[F.col(c).alias(f"__dk_{i}_{j}") for j, c in enumerate(file_cols)]
@@ -2551,7 +2582,9 @@ def _maybe_consolidate_pos(
     )
     merged = None
     for e in pos:
-        part = spark.read.parquet(f"{path}/{e['ref']}")
+        part = spark.read.schema(_POS_SIDECAR_SCHEMA).parquet(
+            f"{path}/{e['ref']}"
+        )
         merged = part if merged is None else merged.unionByName(part)
     keep_df = spark.createDataFrame(
         [(f,) for f in keep_files], "file string"
@@ -3756,6 +3789,20 @@ def _bloom_cast_safe(src_dtype: str, build_dtype: str) -> bool:
     return False
 
 
+def _key_envelope_aggs(keys: list[str]) -> list:
+    """Per-key min/max/has-null aggregates of the source-key envelope.
+    They are equal over a source and over its distinct keys, so MERGE
+    folds them into its duplicate-key guard aggregate."""
+    aggs = []
+    for c in keys:
+        aggs += [
+            F.min(c).alias(f"__lo_{c}"),
+            F.max(c).alias(f"__hi_{c}"),
+            F.max(F.col(c).isNull().cast("int")).alias(f"__nl_{c}"),
+        ]
+    return aggs
+
+
 def _merge_probe_candidates(
     spark,
     path: str,
@@ -3764,6 +3811,7 @@ def _merge_probe_candidates(
     n_src_keys: "int | None",
     keys: list[str],
     all_live: list[str],
+    env: "dict | None" = None,
 ) -> tuple[list[str], int]:
     """Candidate files for MERGE's pass-1 match probe, pruned with the
     table's OWN index sidecars instead of scanning every live file's key
@@ -3776,7 +3824,10 @@ def _merge_probe_candidates(
     (exactly the skipping-plan contract). Cost: one tiny agg over the
     (already checkpointed) source keys, plus driver-side index folds
     bounded by |files| x |key cols| — a merge whose source touches 0.1%
-    of the key space loads ~0.1% of the files, not all of them."""
+    of the key space loads ~0.1% of the files, not all of them.
+    ``env`` is that envelope when the caller already computed it
+    (MERGE's guard aggregate does), which drops the agg job;
+    ``n_src_keys`` is then required."""
     from data_management_service_run_etl_imputations_spark.sources.skipping import (
         _bloom_positions,
         _canon_stat,
@@ -3792,21 +3843,21 @@ def _merge_probe_candidates(
     # keys when the caller skipped deduplication) — computed even when
     # only the bloom sidecar exists, and the only job over the source
     # besides the exact scan
-    env_aggs = [F.count(F.lit(1)).alias("__n_src")]
-    for c in keys:
-        env_aggs += [
-            F.min(c).alias(f"__lo_{c}"),
-            F.max(c).alias(f"__hi_{c}"),
-            F.max(F.col(c).isNull().cast("int")).alias(f"__nl_{c}"),
-        ]
-    # collect()[0], not first(): take(1) on a multi-partition agg probes
-    # partitions incrementally (1, then 4, …) — up to 3 jobs for one
-    # row; collect() is always exactly one job here (round-12 merge
-    # commit-latency profile: the probe envelope was 3 of a no-op
-    # merge's 14 jobs)
-    env = src_keys.agg(*env_aggs).collect()[0].asDict()
-    if n_src_keys is None:
-        n_src_keys = int(env["__n_src"])
+    if env is None:
+        # collect()[0], not first(): take(1) on a multi-partition agg
+        # probes partitions incrementally (1, then 4, …) — up to 3 jobs
+        # for one row; collect() is always exactly one job here
+        # (round-12 merge commit-latency profile: the probe envelope
+        # was 3 of a no-op merge's 14 jobs)
+        env = (
+            src_keys.agg(
+                F.count(F.lit(1)).alias("__n_src"), *_key_envelope_aggs(keys)
+            )
+            .collect()[0]
+            .asDict()
+        )
+        if n_src_keys is None:
+            n_src_keys = int(env["__n_src"])
     if stats:
         bounds: dict[str, tuple] = {}
         for c in keys:
@@ -3960,6 +4011,7 @@ def _probe_matched_files(
     keys: list[str],
     scope_parts: dict,
     partition_col,
+    env: "dict | None" = None,
 ) -> tuple[set[str], set[str], int, int]:
     """Exact FILE-level match probe for copy-on-write writers: which of
     ``scope_parts``'s live files hold at least one row whose key tuple
@@ -3981,7 +4033,7 @@ def _probe_matched_files(
     if not all_live:
         return set(), set(), 0, 0, False
     cand, n_src_keys = _merge_probe_candidates(
-        spark, path, content, src_keys, n_src_keys, keys, all_live
+        spark, path, content, src_keys, n_src_keys, keys, all_live, env
     )
     if not cand:
         return set(), set(), len(all_live), 0, False
@@ -4080,6 +4132,7 @@ def _merge_insert_only(
     txn: "tuple[str, int] | None",
     auto_compact_min_files: int | None,
     insert_values: "dict[str, str] | None",
+    env: dict,
 ) -> dict[str, int]:
     """INSERT-ONLY MERGE fast path (round 12): ``WHEN NOT MATCHED THEN
     INSERT`` with no matched clauses cannot change ANY existing row, so
@@ -4108,7 +4161,7 @@ def _merge_insert_only(
         if all_live:
             cand, n_src_keys = _merge_probe_candidates(
                 spark, path, content, src_keys, n_src_keys, keys,
-                all_live,
+                all_live, env,
             )
             n_cand = len(cand)
             if cand:
@@ -4301,11 +4354,18 @@ def manifest_merge(
     # (count_distinct over a literal STRUCT groups null fields exactly
     # like dropDuplicates' null-safe equality, and the struct itself is
     # never NULL) — the two separate .count() jobs here were a fifth of
-    # a small merge's job budget (round-12 commit-latency profile)
-    guard = src.agg(
-        F.count(F.lit(1)).alias("__total"),
-        F.count_distinct(F.struct(*keys)).alias("__nk"),
-    ).collect()[0]
+    # a small merge's job budget (round-12 commit-latency profile) — and
+    # the probe's source-key envelope, whose min/max/has-null over the
+    # source equal those over its distinct keys
+    guard = (
+        src.agg(
+            F.count(F.lit(1)).alias("__total"),
+            F.count_distinct(F.struct(*keys)).alias("__nk"),
+            *_key_envelope_aggs(keys),
+        )
+        .collect()[0]
+        .asDict()
+    )
     n_src_keys = int(guard["__nk"])
     if n_src_keys < int(guard["__total"]):
         # two source rows matching one target row would duplicate it
@@ -4331,7 +4391,7 @@ def manifest_merge(
         return _merge_insert_only(
             spark, path, version, content, src, src_keys, n_src_keys,
             keys, partition_col, fmt, txn, auto_compact_min_files,
-            insert_values,
+            insert_values, guard,
         )
 
     # pass 1 (column-pruned, INDEX-PRUNED, FILE-exact): which FILES hold
@@ -4342,7 +4402,7 @@ def manifest_merge(
     matched_rels, match_parts, n_live_files, n_probe_files, exact_ran = (
         _probe_matched_files(
             spark, path, content, src_keys, n_src_keys, keys, parts,
-            partition_col,
+            partition_col, guard,
         )
         if parts
         else (set(), set(), 0, 0, False)
