@@ -168,8 +168,8 @@ def load_events_ts_between(
     ``lo``/``hi`` are UTC ``datetime`` objects or ISO strings
     (microsecond resolution; naive values are treated as UTC), applied
     as the half-open event-time interval ``[lo, hi)`` — exactly
-    equivalent to filtering the normalized µs column because both
-    bounds are µs-aligned. Encodings where ``ts`` is already a real
+    equivalent to filtering the normalized µs column, pre-epoch values
+    included. Encodings where ``ts`` is already a real
     timestamp column filter on the raw column pre-cast instead (plain
     comparisons on a stored column push down natively)."""
     import datetime
@@ -191,10 +191,13 @@ def load_events_ts_between(
     actual = dict(df.dtypes)
     if actual.get("ts") == "bigint":
         def ns(t) -> int:
+            # smallest raw ns whose `div 1000` (truncation toward zero)
+            # is >= the µs bound: pre-epoch values truncate UP, so
+            # (L-1)*1000+1 .. L*1000 all load as L when L <= 0
             t = _utc(t)
             epoch = datetime.datetime(1970, 1, 1, tzinfo=datetime.timezone.utc)
             micros = (t - epoch) // datetime.timedelta(microseconds=1)
-            return micros * 1000
+            return micros * 1000 if micros > 0 else (micros - 1) * 1000 + 1
 
         if lo is not None:
             df = df.filter(F.col("ts") >= F.lit(ns(lo)))

@@ -645,7 +645,23 @@ class ManifestTableDataSource(DataSource):
         return ManifestBatchReader(schema, self.options)
 
     def writer(self, schema, overwrite: bool):
-        return ManifestAppendWriter(schema, self.options, overwrite)
+        w = ManifestAppendWriter(schema, self.options, overwrite)
+        # the executors key rows in Python (sinks._part_key), which
+        # renders exactly as CAST(col AS STRING) only for these types
+        type_of = {f.name: f.dataType.simpleString() for f in schema.fields}
+        bad = {c: type_of[c] for c in w.pcols if type_of[c] not in (
+            "string", "boolean", "date", "tinyint", "smallint", "int",
+            "bigint",
+        )}
+        if bad:
+            raise ValueError(
+                f"df.write.format('manifest') cannot partition on {bad}: "
+                "it keys string, integer, date and boolean columns only; "
+                "write through manifest_sql (INSERT / CREATE TABLE … AS) "
+                "or the Python API (manifest_insert, "
+                "manifest_upsert_partitioned, manifest_replace_table)"
+            )
+        return w
 
 
 # view name (lowercased) -> (original view name, table root path,
@@ -1256,85 +1272,47 @@ class ManifestAppendWriter(DataSourceArrowWriter):
 
 # --- JVM-side staged append (write-half twin of _resolved_table_schema) ----
 #
-# ``df.write.format("manifest").save()`` pays two Python boundaries per
-# statement: a create-data-source worker at plan time just to construct
-# the writer, and per-partition Python write tasks that re-serialize
-# every row through Arrow into pyarrow.parquet. Neither is needed when
-# the caller is the engine's own SQL dispatcher: it constructs
-# ``ManifestAppendWriter`` DRIVER-SIDE (same validation, same stage
-# layout, same commit-conflict loop, same history record) and stages
-# the rows with Spark's native parquet writer — the identical staging
-# mechanism every Python engine (``sinks._stage_and_commit``) already
-# uses on the same tables. The public DataSource writer path is
-# untouched for direct ``df.write.format("manifest")`` users.
-
-# Partition-column types whose manifest key is PROVABLY identical under
-# the DataSource writer's Python-side str(value) and the staged-dir
-# convention's CAST(col AS STRING) + dir-name unescape: ints/strings/
-# dates format identically in both engines (and NULL maps to
-# NULL_PARTITION_KEY on both). Types with cross-engine formatting
-# drift (boolean 'True' vs 'true', float repr, timestamp tz) keep the
-# Python writer so keys stay byte-identical with prior commits.
-_FAST_KEY_TYPES = frozenset(
-    ("string", "int", "bigint", "smallint", "tinyint", "date")
-)
+# The engine's SQL INSERT / CTAS path never goes through the DataSource
+# writer: it constructs ``ManifestAppendWriter`` DRIVER-SIDE (same
+# validation, same commit-conflict loop, same history record) and stages
+# the rows through ``sinks._write_stage`` — the one staging helper every
+# manifest write uses — so its keys follow the one partition-key rule
+# (``CAST(col AS STRING)``, NULL → NULL_PARTITION_KEY) for every column
+# type. ``df.write.format("manifest")`` stays the public shell over the
+# same writer.
 
 
-def _fast_staged_append(df, path: str, options: dict, overwrite: bool) -> bool:
+def _fast_staged_append(df, path: str, options: dict, overwrite: bool) -> None:
     """Stage ``df`` under the writer's immutable ``data/<uuid>`` prefix
-    with the JVM parquet writer, then publish through
-    ``ManifestAppendWriter.commit`` in-process. Returns ``False`` when a
-    partition-column type is outside the key-identical set (the caller
-    falls back to the DataSource writer); validation errors raise
+    with ``sinks._write_stage``, then publish through
+    ``ManifestAppendWriter.commit`` in-process; validation errors raise
     exactly as the writer's plan-time construction would."""
-    import os
-
-    from data_management_service_run_etl_imputations_spark.session import (
-        ensure_runtime_confs,
-    )
     from data_management_service_run_etl_imputations_spark.sources.sinks import (
-        _part_copy_cols,
-        _staged_partition_dirs,
         _with_part_copies,
+        _write_stage,
     )
 
     w = ManifestAppendWriter(df.schema, options, overwrite)
-    type_of = {f.name: f.dataType.simpleString() for f in df.schema.fields}
-    if any(type_of.get(c) not in _FAST_KEY_TYPES for c in w.pcols):
-        return False
-    # an injected vanilla session would otherwise write INT96 timestamps
-    ensure_runtime_confs(df.sparkSession)
-    stage_abs = os.path.join(path, *w.stage.split("/"))
+    w.stage, written = _write_stage(
+        _with_part_copies(df, w.pcols), path, w.pcols, "parquet"
+    )
+    # 0-row files (schema-only artifacts of an empty unpartitioned write)
+    # are dropped so an empty INSERT stays a no-op — no files, no commit,
+    # no version
+    entries = [
+        (k, rel, size, rows)
+        for k, (_d, file_entries) in written.items()
+        for rel, size, rows in file_entries
+        if rows != 0
+    ]
+    if not entries:
+        w.abort([])
+        return
     try:
-        if w.pcols:
-            (
-                _with_part_copies(df, w.pcols)
-                .write.partitionBy(*_part_copy_cols(w.pcols))
-                .parquet(stage_abs)
-            )
-        else:
-            df.write.parquet(stage_abs)
-        written = _staged_partition_dirs(
-            path, w.stage, "parquet", len(w.pcols)
-        )
-        # 0-row files (schema-only artifacts of an empty unpartitioned
-        # write) are dropped so an empty INSERT stays the same no-op —
-        # no files, no commit, no version — as the Python writer, whose
-        # tasks skip empty batches
-        entries = [
-            (k, rel, size, rows)
-            for k, (_d, file_entries) in written.items()
-            for rel, size, rows in file_entries
-            if rows != 0
-        ]
-        if not entries:
-            w.abort([])
-            return True
         w.commit([_AppendMessage(entries=entries)])
     except BaseException:
         w.abort([])
         raise
-    return True
 
 
 # --- SQL DML dispatcher ------------------------------------------------
@@ -1780,7 +1758,7 @@ def _dispatch_util_statement(spark, stmt: str):
         return {"statement": "analyze", **r}
 
     # CREATE TABLE <name> LOCATION '<path>' [PARTITIONED BY (cols)]
-    # AS SELECT … — CTAS through the Arrow writer, then registered as a
+    # AS SELECT … — CTAS through the staged append, then registered as a
     # SQL view (follow_head by default: a freshly created table is
     # usually about to be loaded further). PARTITIONED BY is OPTIONAL:
     # without it the table is created UNPARTITIONED (one synthetic
@@ -1818,18 +1796,7 @@ def _dispatch_util_statement(spark, stmt: str):
             opts["partition_cols"] = ",".join(pcols)
         else:
             opts["unpartitioned"] = "true"
-        if not _fast_staged_append(src, path, opts, overwrite=False):
-            spark.dataSource.register(ManifestTableDataSource)
-            writer = (
-                src.write.format("manifest")
-                .mode("append")
-                .option("path", path)
-            )
-            if pcols:
-                writer = writer.option("partition_cols", ",".join(pcols))
-            else:
-                writer = writer.option("unpartitioned", "true")
-            writer.save()
+        _fast_staged_append(src, path, opts, overwrite=False)
         manifest_sql_register(spark, view_name, path, follow_head=True)
         from data_management_service_run_etl_imputations_spark.sources.sinks import (
             manifest_history,
@@ -2864,11 +2831,11 @@ def manifest_sql(spark, statement: str, mode: str | None = None):
       conjunction of same-named equi-comparisons — they become the
       merge keys; a column-list INSERT must name the partition columns
       and fills unlisted columns with NULL)
-    - ``INSERT INTO v [(c1, …)] SELECT …|VALUES …`` →
-      ``df.write.format("manifest").mode("append")`` with the source
-      aligned to the CURRENT table schema (positional without a column
-      list, ANSI-style; listed columns map by name, unlisted ones fill
-      NULL — except partition columns, which must be listed);
+    - ``INSERT INTO v [(c1, …)] SELECT …|VALUES …`` → a staged append
+      (:func:`_fast_staged_append`) with the source aligned to the
+      CURRENT table schema (positional without a column list,
+      ANSI-style; listed columns map by name, unlisted ones fill NULL —
+      except partition columns, which must be listed);
       ``INSERT OVERWRITE v SELECT …`` → the writer's dynamic partition
       overwrite (replaces exactly the partitions present in the data)
     - utility statements (Delta parity): ``DESCRIBE HISTORY v`` (a
@@ -2876,7 +2843,7 @@ def manifest_sql(spark, statement: str, mode: str | None = None):
       ``VACUUM v [RETAIN n VERSIONS | RETAIN n HOURS]``,
       ``ANALYZE TABLE v COMPUTE STATISTICS FOR COLUMNS c1, …``,
       ``CREATE TABLE name LOCATION 'path' [PARTITIONED BY (cols)] AS
-      SELECT …`` (CTAS through the Arrow writer, registered
+      SELECT …`` (CTAS through the staged append, registered
       ``follow_head``; PARTITIONED BY optional — absent creates an
       UNPARTITIONED table), ``CREATE TABLE name (col TYPE, …) LOCATION
       'path' [PARTITIONED BY (cols)]`` (empty metadata-only creation),
@@ -3145,8 +3112,8 @@ def manifest_sql(spark, statement: str, mode: str | None = None):
         # columns, and non-parquet tables — those route through the
         # full-featured Python engines (manifest_insert /
         # manifest_replace_partitions) so SQL INSERT works on EVERY
-        # table state SQL DDL can produce; plain tables keep the
-        # DataSource path (same plan the df.write API exercises)
+        # table state SQL DDL can produce; plain tables take the
+        # staged append
         featured = bool(
             t_content.get("constraints")
             or t_content.get("col_ids")
@@ -3155,6 +3122,7 @@ def manifest_sql(spark, statement: str, mode: str | None = None):
         )
         if featured:
             from data_management_service_run_etl_imputations_spark.sources.sinks import (
+                _key_cols,
                 manifest_insert,
                 manifest_replace_partitions,
             )
@@ -3180,7 +3148,7 @@ def manifest_sql(spark, statement: str, mode: str | None = None):
                 staged_src = staged_src.localCheckpoint()
                 values = [
                     tuple(r)
-                    for r in staged_src.select(*pcols_t)
+                    for r in staged_src.select(*_key_cols(pcols_t))
                     .distinct()
                     .collect()
                 ]
@@ -3207,15 +3175,7 @@ def manifest_sql(spark, statement: str, mode: str | None = None):
         opts = {"path": path}
         if overwrite:
             opts["partitionOverwriteMode"] = "dynamic"
-        if not _fast_staged_append(aligned, path, opts, overwrite=overwrite):
-            writer = aligned.write.format("manifest").option("path", path)
-            if overwrite:
-                writer = writer.mode("overwrite").option(
-                    "partitionOverwriteMode", "dynamic"
-                )
-            else:
-                writer = writer.mode("append")
-            writer.save()
+        _fast_staged_append(aligned, path, opts, overwrite=overwrite)
         from data_management_service_run_etl_imputations_spark.sources.sinks import (
             manifest_history,
         )

@@ -1679,58 +1679,53 @@ def _stage_of(rel_dir: str) -> str:
     return rel_dir.split("/__p")[0]
 
 
-# Characters Spark's dynamic-partition writer percent-escapes in partition
-# directory names (ExternalCatalogUtils.escapePathName): constructing
-# ``__p={value}`` by hand for such a value names a directory the write
-# never created — the listing comes back empty and the partition would be
-# silently dropped as "emptied". All staged-dir resolution therefore goes
-# through _staged_partition_dirs (list what Spark ACTUALLY wrote and
-# unescape), never through name construction.
-_ESCAPED_CHARS = set('"#%\'*/:=?\\\x7f{[]^')
-
-
-def _unescape_part_dir(name: str) -> str:
-    """Inverse of Spark's escapePathName: decode ``%XX`` sequences in a
-    partition directory component back to the raw partition value."""
-    out: list[str] = []
-    i = 0
-    while i < len(name):
-        c = name[i]
-        if c == "%" and i + 3 <= len(name):
-            try:
-                out.append(chr(int(name[i + 1 : i + 3], 16)))
-                i += 3
-                continue
-            except ValueError:
-                pass
-        out.append(c)
-        i += 1
-    return "".join(out)
-
+# --- partition keys ----------------------------------------------------------
+#
+# ONE rule defines a manifest partition key, for every writer:
+#   - a non-null value's key is Spark's ``CAST(col AS STRING)`` under the
+#     session's pinned UTC zone ('' stays '', bool is 'true'/'false', a
+#     timestamp drops trailing fractional zeros, a double reads '1.0E20');
+#   - NULL is NULL_PARTITION_KEY;
+#   - a multi-column key is the driver-built canonical JSON array of the
+#     per-column keys, ``["2024-01-01","web"]``; an unpartitioned table
+#     keeps its whole data set under the single key ``"[]"``.
+# Keys are computed by Spark, never by str() over collected values
+# (_touched_keys). Staging (_write_stage) partitions on COPY columns
+# (``__p`` single, ``__pN`` multi; _with_part_copies is the only place a
+# copy is built): NULL for NULL, the key itself otherwise, except that
+# ``''`` and a key starting with _KEY_ESCAPE gain one leading
+# _KEY_ESCAPE — so ``''`` can never land in Spark's NULL directory while
+# every other directory keeps its plain ``__p=<key>`` name.
+# _staged_partition_dirs is the only decoder of what Spark wrote. The real
+# columns stay in the data files — readers resolve files through the
+# manifest's key → file lists and never parse directory names.
 
 # Spark's sentinel directory for a NULL dynamic-partition value; the
-# manifest uses the same string as the partition KEY so null-partitioned
-# rows round-trip (str(None) == "None" would name a dir the writer never
-# created).
+# manifest uses the same string as the NULL partition KEY.
 NULL_PARTITION_KEY = "__HIVE_DEFAULT_PARTITION__"
+
+# Escape character of the staged copy values (see above); Spark leaves
+# it unescaped in directory names and URIs leave it unencoded.
+_KEY_ESCAPE = "~"
 
 
 def _part_key(value) -> str:
-    """Manifest partition key for a partition-column value."""
-    return NULL_PARTITION_KEY if value is None else str(value)
+    """Manifest key of one Python partition value (caller-supplied
+    ``partition_values``, the DataSource writer's rows), rendered as
+    ``CAST(value AS STRING)`` renders NULL, bool, integers, strings,
+    dates and timestamps."""
+    import datetime
 
-
-# --- multi-column partitioning ---------------------------------------------
-#
-# A table may partition on SEVERAL columns (the real 100 TB shape:
-# (date, source) at least). Layout: Spark's native nested dynamic
-# partitioning — staged dirs are ``__p0=<v0>/__p1=<v1>/...`` (copies of
-# the partition columns, escaped by Spark) — and the manifest partition
-# KEY is the canonical JSON array of the per-component keys,
-# ``["2024-01-01","web"]``, produced ONLY driver-side (never by a Spark
-# expression, so no cross-engine JSON-formatting drift). Single-column
-# tables keep the original ``__p=<v>`` dirs and raw-string keys — fully
-# back-compatible; multi-partitioned tables stamp reader protocol 2.
+    if value is None:
+        return NULL_PARTITION_KEY
+    if isinstance(value, bool):
+        return "true" if value else "false"
+    if isinstance(value, datetime.datetime):
+        # naive datetimes are process-local, as PySpark converts them
+        t = value.astimezone(datetime.timezone.utc).replace(tzinfo=None)
+        frac = f".{t.microsecond:06d}".rstrip("0") if t.microsecond else ""
+        return t.isoformat(" ", "seconds") + frac
+    return str(value)
 
 
 def _pcols(partition_col) -> list[str]:
@@ -1795,26 +1790,70 @@ def _part_copy_cols(pcols: list[str]) -> list[str]:
     return [f"__p{i}" for i in range(len(pcols))]
 
 
+def _key_cols(pcols: list[str], names: "list[str] | None" = None) -> list:
+    """The key rule as Spark expressions: each partition column cast to
+    string (NULL stays NULL), aliased to ``names`` (default: itself)."""
+    return [
+        F.col(c).cast("string").alias(n)
+        for c, n in zip(pcols, names or pcols)
+    ]
+
+
+def _touched_keys(df: DataFrame, pcols: list[str]) -> list[str]:
+    """Sorted distinct manifest keys of ``df``'s rows, computed by Spark
+    under the pinned session zone (one collect job)."""
+    from data_management_service_run_etl_imputations_spark.session import (
+        ensure_runtime_confs,
+    )
+
+    ensure_runtime_confs(df.sparkSession)
+    rows = df.select(*_key_cols(pcols)).distinct().collect()
+    return sorted(_part_key_tuple(tuple(r), pcols) for r in rows)
+
+
+def _copy_value(key: str) -> "str | None":
+    """The staged copy value of one key component (the Python twin of
+    _with_part_copies' expression)."""
+    if key == NULL_PARTITION_KEY:
+        return None
+    if key == "" or key.startswith(_KEY_ESCAPE):
+        return _KEY_ESCAPE + key
+    return key
+
+
 def _with_part_copies(df: DataFrame, pcols: list[str]) -> DataFrame:
+    """``df`` plus its staged copy columns (the key cast under the pinned
+    session zone, escaped as _copy_value escapes it)."""
+    from data_management_service_run_etl_imputations_spark.session import (
+        ensure_runtime_confs,
+    )
+
+    # an injected vanilla session would otherwise cast timestamps in its
+    # own zone and write INT96 timestamps (no parquet column statistics)
+    ensure_runtime_confs(df.sparkSession)
+    copies = {}
     for name, c in zip(_part_copy_cols(pcols), pcols):
-        df = df.withColumn(name, F.col(c).cast("string"))
-    return df
+        key = F.col(c).cast("string")
+        copies[name] = F.when(
+            (key == "") | key.startswith(_KEY_ESCAPE),
+            F.concat(F.lit(_KEY_ESCAPE), key),
+        ).otherwise(key)
+    return df.withColumns(copies)
 
 
 def _staged_partition_dirs(
     path: str, stage: str, fmt: str, n_levels: int = 1
 ) -> dict[str, tuple[str, list]]:
     """The partition directories Spark ACTUALLY wrote under a staged
-    ``data/<uuid>`` prefix: ``{partition_key: (rel_dir, file_entries)}``
-    keyed by the UNESCAPED partition value (single level) or the
-    canonical JSON array of unescaped components (``n_levels > 1``).
-    This is the data-authoritative presence test for a staged write — a
-    partition absent here was truly written zero rows (Spark creates the
-    escaped dirs only when a task emitted rows for them), whereas
-    constructing dir names from raw values mistakes any escaped
-    character for an emptied partition."""
+    ``data/<uuid>`` prefix: ``{partition_key: (rel_dir, file_entries)}``,
+    decoding each copy-column directory back to its key (Spark's NULL
+    directory → NULL_PARTITION_KEY, else unescape and strip one leading
+    _KEY_ESCAPE). This is the data-authoritative presence test for a
+    staged write — a partition absent here was truly written zero
+    rows."""
     import json
     import os
+    from urllib.parse import unquote
 
     out: dict[str, tuple[str, list]] = {}
     root = os.path.join(path, *stage.split("/"))
@@ -1829,12 +1868,19 @@ def _staged_partition_dirs(
             out["[]"] = (stage, entries)
         return out
 
+    def decode(name: str) -> str:
+        if name == NULL_PARTITION_KEY:
+            return NULL_PARTITION_KEY
+        # unquote inverts Spark's escapePathName (%XX of ASCII characters)
+        raw = unquote(name)
+        return raw[1:] if raw.startswith(_KEY_ESCAPE) else raw
+
     def walk(d: str, rel: str, comps: list[str], level: int) -> None:
         prefix = "__p=" if n_levels == 1 else f"__p{level}="
         for name in sorted(os.listdir(d)):
             if not name.startswith(prefix):
                 continue
-            comp = _unescape_part_dir(name[len(prefix) :])
+            comp = decode(name[len(prefix) :])
             sub_rel = f"{rel}/{name}"
             if level + 1 == n_levels:
                 key = (
@@ -1850,6 +1896,37 @@ def _staged_partition_dirs(
 
     walk(root, stage, [], 0)
     return out
+
+
+def _write_stage(
+    staged: DataFrame,
+    path: str,
+    pcols: list[str],
+    fmt: str,
+    expect=None,
+) -> tuple[str, dict[str, tuple[str, list]]]:
+    """The one staging write of every manifest commit. ``staged``
+    carries its copy columns (_with_part_copies) and the caller's own
+    layout (repartition, sort, checkpoint); it is written under a fresh
+    immutable ``data/<uuid>`` prefix partitioned on the copies. Returns
+    ``(stage, _staged_partition_dirs(...))``; a key outside ``expect``
+    raises, since it means the caller's keys disagree with the staged
+    data."""
+    import uuid
+
+    stage = f"data/{uuid.uuid4().hex[:12]}"
+    staged.write.mode("overwrite").partitionBy(*_part_copy_cols(pcols)).format(
+        fmt
+    ).save(f"{path}/{stage}")
+    written = _staged_partition_dirs(path, stage, fmt, len(pcols))
+    stray = set(written) - set(expect) if expect is not None else ()
+    if stray:
+        raise RuntimeError(
+            f"write at {path} staged unexpected partition dirs "
+            f"{sorted(stray)[:3]} outside the expected set — "
+            "partition-key mapping bug"
+        )
+    return stage, written
 
 
 def _live_dirs(content: dict) -> set[str]:
@@ -1944,7 +2021,11 @@ def _apply_deletes(
                     == F.col(f"__pk_{i}_name")
                 )
                 & (F.col(_POS_IDX) == F.col(f"__pk_{i}_pos"))
-                & F.col(_POS_FILE).endswith(F.col(f"__pk_{i}_rel"))
+                # residual: decoded only for (name, pos)-matched pairs;
+                # a literal '+' must survive url_decode's form decoding
+                & F.url_decode(
+                    F.replace(F.col(_POS_FILE), F.lit("+"), F.lit("%2B"))
+                ).endswith(F.col(f"__pk_{i}_rel"))
             )
             out = out.join(pk, cond, "left_anti")
             continue
@@ -2270,8 +2351,8 @@ def _part_eq_matcher(col_type: "str | None", val):
     returns a predicate over manifest partition-component keys, or
     ``None`` when the literal/column pairing is not faithful enough to
     prune (the caller must keep every partition). The partition key is
-    ``str(python_value)`` stamped at commit time, so a bare string
-    compare against ``str(literal)`` silently drops every partition
+    the value's ``CAST(… AS STRING)`` stamped at commit time, so a bare
+    string compare against ``str(literal)`` silently drops every partition
     whenever Spark's own coercion would still match — ``c = 5.0`` on an
     int column ('5.0' vs '5'), ``c = 5`` on a double column ('5' vs
     '5.0'), ``c = 5`` on a string column holding '05'. Same doctrine as
@@ -2610,6 +2691,18 @@ def _uris_to_rels(uris: list[str], rels: list[str], path: str) -> list[str]:
     return sorted(_uris_to_rels_map(uris, rels, path).values())
 
 
+def _scan_rel(uri: str, root_abs: str) -> str:
+    """Table-relative path of a scanned file's URI (``input_file_name``,
+    ``_metadata.file_path``). The URI percent-encodes the staged
+    directory names (``%`` of Spark's own escaping, spaces), so it is
+    decoded before the table root is cut off."""
+    from urllib.parse import unquote
+
+    raw = unquote(uri)
+    idx = raw.find(root_abs)
+    return raw[idx + len(root_abs) + 1 :] if idx >= 0 else raw
+
+
 def _uris_to_rels_map(
     uris: list[str], rels: list[str], path: str
 ) -> dict[str, str]:
@@ -2621,14 +2714,17 @@ def _uris_to_rels_map(
     by file NAME (unique in practice — Spark task UUIDs), the full-path
     suffix check confirms; a wide delete over a 100k-file table must not
     pay a quadratic driver loop here."""
+    from urllib.parse import unquote
+
     by_name: dict[str, list[str]] = {}
     for r in rels:
         by_name.setdefault(r.rsplit("/", 1)[-1], []).append(r)
     out: dict[str, str] = {}
     for u in uris:
-        name = u.rsplit("/", 1)[-1]
+        raw = unquote(u)
+        name = raw.rsplit("/", 1)[-1]
         hit = next(
-            (rel for rel in by_name.get(name, []) if u.endswith(f"/{rel}")),
+            (rel for rel in by_name.get(name, []) if raw.endswith(f"/{rel}")),
             None,
         )
         if hit is None:
@@ -2848,10 +2944,7 @@ def manifest_update_where(
 
     if mode == "cow":
         updated_preview = transformed(matched)
-        post_keys = {
-            _part_key_tuple(tuple(r), pcols)
-            for r in updated_preview.select(*pcols).distinct().collect()
-        }
+        post_keys = set(_touched_keys(updated_preview, pcols))
         matched_set = set(matched_rels)
         file_keys = {
             k
@@ -2945,10 +3038,7 @@ def manifest_update_where(
         "stages": sorted({_stage_of(r) for r in matched_rels}),
     }
     updated = transformed(matched)
-    touched_keys = sorted(
-        _part_key_tuple(tuple(r), pcols)
-        for r in updated.select(*pcols).distinct().collect()
-    )
+    touched_keys = _touched_keys(updated, pcols)
     # nothing is rewritten: every live file of the touched partitions
     # carries by reference next to the freshly staged updated rows
     carry_src = (
@@ -3123,8 +3213,6 @@ def manifest_upsert_partitioned(
     steady small-batch ingestion bounds its own fragmentation without a
     separate maintenance job. Returns {"updated": n, "inserted": n}.
     """
-    import uuid
-
     spark = incoming.sparkSession
     # LAZY PLAN — the hot path gets the DELETE/UPDATE discipline: an
     # upsert touches only the incoming batch's partitions, so when the
@@ -3161,8 +3249,7 @@ def manifest_upsert_partitioned(
     parts: dict = dict(content.get("partitions", {}))
 
     pcols = _pcols(partition_col)
-    touched = incoming.select(*pcols).distinct().collect()
-    touched_keys = [_part_key_tuple(tuple(r), pcols) for r in touched]
+    touched_keys = _touched_keys(incoming, pcols)
     if files_plan is not None:
         # hydrate the TOUCHED partitions' file lists only — everything
         # downstream (probe, split, stage) reads content["files"] for
@@ -3286,8 +3373,8 @@ def manifest_insert(
     generated partition columns, and writes column-mapped tables
     (``col_ids`` — ids for evolved names are assigned in the commit
     build). The SQL dispatcher routes ``INSERT INTO`` here whenever the
-    table carries one of those features; plain tables keep the
-    DataSource path.
+    table carries one of those features; plain tables take the staged
+    append.
 
     Lazy planning mirrors the upsert: on a checkpoint-anchored chain the
     plan hydrates only the incoming batch's partitions and the commit
@@ -3332,8 +3419,7 @@ def manifest_insert(
     pcols = _partition_cols(content)
     partition_col = pcols if len(pcols) != 1 else pcols[0]
 
-    touched = incoming.select(*pcols).distinct().collect()
-    touched_keys = [_part_key_tuple(tuple(r), pcols) for r in touched]
+    touched_keys = _touched_keys(incoming, pcols)
     if files_plan is not None:
         content = {
             **content,
@@ -3420,21 +3506,8 @@ def _stage_and_commit(
     CALLER's gate (it must fall back to the eager path when any is
     due), and fast-forward must be off (a head compare would hydrate
     what the plan avoided)."""
-    import uuid
-
-    from data_management_service_run_etl_imputations_spark.session import (
-        ensure_runtime_confs,
-    )
-
-    # an injected vanilla session would otherwise write INT96 timestamps
-    # (no parquet column statistics -> footer ANALYZE degrades to a scan)
-    ensure_runtime_confs(merged.sparkSession)
-    stage = f"data/{uuid.uuid4().hex[:12]}"
     out_schema = merged.schema.simpleString()
     out_schema_json = merged.schema.json()
-    # partitionBy on a COPY of the partition column: the staging dir gets
-    # one subdir per value, while the real column stays in the data files
-    # (readers never depend on directory-name parsing).
     constraints = content.get("constraints") or {}
     obs = None
     if constraints:
@@ -3458,19 +3531,7 @@ def _stage_and_commit(
         staged = merged.repartitionByRange(
             nparts, *copies, *sort_cols
         ).sortWithinPartitions(*copies, *sort_cols)
-    staged.write.mode("overwrite").partitionBy(*copies).format(fmt).save(
-        f"{path}/{stage}"
-    )
-    # resolve what Spark ACTUALLY wrote (escaped dir names decoded back
-    # to partition values) — the data-authoritative presence test: a
-    # touched key absent here was written zero rows, never mis-named
-    written = _staged_partition_dirs(path, stage, fmt, len(pcols))
-    stray = set(written) - set(touched_keys)
-    if stray:
-        raise RuntimeError(
-            f"{op} at {path} staged unexpected partition dirs {sorted(stray)[:3]} "
-            f"outside the touched set — partition-key mapping bug"
-        )
+    _, written = _write_stage(staged, path, pcols, fmt, expect=touched_keys)
     staged_files = {
         k: written[k][1] if k in written else [] for k in touched_keys
     }
@@ -4061,7 +4122,7 @@ def _probe_matched_files(
     pv_names = [f"__pv{i}" for i in range(len(pcols))]
     probe = _load_table_files(spark, path, content, cand).select(
         F.input_file_name().alias("__file"),
-        *[F.col(c).alias(n) for c, n in zip(pcols, pv_names)],
+        *_key_cols(pcols, pv_names),
         *keys,
     )
     cond = None
@@ -4078,11 +4139,7 @@ def _probe_matched_files(
     matched_rels: set[str] = set()
     matched_parts: set[str] = set()
     for r in rows:
-        uri = r["__file"]
-        idx = uri.find(root_abs)
-        matched_rels.add(
-            uri[idx + len(root_abs) + 1 :] if idx >= 0 else uri
-        )
+        matched_rels.add(_scan_rel(r["__file"], root_abs))
         matched_parts.add(
             _part_key_tuple([r[n] for n in pv_names], pcols)
         )
@@ -4208,7 +4265,7 @@ def _merge_insert_only(
     ins = anti.select(*cols).localCheckpoint()
     pcols = _pcols(partition_col)
     # one job answers both "anything to insert?" and "which partitions"
-    pc_rows = ins.groupBy(*pcols).agg(
+    pc_rows = ins.groupBy(*_key_cols(pcols)).agg(
         F.count(F.lit(1)).alias("__n")
     ).collect()
     n_ins = int(sum(r["__n"] for r in pc_rows))
@@ -4417,10 +4474,7 @@ def manifest_merge(
             if insert_values is not None
             else src.select(*pcols)
         )
-        insert_parts = {
-            _part_key_tuple(tuple(r), pcols)
-            for r in part_src.distinct().collect()
-        }
+        insert_parts = set(_touched_keys(part_src, pcols))
     else:
         insert_parts = set()
     touched_keys = sorted(match_parts | insert_parts)
@@ -4674,8 +4728,6 @@ def manifest_compact(
 
     Returns {"partitions": n, "files_before": n, "files_after": n}.
     """
-    import uuid
-
     version, content = _latest_manifest(path)
     if version == 0:
         return {"partitions": 0, "files_before": 0, "files_after": 0}
@@ -4729,7 +4781,6 @@ def manifest_compact(
         ),
         content,
     )
-    stage = f"data/{uuid.uuid4().hex[:12]}"
     copies = _part_copy_cols(pcols)
     data_cols = list(df.columns)
     with_copies = _with_part_copies(df, pcols)
@@ -4772,7 +4823,7 @@ def manifest_compact(
 
         def _comps(k: str) -> list:
             raw = [k] if len(pcols) == 1 else _fan_json.loads(k)
-            return [None if c == NULL_PARTITION_KEY else c for c in raw]
+            return [_copy_value(c) for c in raw]
 
         fan_rows = []
         for k in selected:
@@ -4803,21 +4854,11 @@ def manifest_compact(
             )
             .drop("__salt", "__fan", *f_names)
         )
-    staged.write.mode("overwrite").partitionBy(*copies).format(fmt).save(
-        f"{path}/{stage}"
-    )
+    # a selected partition absent from what was written had every row
+    # deleted by the materialized MoR deletes
+    _, written = _write_stage(staged, path, pcols, fmt, expect=selected)
     dir_schemas: dict = dict(content.get("dir_schemas", {}))
     new_schema = staged.drop(*copies).schema.simpleString()
-    # resolve the dirs Spark ACTUALLY wrote (escaped names decoded) — a
-    # partition absent here was written zero rows, never merely named
-    # differently than the hand-built ``__p={k}`` guess
-    written = _staged_partition_dirs(path, stage, fmt, len(pcols))
-    stray = set(written) - set(selected)
-    if stray:
-        raise RuntimeError(
-            f"compact at {path} staged unexpected partition dirs "
-            f"{sorted(stray)[:3]} — partition-key mapping bug"
-        )
     # every old live file of the selected partitions is being replaced —
     # capture the set BEFORE repointing so their index entries drop
     old_rels = {e[0] for k in selected for e in files.get(k, [])}
@@ -5101,7 +5142,7 @@ def manifest_refresh_aggregate(
     ref_pcols = _pcols(partition_col)
     touched = [
         r[0] if len(ref_pcols) == 1 else tuple(r)
-        for r in delta.select(*ref_pcols).distinct().collect()
+        for r in delta.select(*_key_cols(ref_pcols)).distinct().collect()
     ]
     _, agg_content = _latest_manifest(agg_path)
     if agg_content.get("partitions"):
@@ -5157,8 +5198,6 @@ def manifest_replace_partitions(
     returns zero counts with ``"skipped": True``.
     Returns {"partitions_written": n, "partitions_dropped": n}.
     """
-    import uuid
-
     spark = df.sparkSession
     version, content = _latest_manifest(path)
     if txn is not None and _txn_applied(content, txn):
@@ -5175,7 +5214,6 @@ def manifest_replace_partitions(
     if gen:
         df = _apply_generated(df, gen)
 
-    stage = f"data/{uuid.uuid4().hex[:12]}"
     out_schema = df.schema.simpleString()
     out_schema_json = df.schema.json()
     constraints = content.get("constraints") or {}
@@ -5185,23 +5223,10 @@ def manifest_replace_partitions(
     staged = _with_part_copies(df, pcols).localCheckpoint()
     if obs is not None:
         _check_observed_constraints(obs, path, "replace-partitions")
-    copies = _part_copy_cols(pcols)
-    staged.write.mode("overwrite").partitionBy(*copies).format(fmt).save(
-        f"{path}/{stage}"
-    )
-    staged_dirs = _staged_partition_dirs(path, stage, fmt, len(pcols))
-    stray = set(staged_dirs) - set(wanted)
-    if stray:
-        # same guard as _stage_and_commit: the staged data landing in a
-        # partition the caller did not list means the caller computed
-        # partition_values from a DIFFERENT evaluation or state than
-        # the staged frame (e.g. before generated-column application) —
-        # the old silent behavior dropped those rows on the floor
-        raise RuntimeError(
-            f"replace-partitions at {path} staged unexpected partition "
-            f"dirs {sorted(stray)[:3]} outside the listed set — "
-            "partition_values disagree with the staged data"
-        )
+    # staged data outside the listed partitions means partition_values
+    # came from a different evaluation than the staged frame (e.g. before
+    # generated-column application): refused, never dropped silently
+    _, staged_dirs = _write_stage(staged, path, pcols, fmt, expect=wanted)
     written = dropped = 0
     dir_schemas: dict = dict(content.get("dir_schemas", {}))
     for k in wanted:
@@ -6510,8 +6535,6 @@ def manifest_replace_table(
     first; the single manifest commit that references it IS the swap —
     readers of the old head never see a partial state, and a concurrent
     committer loses with a loud :class:`CommitConflict`."""
-    import uuid
-
     version, content = _latest_manifest(path)
     pcols = _pcols(partition_cols) if partition_cols else []
     missing = [p for p in pcols if p not in df.columns]
@@ -6520,18 +6543,12 @@ def manifest_replace_table(
             f"PARTITIONED BY column(s) {missing} are not produced by the "
             f"replacement data (have {df.columns})"
         )
-    stage = f"data/{uuid.uuid4().hex[:12]}"
     out_schema = df.schema.simpleString()
     out_schema_json = df.schema.json()
-    if pcols:
-        staged = _with_part_copies(df, pcols).localCheckpoint()
-        copies = _part_copy_cols(pcols)
-        staged.write.mode("overwrite").partitionBy(*copies).format(fmt).save(
-            f"{path}/{stage}"
-        )
-    else:
-        df.write.mode("overwrite").format(fmt).save(f"{path}/{stage}")
-    staged_dirs = _staged_partition_dirs(path, stage, fmt, len(pcols))
+    staged = _with_part_copies(df, pcols)
+    _, staged_dirs = _write_stage(
+        staged.localCheckpoint() if pcols else staged, path, pcols, fmt
+    )
     parts = {k: rel for k, (rel, _) in staged_dirs.items()}
     files = {k: listed for k, (_, listed) in staged_dirs.items()}
     new_content = {

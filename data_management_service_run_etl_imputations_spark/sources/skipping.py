@@ -72,7 +72,8 @@ from data_management_service_run_etl_imputations_spark.sources.sinks import (
     _load_table_files,
     _publish_manifest,
     _resolve_manifest,
-    _staged_partition_dirs,
+    _scan_rel,
+    _write_stage,
 )
 
 __all__ = [
@@ -448,9 +449,7 @@ def _stats_for_files(
     out: dict[str, dict] = {}
     for r in rows:
         d = r.asDict()
-        uri = d["__file"]
-        idx = uri.find(root_abs)
-        frel = uri[idx + len(root_abs) + 1 :] if idx >= 0 else uri
+        frel = _scan_rel(d["__file"], root_abs)
         col_stats = {
             c: {
                 "min": _json_safe(d[f"__min_{c}"], side="min"),
@@ -824,10 +823,10 @@ def manifest_cluster_zorder(
         .sortWithinPartitions(*copies, "__z")
         .drop("__z")
     )
-    stage = f"data/{uuid.uuid4().hex[:12]}"
-    staged.write.mode("overwrite").partitionBy(*copies).format(fmt).save(
-        f"{path}/{stage}"
-    )
+    # materializing pending MoR deletes can empty a partition entirely —
+    # absent from what was written, it must DROP, not point at a
+    # never-created directory
+    _, written = _write_stage(staged, path, pcols, fmt, expect=selected)
 
     # stats surviving on unrewritten files (loaded against the OLD live
     # set) merge with fresh stats for the rewritten partitions into a new
@@ -839,10 +838,6 @@ def manifest_cluster_zorder(
     # (incl. files a file-granular merge carried into other stages) —
     # capture the set BEFORE repointing so their stale stats drop
     old_rels = {e[0] for k in selected for e in files.get(k, [])}
-    # resolve what Spark actually wrote (escaped dir names decoded);
-    # materializing pending MoR deletes can empty a partition entirely —
-    # it must DROP, not point at a never-created directory
-    written = _staged_partition_dirs(path, stage, fmt, len(pcols))
     new_file_rels: list[str] = []
     for k in selected:
         if k in written:
@@ -1028,9 +1023,7 @@ def _bloom_file_entries(
     n_words = (bits + 63) // 64
     out: dict[str, dict] = {}
     for r in rows:
-        uri = r["__file"]
-        idx = uri.find(root_abs)
-        frel = uri[idx + len(root_abs) + 1 :] if idx >= 0 else uri
+        frel = _scan_rel(r["__file"], root_abs)
         words = [0] * n_words
         for pos in r["__set"]:
             words[pos >> 6] |= 1 << (pos & 63)

@@ -3,9 +3,8 @@ INSERT/CTAS path stages with Spark's native parquet writer and commits
 through ManifestAppendWriter's own loop — no create-data-source worker,
 no per-partition Python write tasks — while staying byte-identical to
 the DataSource writer in manifest content: same op/op_metrics history
-record, same partition keys, same empty-write no-op, and a loud
-fallback to the Python writer when a partition-column type is outside
-the key-identical set."""
+record, same partition keys, same empty-write no-op — for every
+partition-column type."""
 
 from __future__ import annotations
 
@@ -39,15 +38,15 @@ def table_path():
 
 
 def _spy(monkeypatch):
-    """Count fast-path entries/outcomes without changing behavior."""
+    """Count fast-path entries and completed calls without changing
+    behavior."""
     calls = {"n": 0, "taken": 0}
     orig = _fast_staged_append
 
     def wrapper(df, path, options, overwrite):
         calls["n"] += 1
-        took = orig(df, path, options, overwrite)
-        calls["taken"] += bool(took)
-        return took
+        orig(df, path, options, overwrite)
+        calls["taken"] += 1
 
     monkeypatch.setattr(mb, "_fast_staged_append", wrapper)
     return calls
@@ -147,12 +146,11 @@ def test_null_partition_value_key(spark, table_path, monkeypatch):
     assert got == [(1, None), (2, "d0")]
 
 
-def test_boolean_partition_falls_back_to_python_writer(
+def test_boolean_partition_takes_staged_path(
     spark, table_path, monkeypatch
 ):
-    """bool keys format differently across the two engines ('True' vs
-    'true'): the fast path must refuse and the DataSource writer keep
-    the established str(value) keys."""
+    """bool keys follow the one key rule, CAST(flag AS STRING): the
+    staged path serves them like every other type."""
     calls = _spy(monkeypatch)
     view = f"fsa_{uuid.uuid4().hex[:8]}"
     manifest_sql(
@@ -160,10 +158,9 @@ def test_boolean_partition_falls_back_to_python_writer(
         f"CREATE TABLE {view} LOCATION '{table_path}' PARTITIONED BY "
         "(flag) AS SELECT id AS k, id % 2 = 0 AS flag FROM range(4)",
     )
-    assert calls["n"] == 1 and calls["taken"] == 0
+    assert calls["n"] == 1 and calls["taken"] == 1
     _, content = _latest_manifest(table_path)
-    # Python-writer convention: str(True)/str(False)
-    assert sorted(content["partitions"]) == ["False", "True"]
+    assert sorted(content["partitions"]) == ["false", "true"]
     assert manifest_read(spark, table_path).count() == 4
 
 
