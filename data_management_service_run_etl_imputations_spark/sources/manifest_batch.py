@@ -552,7 +552,7 @@ def _native_read_frame(spark, path: str, version: int):
     ``sinks._apply_deletes``), or ``None`` when the snapshot needs the
     Python DataSource: a non-parquet format, a legacy manifest listed by
     directory (no explicit file list), or more than
-    ``$MANIFEST_SQL_NATIVE_READ_MAX_FILES`` (default 64) live files —
+    ``_NATIVE_READ_MAX_FILES`` (64) live files —
     above that, plan-time partition pruning of the DataSource pays for
     its Python scan tasks. Merge-on-read deletes become JVM anti-joins,
     column mapping a re-labelling projection, and evolved directories
@@ -560,7 +560,6 @@ def _native_read_frame(spark, path: str, version: int):
     preserved by construction: the file list is resolved here, once,
     and baked into the plan."""
     import json
-    import os
 
     from pyspark.sql.types import StructType
 
@@ -573,14 +572,8 @@ def _native_read_frame(spark, path: str, version: int):
         _pruned_resolve,
     )
 
-    try:
-        max_files = int(
-            os.environ.get("MANIFEST_SQL_NATIVE_READ_MAX_FILES", "")
-            or _NATIVE_READ_MAX_FILES
-        )
-    except ValueError:
-        max_files = _NATIVE_READ_MAX_FILES
-    if max_files <= 0:
+    max_files = _NATIVE_READ_MAX_FILES
+    if max_files <= 0:  # 0 switches native binding off
         return None
 
     resolved = _pruned_resolve(path, version)
@@ -735,7 +728,7 @@ def manifest_sql_register(
     pushed filters (every predicate is still applied by Spark —
     correct, just unpruned), making the binding safe for unlimited
     reuse. The contract concerns DataSource bindings only: a parquet
-    snapshot of at most ``$MANIFEST_SQL_NATIVE_READ_MAX_FILES`` files
+    snapshot of at most ``_NATIVE_READ_MAX_FILES`` (64) files
     binds natively (:func:`_native_read_frame`) and is reusable as is.
 
     ``follow_head=True`` opts a view into always-current binding THROUGH
@@ -1244,15 +1237,6 @@ class ManifestAppendWriter(DataSourceArrowWriter):
                         "rows_appended": sum(e[3] for e in entries),
                     },
                 )
-                # bounded delta chains for writer-API-only tables: the
-                # session-less cadence checkpoint (this commit() runs in
-                # a plain Python worker, so the Spark-written
-                # manifest_checkpoint is unavailable here)
-                from data_management_service_run_etl_imputations_spark.sources.sinks import (
-                    _maybe_auto_checkpoint_local,
-                )
-
-                _maybe_auto_checkpoint_local(self.path, version + 1)
                 return
             except CommitConflict as e:
                 # insert-only fast-forward: re-read the head and re-add

@@ -531,98 +531,18 @@ def _latest_checkpoint_version(path: str, at_or_below: int | None = None) -> int
     return best
 
 
-def manifest_checkpoint(spark, path: str, version: int | None = None) -> int:
+def manifest_checkpoint(path: str, version: int | None = None) -> int:
     """Write a PARQUET CHECKPOINT for a version (default: head) — the
     out-of-log anchor that keeps every commit O(diff): the per-partition
     file lists (the O(files) share of table metadata) land as one
-    Spark-written parquet under ``_commits/_checkpoints/``, the small
-    remainder as a meta JSON published through the atomic commit backend
-    (one winner among concurrent checkpointers; a checkpoint is derived
-    state, so losing is a no-op). Readers materialize any version from
-    the nearest checkpoint plus its forward delta chain — this is
-    Delta's parquet-checkpoint design. Returns the checkpointed
-    version."""
-    import json
-    import os
-
-    import uuid
-
-    version, content = _resolve_manifest(path, version)
-    if (
-        version == 0
-        or _has_checkpoint(path, version)
-        or "files" not in content  # legacy listing-fallback table
-    ):
-        return version
-    rows = [
-        (part, e[0], e[1], e[2] if len(e) > 2 else None, i)
-        for i, (part, e) in enumerate(
-            (part, e)
-            for part in sorted(content["files"])
-            for e in content["files"][part]
-        )
-    ]
-    ckpt_dir = _checkpoint_dir(path)
-    os.makedirs(ckpt_dir, exist_ok=True)
-    # writer-unique files dir, referenced from the meta JSON whose
-    # exclusive publish is the checkpoint's commit point — concurrent
-    # checkpointers never touch each other's bytes
-    files_ref = f"{version}.files.{uuid.uuid4().hex[:8]}.parquet"
-    (
-        spark.createDataFrame(
-            rows, "part STRING, rel STRING, size LONG, rows LONG, idx LONG"
-        )
-        # CLUSTER BY part: partition-pruned checkpoint reads
-        # (_load_checkpoint_files) push a part-IN filter into the
-        # parquet scan, and row-group statistics only prune when each
-        # row group spans few partition keys
-        .repartition(max(1, len(rows) // 100_000 + 1), "part")
-        .sortWithinPartitions("part", "idx")
-        .write.mode("errorifexists")
-        .parquet(f"{ckpt_dir}/{files_ref}")
-    )
-    meta = {k: v for k, v in content.items() if k != "files"}
-    meta["files_ref"] = files_ref
-    published = get_commit_backend().put_if_absent(
-        f"{ckpt_dir}/{version}.meta.json", json.dumps(meta).encode()
-    )
-    if not published:
-        # another checkpointer won the race for this version — identical
-        # derived content; drop the losing bytes
-        import shutil
-
-        shutil.rmtree(f"{ckpt_dir}/{files_ref}", ignore_errors=True)
-    return version
-
-
-def _maybe_auto_checkpoint(spark, path: str, version: int) -> None:
-    """Best-effort cadence trigger called by writers after a successful
-    commit: checkpoint when the head has drifted CHECKPOINT_EVERY or
-    more versions past the newest checkpoint (or the v1 snapshot).
-    Failure never fails the commit — the log alone is always
-    sufficient."""
-    try:
-        anchor = max(1, _latest_checkpoint_version(path, version))
-        if version - anchor >= CHECKPOINT_EVERY:
-            manifest_checkpoint(spark, path, version)
-    except Exception:  # pragma: no cover — checkpointing is derived state
-        pass
-
-
-def manifest_checkpoint_local(path: str, version: int | None = None) -> int:
-    """Session-less twin of :func:`manifest_checkpoint` for commit paths
-    that run where no SparkSession exists (the Python DataSource
-    writer's driver-side ``commit()`` executes in a plain Python
-    worker). Writes the SAME on-disk layout — one parquet files sidecar
-    clustered by ``part`` plus the meta JSON published through the
-    atomic commit backend — via pyarrow instead of a Spark job, so
-    ``df.write.format("manifest")``-only tables still get bounded delta
-    chains. The sidecar is a single file sorted by (part, idx) with
-    small row groups, so :func:`_load_checkpoint_files`'s pushed
-    part-IN filter still prunes row groups. Driver memory is O(files)
-    rows of metadata — the regime where a table is written exclusively
-    through the DataFrame writer; a 10⁷-file table should checkpoint
-    through the Spark-written path."""
+    driver-written parquet file under ``_commits/_checkpoints/``, the
+    small remainder as a meta JSON published through the atomic commit
+    backend (one winner among concurrent checkpointers; a checkpoint is
+    derived state, so losing is a no-op). Readers materialize any
+    version from the nearest checkpoint plus its forward delta chain —
+    this is Delta's parquet-checkpoint design. The file list is already
+    driver-side content, so the sidecar is written with pyarrow and no
+    Spark job. Returns the checkpointed version."""
     import json
     import os
     import uuid
@@ -634,22 +554,21 @@ def manifest_checkpoint_local(path: str, version: int | None = None) -> int:
     if (
         version == 0
         or _has_checkpoint(path, version)
-        or "files" not in content
+        or "files" not in content  # legacy listing-fallback table
     ):
         return version
-    parts_sorted = sorted(content["files"])
-    cols: dict[str, list] = {"part": [], "rel": [], "size": [], "rows": [], "idx": []}
-    i = 0
-    for part in parts_sorted:
+    cols: dict[str, list] = {"part": [], "rel": [], "size": [], "rows": []}
+    for part in sorted(content["files"]):
         for e in content["files"][part]:
             cols["part"].append(part)
             cols["rel"].append(e[0])
             cols["size"].append(e[1])
             cols["rows"].append(e[2] if len(e) > 2 else None)
-            cols["idx"].append(i)
-            i += 1
     ckpt_dir = _checkpoint_dir(path)
     os.makedirs(ckpt_dir, exist_ok=True)
+    # writer-unique sidecar, referenced from the meta JSON whose
+    # exclusive publish is the checkpoint's commit point — concurrent
+    # checkpointers never touch each other's bytes
     files_ref = f"{version}.files.{uuid.uuid4().hex[:8]}.parquet"
     t = pa.table(
         {
@@ -657,33 +576,25 @@ def manifest_checkpoint_local(path: str, version: int | None = None) -> int:
             "rel": pa.array(cols["rel"], pa.string()),
             "size": pa.array(cols["size"], pa.int64()),
             "rows": pa.array(cols["rows"], pa.int64()),
-            "idx": pa.array(cols["idx"], pa.int64()),
+            "idx": pa.array(range(len(cols["part"])), pa.int64()),
         }
     )
-    pq.write_table(t, f"{ckpt_dir}/{files_ref}", row_group_size=8192)
+    # sorted by (part, idx) in small row groups: the part-IN filter
+    # _load_checkpoint_files pushes into the scan prunes row groups by
+    # their statistics; zstd is the session's parquet codec policy
+    pq.write_table(
+        t, f"{ckpt_dir}/{files_ref}", row_group_size=8192, compression="zstd"
+    )
     meta = {k: v for k, v in content.items() if k != "files"}
     meta["files_ref"] = files_ref
     published = get_commit_backend().put_if_absent(
         f"{ckpt_dir}/{version}.meta.json", json.dumps(meta).encode()
     )
     if not published:
-        try:
-            os.remove(f"{ckpt_dir}/{files_ref}")
-        except OSError:
-            pass
+        # another checkpointer won the race for this version — identical
+        # derived content; drop the losing bytes
+        os.remove(f"{ckpt_dir}/{files_ref}")
     return version
-
-
-def _maybe_auto_checkpoint_local(path: str, version: int) -> None:
-    """Cadence trigger for session-less writers (best-effort, never
-    fails the commit) — the gap ADVICE r8 flagged on
-    ``ManifestAppendWriter.commit``."""
-    try:
-        anchor = max(1, _latest_checkpoint_version(path, version))
-        if version - anchor >= CHECKPOINT_EVERY:
-            manifest_checkpoint_local(path, version)
-    except Exception:  # pragma: no cover — checkpointing is derived state
-        pass
 
 
 def _latest_manifest(path: str) -> tuple[int, dict]:
@@ -1187,26 +1098,10 @@ def _resolve_manifest(
 ) -> tuple[int, dict]:
     """Latest manifest, a pinned version, or the newest version committed
     at-or-before ``as_of`` (unix seconds) for timestamp time travel."""
-    import os
-
-    if version is None and as_of is not None:
-        best = None
-        d = _manifest_dir(path)
-        for name in sorted(os.listdir(d)) if os.path.isdir(d) else []:
-            if not name.endswith(".json"):
-                continue
-            v = int(name[:-5])
-            ts = _commit_meta(_read_commit_file(path, v)).get("committed_at")
-            if ts is not None and ts <= as_of and (best is None or v > best):
-                best = v
-        if best is None:
-            raise ValueError(
-                f"no manifest version at {path} committed at or before {as_of}"
-            )
-        version = best
-    if version is None:
+    if version is None and as_of is None:
         return _latest_manifest(path)
-    return version, _materialize(path, version)
+    v = _resolve_version(path, version, as_of)
+    return v, _materialize(path, v)
 
 
 def _resolve_version(
@@ -1401,10 +1296,11 @@ def _publish_manifest(
     :class:`CommitConflict` for the loser. Stamps commit provenance
     (``op``, ``committed_at``) for DESCRIBE HISTORY / timestamp travel.
 
-    The payload is INCREMENTAL: unless this version is a checkpoint
-    (every ``CHECKPOINT_EVERY``-th, or the parent cannot be read), only
+    The payload is INCREMENTAL: unless the parent cannot be read, only
     the diff against the parent version is serialized — commit metadata
-    cost tracks what the commit CHANGED, never table size."""
+    cost tracks what the commit CHANGED, never table size. A successful
+    publish runs the checkpoint cadence, so every commit path bounds
+    its delta chain."""
     import json
     import os
     import time
@@ -1451,8 +1347,8 @@ def _publish_manifest(
     elif version > 1:
         # ALWAYS a delta: the anchor role the every-8th full JSON
         # snapshot used to play moved to out-of-log PARQUET CHECKPOINTS
-        # (executor-written, _commits/_checkpoints/) so no commit ever
-        # serializes O(table) metadata on the driver
+        # (_commits/_checkpoints/, written after the publish below) so
+        # no commit file ever serializes O(table) metadata
         try:
             base = _materialize(path, version - 1)
             payload = {
@@ -1475,6 +1371,17 @@ def _publish_manifest(
             "re-read the latest manifest and retry"
         )
     _write_latest_hint(d, version)
+    # the checkpoint cadence, behind every commit: checkpoint once the
+    # head has drifted CHECKPOINT_EVERY or more versions past the newest
+    # checkpoint (or the v1 snapshot). Best-effort — the log alone is
+    # always sufficient, so a failed checkpoint never fails the commit.
+    try:
+        if version - max(1, _latest_checkpoint_version(path, version)) >= (
+            CHECKPOINT_EVERY
+        ):
+            manifest_checkpoint(path, version)
+    except Exception:  # pragma: no cover — checkpointing is derived state
+        pass
 
 
 def _list_dir_files(path: str, rel_dir: str, fmt: str) -> list[list]:
@@ -2086,7 +1993,6 @@ def manifest_delete(
     _publish_manifest(
         path, version + 1, content, op="delete", op_metrics={"delete_keys": n}
     )
-    _maybe_auto_checkpoint(spark, path, version + 1)
     return {"keys": n}
 
 
@@ -2615,7 +2521,6 @@ def manifest_delete_where(
         },
         actions=actions,
     )
-    _maybe_auto_checkpoint(spark, path, version + 1)
     return {"deleted_rows": n, "files_matched": len(files_matched)}
 
 
@@ -3749,7 +3654,6 @@ def _stage_and_commit(
             raise CommitConflict(
                 f"{op} at {path} lost {16} lazy fast-forward commit races"
             )
-        _maybe_auto_checkpoint(merged.sparkSession, path, version + 1)
         return n_merged
     for _ in range(16):
         try:
@@ -3776,7 +3680,6 @@ def _stage_and_commit(
         raise CommitConflict(
             f"{op} at {path} lost {16} fast-forward commit races"
         )
-    _maybe_auto_checkpoint(merged.sparkSession, path, version + 1)
     return n_merged
 
 
@@ -4963,7 +4866,6 @@ def manifest_compact(
             "files_after": files_after,
         },
     )
-    _maybe_auto_checkpoint(spark, path, version + 1)
     return {
         "partitions": len(selected),
         "files_before": files_before,
@@ -5321,7 +5223,6 @@ def manifest_replace_partitions(
             "partitions_dropped": dropped,
         },
     )
-    _maybe_auto_checkpoint(spark, path, version + 1)
     return {"partitions_written": written, "partitions_dropped": dropped}
 
 
@@ -5450,6 +5351,16 @@ def manifest_clone(
     }
 
 
+def _remove_file_or_dir(target: str) -> None:
+    import os
+    import shutil
+
+    if os.path.isdir(target):
+        shutil.rmtree(target)
+    else:
+        os.remove(target)
+
+
 def manifest_vacuum(
     path: str, keep_versions: int = 1, retain_seconds: float | None = None
 ) -> int:
@@ -5540,12 +5451,8 @@ def manifest_vacuum(
             continue
         for name in os.listdir(root):
             if f"{sub}/{name}" not in sidecars:
-                target = os.path.join(root, name)
                 # delete-key refs are Spark-written directories
-                if os.path.isdir(target):
-                    shutil.rmtree(target)
-                else:
-                    os.remove(target)
+                _remove_file_or_dir(os.path.join(root, name))
     # GAP-FREE retention: version FILES stay dense from the lowest needed
     # version up to the head. Mixed keep_versions/retain_seconds selection
     # can otherwise leave holes (e.g. {1,2,3} by time + {8,9,10} by count),
@@ -5563,7 +5470,7 @@ def manifest_vacuum(
             os.remove(os.path.join(d, f"{v}.json"))
     # checkpoint GC: anchors for kept/needed versions (and anything
     # above the density floor — cheap, and they speed up time travel)
-    # survive; older checkpoints and orphaned loser files dirs go
+    # survive; older checkpoints and orphaned loser sidecars go
     ckd = _checkpoint_dir(path)
     if os.path.isdir(ckd):
         live_refs: set[str] = set()
@@ -5581,7 +5488,9 @@ def manifest_vacuum(
                 os.remove(os.path.join(ckd, name))
         for name in os.listdir(ckd):
             if ".files." in name and name not in live_refs:
-                shutil.rmtree(os.path.join(ckd, name), ignore_errors=True)
+                # one parquet file, or a directory written before the
+                # checkpoint sidecar became a single file
+                _remove_file_or_dir(os.path.join(ckd, name))
     if keep:
         _write_latest_hint(d, max(keep))  # a regressed hint must not
         # point at a version this vacuum just removed
@@ -6586,9 +6495,6 @@ def manifest_replace_table(
         op="replace-table" if version else "create-table-as",
         op_metrics=metrics,
     )
-    if version:
-        spark = df.sparkSession
-        _maybe_auto_checkpoint(spark, path, version + 1)
     return metrics
 
 

@@ -400,7 +400,7 @@ def main() -> None:
             manifest_upsert_partitioned(
                 rows.repartition(8), root, ["k"], "day"
             )
-            manifest_checkpoint(spark, root)
+            manifest_checkpoint(root)
             CKPT_PRUNED_LAST.clear()
             t0 = time.perf_counter()
             n = manifest_read(

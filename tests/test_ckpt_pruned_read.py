@@ -53,7 +53,7 @@ def _rows(df):
 def test_pruned_read_equals_full_read(spark, table_path):
     _seed(spark, table_path, days=12)
     manifest_delete_where(spark, table_path, "k = 105")  # MoR mask rides
-    manifest_checkpoint(spark, table_path)
+    manifest_checkpoint(table_path)
     CKPT_PRUNED_LAST.clear()
     got = manifest_read(
         spark, table_path, partition_filter={"day": ["d001", "d003"]}
@@ -71,7 +71,7 @@ def test_pruned_read_equals_full_read(spark, table_path):
 
 def test_partition_values_also_prune(spark, table_path):
     _seed(spark, table_path, days=8)
-    manifest_checkpoint(spark, table_path)
+    manifest_checkpoint(table_path)
     CKPT_PRUNED_LAST.clear()
     got = manifest_read(spark, table_path, partition_values=["d002"])
     assert CKPT_PRUNED_LAST["partitions_selected"] == 1
@@ -91,12 +91,12 @@ def test_plan_cost_flat_as_table_grows(spark, table_path):
     load the SAME number of file-list rows — the scale-horizon telemetry
     the judge asked for (VERDICT r7 next-round #4)."""
     _seed(spark, table_path, days=10)
-    manifest_checkpoint(spark, table_path)
+    manifest_checkpoint(table_path)
     CKPT_PRUNED_LAST.clear()
     manifest_read(spark, table_path, partition_values=["d004"]).count()
     small = dict(CKPT_PRUNED_LAST)
     _seed(spark, table_path, days=100)  # 10× partitions (re-upserts d0..9)
-    manifest_checkpoint(spark, table_path)
+    manifest_checkpoint(table_path)
     CKPT_PRUNED_LAST.clear()
     manifest_read(spark, table_path, partition_values=["d004"]).count()
     big = dict(CKPT_PRUNED_LAST)
@@ -108,7 +108,7 @@ def test_plan_cost_flat_as_table_grows(spark, table_path):
 
 def test_time_travel_version_pins_pruned_read(spark, table_path):
     _seed(spark, table_path, days=6)
-    manifest_checkpoint(spark, table_path)  # checkpoint v1
+    manifest_checkpoint(table_path)  # checkpoint v1
     manifest_delete_where(spark, table_path, "day = 'd002'")
     # v1 pinned + checkpointed: pruned path sees the pre-delete snapshot
     got = manifest_read(
@@ -137,7 +137,7 @@ def test_pruned_resolve_equals_materialize_every_version(spark, table_path):
 
     _seed(spark, table_path, days=6)                      # v1
     manifest_delete_where(spark, table_path, "k = 103")   # v2 (mor)
-    manifest_checkpoint(spark, table_path)                # ckpt @ v2
+    manifest_checkpoint(table_path)                # ckpt @ v2
     _seed(spark, table_path, days=3)                      # v3 re-upserts d0-2
     manifest_delete_where(spark, table_path, "day = 'd001'", mode="cow")  # v4
     manifest_replace_partitions(
@@ -179,7 +179,7 @@ def test_pruned_read_at_non_checkpointed_head(spark, table_path):
     checkpoint must still take the pruned path (chain replay + overlay)
     and return byte-identical rows to the full path."""
     _seed(spark, table_path, days=12)
-    manifest_checkpoint(spark, table_path)      # ckpt @ v1
+    manifest_checkpoint(table_path)      # ckpt @ v1
     _seed(spark, table_path, days=2)            # v2: d0, d1 rewritten
     manifest_delete_where(spark, table_path, "k = 303")  # v3: MoR mask
     CKPT_PRUNED_LAST.clear()
@@ -207,7 +207,7 @@ def test_sql_scan_pruned_at_non_checkpointed_head(spark, table_path):
     from pyspark.sql.datasource import EqualTo
 
     _seed(spark, table_path, days=8)
-    manifest_checkpoint(spark, table_path)
+    manifest_checkpoint(table_path)
     _seed(spark, table_path, days=2)  # head drifts past the checkpoint
     view = f"ckv_{uuid.uuid4().hex[:8]}"
     manifest_sql_register(spark, view, table_path)
@@ -237,7 +237,7 @@ def test_lazy_mor_delete_at_checkpointed_head(spark, table_path):
     )
 
     _seed(spark, table_path, days=10)
-    manifest_checkpoint(spark, table_path)
+    manifest_checkpoint(table_path)
     _seed(spark, table_path, days=2)  # drift the head off the checkpoint
     r = manifest_delete_where(
         spark, table_path, "day = 'd003' AND k >= 302", mode="mor"
@@ -278,7 +278,7 @@ def test_lazy_mor_delete_falls_back_when_consolidation_due(
     )
 
     _seed(spark, table_path, days=3)
-    manifest_checkpoint(spark, table_path)
+    manifest_checkpoint(table_path)
     targets = [0, 1, 2, 3, 4, 100, 101, 102, 103]  # distinct live rows
     assert len(targets) == POS_CONSOLIDATE_THRESHOLD + 1
     for k in targets:
@@ -286,7 +286,7 @@ def test_lazy_mor_delete_falls_back_when_consolidation_due(
         # keep every head checkpoint-anchored so the lazy path stays
         # ELIGIBLE — the fallback must be the consolidation guard, not
         # a missing checkpoint
-        manifest_checkpoint(spark, table_path)
+        manifest_checkpoint(table_path)
     _, content = _latest_manifest(table_path)
     n_pos = len(
         [e for e in content.get("deletes", []) if e.get("kind") == "pos"]
@@ -317,7 +317,7 @@ def test_lazy_mor_update_at_checkpointed_head(spark, table_path):
     )
 
     _seed(spark, table_path, days=10)
-    manifest_checkpoint(spark, table_path)
+    manifest_checkpoint(table_path)
     _seed(spark, table_path, days=2)  # drift the head off the checkpoint
     r = manifest_update_where(
         spark,
@@ -370,7 +370,7 @@ def test_lazy_mor_update_equals_eager_twin(spark, table_path):
     try:
         for p in (table_path, twin):
             _seed(spark, p, days=6)
-        manifest_checkpoint(spark, table_path)
+        manifest_checkpoint(table_path)
         for p in (table_path, twin):
             _seed(spark, p, days=2)
             manifest_update_where(
@@ -400,7 +400,7 @@ def test_lazy_mor_update_row_migration_new_partition(spark, table_path):
     )
 
     _seed(spark, table_path, days=4)
-    manifest_checkpoint(spark, table_path)
+    manifest_checkpoint(table_path)
     r = manifest_update_where(
         spark, table_path, {"day": "'d999'"}, "k = 203", mode="mor"
     )
@@ -441,7 +441,7 @@ def test_lazy_mor_update_falls_back_with_stats_sidecar(spark, table_path):
 
     _seed(spark, table_path, days=3)
     manifest_collect_stats(spark, table_path, ["k", "v"])
-    manifest_checkpoint(spark, table_path)
+    manifest_checkpoint(table_path)
     manifest_update_where(
         spark, table_path, {"v": "v + 5"}, "k = 202", mode="mor"
     )
@@ -471,7 +471,7 @@ def test_lazy_upsert_at_checkpointed_head(spark, table_path):
     )
 
     _seed(spark, table_path, days=8)
-    manifest_checkpoint(spark, table_path)
+    manifest_checkpoint(table_path)
     r = manifest_upsert_partitioned(
         _batch(spark, [(201, "d002", 999.0), (777, "d002", 7.0)]),
         table_path,
@@ -510,7 +510,7 @@ def test_lazy_upsert_equals_eager_twin(spark, table_path):
     try:
         for p in (table_path, twin):
             _seed(spark, p, days=5)
-        manifest_checkpoint(spark, table_path)
+        manifest_checkpoint(table_path)
         batch = [(100, "d001", -1.0), (300, "d003", -3.0),
                  (901, "d009", 9.0)]
         for p in (table_path, twin):
@@ -533,7 +533,7 @@ def test_lazy_upsert_materializes_pending_delete(spark, table_path):
     not resurrect: _apply_deletes runs off the meta content's delete
     entries before the merge, exactly as the eager path."""
     _seed(spark, table_path, days=3)
-    manifest_checkpoint(spark, table_path)
+    manifest_checkpoint(table_path)
     manifest_delete_where(spark, table_path, "k = 101", mode="mor")
     manifest_upsert_partitioned(
         _batch(spark, [(102, "d001", 555.0)]), table_path, ["k"], "day"
@@ -553,7 +553,7 @@ def test_lazy_upsert_new_partition(spark, table_path):
     )
 
     _seed(spark, table_path, days=2)
-    manifest_checkpoint(spark, table_path)
+    manifest_checkpoint(table_path)
     r = manifest_upsert_partitioned(
         _batch(spark, [(900, "d900", 9.0)]), table_path, ["k"], "day"
     )
@@ -574,7 +574,7 @@ def test_lazy_upsert_fast_forwards_on_disjoint_race(
     from data_management_service_run_etl_imputations_spark.sources import sinks
 
     _seed(spark, table_path, days=3)
-    manifest_checkpoint(spark, table_path)
+    manifest_checkpoint(table_path)
     real_latest_version = sinks._latest_version
     state = {"raced": False}
 
@@ -614,7 +614,7 @@ def test_lazy_upsert_same_partition_race_escalates(
     )
 
     _seed(spark, table_path, days=2)
-    manifest_checkpoint(spark, table_path)
+    manifest_checkpoint(table_path)
     real_latest_version = sinks._latest_version
     state = {"raced": False}
 
@@ -646,7 +646,7 @@ def test_lazy_upsert_txn_idempotent(spark, table_path):
     """txn tokens ride the lazy actions commit atomically: the marker
     commits with the data (extra_meta → actions.set), a replay skips."""
     _seed(spark, table_path, days=2)
-    manifest_checkpoint(spark, table_path)
+    manifest_checkpoint(table_path)
     r1 = manifest_upsert_partitioned(
         _batch(spark, [(500, "d001", 5.0)]), table_path, ["k"], "day",
         txn=("job-a", 7),
@@ -671,7 +671,7 @@ def test_lazy_upsert_schema_evolution_falls_back(spark, table_path):
     )
 
     _seed(spark, table_path, days=2)
-    manifest_checkpoint(spark, table_path)
+    manifest_checkpoint(table_path)
     wide = spark.createDataFrame(
         [(600, "d001", 6.0, "tag")], "k LONG, day STRING, v DOUBLE, t STRING"
     )
@@ -698,7 +698,7 @@ def test_lazy_upsert_multicol_partitions(spark, table_path):
         rows, "k LONG, day STRING, source STRING, v DOUBLE"
     )
     manifest_upsert_partitioned(df, table_path, ["k"], ["day", "source"])
-    manifest_checkpoint(spark, table_path)
+    manifest_checkpoint(table_path)
     r = manifest_upsert_partitioned(
         spark.createDataFrame(
             [(110, "d1", "s1", 999.0), (777, "d1", "s1", 7.0)],
@@ -747,7 +747,7 @@ def test_lazy_vs_eager_randomized_mixed_history(spark, table_path):
     try:
         for p in (table_path, twin):
             _seed(spark, p, days=4)
-        manifest_checkpoint(spark, table_path)  # lazy twin only
+        manifest_checkpoint(table_path)  # lazy twin only
         next_k = 10_000
         for step in range(10):
             op = rng.choice(["upsert", "delete", "update", "upsert"])
@@ -773,7 +773,7 @@ def test_lazy_vs_eager_randomized_mixed_history(spark, table_path):
                         spark, p, {"v": "v + 1"}, cond, mode="mor"
                     )
             if rng.random() < 0.3:
-                manifest_checkpoint(spark, table_path)  # drift anchor
+                manifest_checkpoint(table_path)  # drift anchor
             assert _rows(manifest_read(spark, table_path)) == _rows(
                 manifest_read(spark, twin)
             ), f"diverged at step {step} after {op}"

@@ -191,7 +191,7 @@ def test_sql_read_on_checkpointed_version_prunes_flat(spark, table_path):
     )
 
     _seed(spark, table_path, days=6)
-    manifest_checkpoint(spark, table_path)
+    manifest_checkpoint(table_path)
     view = f"mb_{uuid.uuid4().hex[:8]}"
     manifest_sql_register(spark, view, table_path)
     got = spark.sql(f"SELECT k, v FROM {view} WHERE day = 'd2'")
@@ -223,7 +223,7 @@ def test_checkpointed_filter_pruning_to_zero_partitions(spark, table_path):
     )
 
     _seed(spark, table_path, days=3)
-    manifest_checkpoint(spark, table_path)
+    manifest_checkpoint(table_path)
     schema = manifest_read(spark, table_path).schema
     r = ManifestBatchReader(schema, {"path": table_path})
     list(r.pushFilters([EqualTo(("day",), "no_such_day")]))

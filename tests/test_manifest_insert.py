@@ -18,7 +18,7 @@ import pytest
 from data_management_service_run_etl_imputations_spark.sources.sinks import (
     ConstraintViolation,
     manifest_add_constraint,
-    manifest_checkpoint_local,
+    manifest_checkpoint,
     manifest_history,
     manifest_insert,
     manifest_read,
@@ -114,7 +114,7 @@ def test_insert_txn_token_idempotent(spark, table_path):
 
 def test_insert_lazy_off_checkpoint_equals_eager(spark, table_path):
     _seed(spark, table_path, n=30)
-    manifest_checkpoint_local(table_path)
+    manifest_checkpoint(table_path)
     # a couple of post-checkpoint commits so the head is chain-anchored
     for i in (100, 101):
         manifest_insert(

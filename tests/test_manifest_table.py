@@ -1993,9 +1993,9 @@ def test_parquet_checkpoint_anchors_reads_and_stays_o_diff(
         )
 
     # explicit checkpoint mid-history; idempotent on repeat
-    v = manifest_checkpoint(spark, table_path)
+    v = manifest_checkpoint(table_path)
     assert v == 5 and _has_checkpoint(table_path, 5)
-    assert manifest_checkpoint(spark, table_path) == 5
+    assert manifest_checkpoint(table_path) == 5
 
     # checkpoint content == delta-replayed content (files order intact)
     replayed = dict(_materialize(table_path, 5))

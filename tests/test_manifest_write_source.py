@@ -371,11 +371,10 @@ def test_dynamic_overwrite_retry_refuses_to_wipe_concurrent_append(
     assert 50 in {r["k"] for r in manifest_read(spark, table_path).collect()}
 
 
-def test_checkpoint_local_matches_spark_checkpoint_layout(spark, table_path):
-    """manifest_checkpoint_local (session-less twin) must produce a
-    checkpoint every reader path loads identically to the Spark-written
-    one: _load_checkpoint == _materialize, and the part-IN pushed read
-    returns only the asked partitions."""
+def test_checkpoint_round_trips_through_every_reader(spark, table_path):
+    """manifest_checkpoint must produce a checkpoint every reader path
+    loads identically to log replay: _load_checkpoint == _materialize,
+    and the part-IN pushed read returns only the asked partitions."""
     from data_management_service_run_etl_imputations_spark.sources.sinks import (
         _has_checkpoint,
         _latest_version,
@@ -383,7 +382,7 @@ def test_checkpoint_local_matches_spark_checkpoint_layout(spark, table_path):
         _load_checkpoint_files,
         _load_checkpoint_meta,
         _materialize,
-        manifest_checkpoint_local,
+        manifest_checkpoint,
     )
 
     manifest_upsert_partitioned(
@@ -396,7 +395,7 @@ def test_checkpoint_local_matches_spark_checkpoint_layout(spark, table_path):
         _batch(spark, [(4, "d1", 4.0)]), table_path, ["k"], "day"
     )
     v = _latest_version(table_path)
-    assert manifest_checkpoint_local(table_path, v) == v
+    assert manifest_checkpoint(table_path, v) == v
     assert _has_checkpoint(table_path, v)
     assert _load_checkpoint(table_path, v) == _materialize(table_path, v)
     meta = _load_checkpoint_meta(table_path, v)
@@ -407,7 +406,7 @@ def test_checkpoint_local_matches_spark_checkpoint_layout(spark, table_path):
     assert set(pruned) == {"d1"}
     assert pruned["d1"] == full["files"]["d1"]
     # idempotent: re-checkpointing an already-checkpointed version no-ops
-    assert manifest_checkpoint_local(table_path, v) == v
+    assert manifest_checkpoint(table_path, v) == v
 
 
 def test_writer_only_table_auto_checkpoints(spark, table_path):

@@ -1,5 +1,5 @@
 """Native reads of SQL-registered manifest views: every parquet snapshot
-of at most ``MANIFEST_SQL_NATIVE_READ_MAX_FILES`` (default 64) files
+of at most ``manifest_batch._NATIVE_READ_MAX_FILES`` (64) files
 binds as a JVM parquet FileScan over the snapshot's exact live file
 list, through the loader the DML verbs read with — merge-on-read
 deletes as anti-joins, column mapping as a re-labelling projection,
@@ -56,11 +56,9 @@ def _rows(spark, view: str):
 
 def _register_ds(spark, view, path, monkeypatch, **kw):
     """Bind through the Python DataSource regardless of snapshot shape."""
-    monkeypatch.setenv("MANIFEST_SQL_NATIVE_READ_MAX_FILES", "0")
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(mb, "_NATIVE_READ_MAX_FILES", 0)
         manifest_sql_register(spark, view, path, **kw)
-    finally:
-        monkeypatch.delenv("MANIFEST_SQL_NATIVE_READ_MAX_FILES")
 
 
 def _ds_rows(spark, path, monkeypatch, **kw):

@@ -334,7 +334,7 @@ def test_unpartitioned_python_api_surface(spark, table_path):
     r = manifest_compact(spark, table_path)
     assert r["files_after"] == 1  # the single synthetic partition
     assert manifest_read(spark, table_path).count() == 20
-    manifest_checkpoint(spark, table_path)
+    manifest_checkpoint(table_path)
     fs = manifest_fsck(table_path)
     assert fs["errors"] == []
     manifest_vacuum(table_path, keep_versions=1)
