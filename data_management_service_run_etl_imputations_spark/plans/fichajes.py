@@ -1,8 +1,9 @@
 """Sub-pipeline B — fichajes (clock-in/out daily balances).
 
 Recomposition of ``function_app.py:318-388`` (SURVEY §3.3): per-day seconds
-sums → left joins to employees / empleado map / latest department → fuzzy
-company & department lookups → canonical select/rename/casts.
+sums → left joins to employees (fuzzy company lookup on the employees rows)
+/ empleado map / latest department → fuzzy department lookup → canonical
+select/rename/casts.
 
 Unlike pipeline A, every join here is LEFT (the reference keeps employees
 missing from Dim_Empleado, ``function_app.py:332``), and the dead
@@ -43,8 +44,15 @@ def build_fichajes(
         F.sum("secondsToWork").alias("tiempo_teorico"),
     )
 
-    # J7 — left join employees for company_name + nid (function_app.py:329)
-    emp = employees.select("id", "company_name", "nid")
+    # J7 — left join employees for company_name + nid (function_app.py:329).
+    # J6 — the fuzzy company lookup (function_app.py:335) runs on the
+    # employees rows, before the join (a per-row map of build-side columns
+    # commutes with the equi-join); a day whose employee is unknown gets
+    # the null id that looking up its null company_name gives.
+    emp = fuzzy_containment_lookup(
+        employees.select("id", "company_name", "nid"),
+        dim_empresa, "company_name", "nombre", "empresa_id", "empresa_id",
+    ).drop("company_name")
     fact = daily.join(F.broadcast(emp), daily.employeeId == emp.id, "left").drop("id")
 
     # J8 — LEFT join to the deduped empleado map (function_app.py:332 —
@@ -55,13 +63,6 @@ def build_fichajes(
     fact = fact.join(
         F.broadcast(empleado_map), fact.nid == empleado_map.DNI, "left"
     ).drop("DNI")
-
-    # J6 — fuzzy company lookup (function_app.py:335)
-    fact = fact.withColumn("__row", F.monotonically_increasing_id())
-    fact = fuzzy_containment_lookup(
-        fact, dim_empresa, "company_name", "nombre", "empresa_id", "empresa_id",
-        fact_key="__row",
-    )
 
     # A2 + J9 — latest department per employee, left join (function_app.py:338)
     latest_dept = latest_per_key(
@@ -75,14 +76,14 @@ def build_fichajes(
     ).drop("__dept_emp")
 
     # F8 — unmatched departments become "No asignado" BEFORE the fuzzy
-    # lookup (function_app.py:341), so they fuzzy-match nothing → null id.
+    # lookup (function_app.py:341), so they take whatever id that literal
+    # matches. J6 — this one lookup stays on the fact rows: the fill makes
+    # its input a fact-side value, and its dim (departments) is small.
     fact = fact.na.fill({"department_name": "No asignado"})
-
-    # J6 — fuzzy department lookup (function_app.py:345)
     fact = fuzzy_containment_lookup(
         fact, dim_departamento, "department_name", "nombre", "departamento_id",
-        "departamento_id", fact_key="__row",
-    ).drop("department_name", "__row")
+        "departamento_id",
+    ).drop("department_name")
 
     # P1/P5/F10 — select, rename, explicit double casts
     # (function_app.py:348-360)

@@ -3,7 +3,8 @@
 Faithful recomposition of ``function_app.py:148-315`` from the operator
 library, as ONE lazy DataFrame plan (the reference materializes ~14
 intermediate pandas frames; here Catalyst sees the whole tree and the only
-materialization is the sink).
+materialization is the sink). Building it runs two small jobs: the plan-time
+probes of the two fuzzy lookups' dims.
 
 Intended-semantics divergences from the reference, per SURVEY.md §7.2:
 - All derived columns are computed on the ``time_entries`` lineage BEFORE
@@ -44,9 +45,10 @@ def build_imputaciones(
 ) -> DataFrame:
     """time_entries → Fact_Imputaciones rows (grain: empleado_id, fecha, tarea).
 
-    Dataflow (SURVEY §3.2): derive → J1/J2 inner employees → J4 inner
-    empleado-map(A1) → J6 fuzzy empresa → J5 left latest-dept(A2) → J6 fuzzy
-    departamento → select → fillna → A3 group-by-sum.
+    Dataflow (SURVEY §3.2): derive → J1/J2 inner employees (J6 fuzzy
+    empresa on the employees rows) → J4 inner empleado-map(A1) → J5 left
+    latest-dept(A2; J6 fuzzy departamento on its rows) → fillna → A3
+    group-by-sum.
     """
     # Derivations on one lineage (P2/P3, F2/F3/F6; function_app.py:154-181)
     te = time_entries.select(
@@ -62,12 +64,20 @@ def build_imputaciones(
     )
 
     # J1+J2(+J3) folded into one broadcast inner join on employee_id
-    # (function_app.py:163, 174, 224 — same key, same table, three merges)
-    emp = employees.select(
-        F.col("id"),
-        F.col("company_name").alias("cliente"),
-        F.col("price_per_hour").alias("precio_hora"),
-        F.col("nid"),
+    # (function_app.py:163, 174, 224 — same key, same table, three merges).
+    # J6 — the fuzzy company lookup (function_app.py:258) runs on the
+    # employees rows, before the join: a per-row map of build-side columns
+    # commutes with the equi-join, so each employee is matched once
+    # instead of once per time entry. "First" is the ORIGINAL dim row
+    # order (dim read order made explicit as empresa_id).
+    emp = fuzzy_containment_lookup(
+        employees.select(
+            F.col("id"),
+            F.col("company_name").alias("cliente"),
+            F.col("price_per_hour").alias("precio_hora"),
+            F.col("nid"),
+        ),
+        dim_empresa, "cliente", "nombre", "empresa_id", "empresa_id",
     )
     fact = te.join(F.broadcast(emp), te.employee_id == emp.id, "inner").drop("id")
 
@@ -84,31 +94,26 @@ def build_imputaciones(
         F.broadcast(empleado_map), fact.nid == empleado_map.DNI, "inner"
     ).drop("DNI")
 
-    # J6 — fuzzy company lookup on the ORIGINAL dim row order
-    # (function_app.py:258; dim read order made explicit as empresa_id).
-    fact = fact.withColumn("__row", F.monotonically_increasing_id())
-    fact = fuzzy_containment_lookup(
-        fact, dim_empresa, "cliente", "nombre", "empresa_id", "empresa_id",
-        fact_key="__row",
-    )
-
     # A2 + J5 — latest department assignment per employee, left join
     # (function_app.py:263-266), deterministic tie-break on department_name.
-    latest_dept = latest_per_key(
-        department_assignations.select("employee_id", "department_name", "updated_at"),
-        ["employee_id"],
-        [F.desc("updated_at"), F.desc("department_name")],
-        keep=["employee_id", "department_name"],
-    ).withColumnRenamed("employee_id", "__dept_emp")
+    # J6 — the fuzzy department lookup (function_app.py:268) runs on the
+    # latest-department rows, one per employee; a time entry without an
+    # assignment gets the null id that looking up its null name gives.
+    latest_dept = fuzzy_containment_lookup(
+        latest_per_key(
+            department_assignations.select(
+                "employee_id", "department_name", "updated_at"
+            ),
+            ["employee_id"],
+            [F.desc("updated_at"), F.desc("department_name")],
+            keep=["employee_id", "department_name"],
+        ),
+        dim_departamento, "department_name", "nombre", "departamento_id",
+        "departamento_id",
+    ).select(F.col("employee_id").alias("__dept_emp"), "departamento_id")
     fact = fact.join(
         F.broadcast(latest_dept), fact.employee_id == F.col("__dept_emp"), "left"
     ).drop("__dept_emp")
-
-    # J6 — fuzzy department lookup (function_app.py:268)
-    fact = fuzzy_containment_lookup(
-        fact, dim_departamento, "department_name", "nombre", "departamento_id",
-        "departamento_id", fact_key="__row",
-    ).drop("department_name", "__row")
 
     # F8 — null fills (function_app.py:274)
     fact = fact.na.fill({"tarea": "", "etiqueta": "No especificada"})

@@ -1,7 +1,7 @@
 """End-to-end ETL runner — the engine's analog of the reference's single
 HTTP entry point (``POST /api/run_etl_imputations``, ``function_app.py:23-53``):
-validate a date window, build both fact pipelines, load them idempotently,
-report counts + elapsed time.
+validate a date window, build both fact pipelines and load them
+idempotently (two concurrent chains), report counts + elapsed time.
 
 CLI:
     python -m data_management_service_run_etl_imputations_spark.plans.run \
@@ -9,7 +9,7 @@ CLI:
         --output <dir for fact tables> \
         --from-date 2024-03-01 --to-date 2024-03-31
 
-The input directory must hold the six source tables (FIXTURES.md):
+The input directory must hold the seven source tables (FIXTURES.md):
 time_entries, employees, worked_hours, department_assignations,
 dim_empleado, dim_empresa, dim_departamento — as parquet (``<name>.parquet``)
 or csv (``<name>.csv``, explicit schemas applied).
@@ -18,11 +18,15 @@ or csv (``<name>.csv``, explicit schemas applied).
 from __future__ import annotations
 
 import argparse
+import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from data_management_service_run_etl_imputations_spark.plans.fichajes import (
     build_fichajes,
@@ -56,20 +60,33 @@ def validate_date(s: str) -> str:
     return s
 
 
-def load_sources(spark: SparkSession, input_dir: str) -> dict[str, DataFrame]:
-    import os
+def _concurrently(spark: SparkSession, calls: list) -> list:
+    """Run each zero-argument callable on its own thread; return their
+    results in order. Each thread starts with the caller's job group,
+    description and tags, so every job it submits is filed under them.
+    All calls finish before the first error, if any, is raised."""
+    with ThreadPoolExecutor(max_workers=len(calls)) as pool:
+        # one wrap per call: each wrap clones the caller's local properties,
+        # so a thread that sets its own job group leaves the others' alone
+        futures = [pool.submit(inheritable_thread_target(spark)(c)) for c in calls]
+    return [f.result() for f in futures]
 
-    out = {}
-    for name in SOURCE_TABLES:
+
+def load_sources(spark: SparkSession, input_dir: str) -> dict[str, DataFrame]:
+    """The seven source tables as DataFrames. Each parquet read runs a
+    one-task schema job, so the seven reads are submitted concurrently."""
+
+    def read(name: str) -> DataFrame:
         pq = os.path.join(input_dir, f"{name}.parquet")
         csv = os.path.join(input_dir, f"{name}.csv")
         if os.path.exists(pq):
-            out[name] = spark.read.parquet(pq)
-        elif os.path.exists(csv):
-            out[name] = spark.read.csv(csv, header=True, schema=FIXTURE_SCHEMAS[name])
-        else:
-            raise FileNotFoundError(f"source table {name} not found in {input_dir}")
-    return out
+            return spark.read.parquet(pq)
+        if os.path.exists(csv):
+            return spark.read.csv(csv, header=True, schema=FIXTURE_SCHEMAS[name])
+        raise FileNotFoundError(f"source table {name} not found in {input_dir}")
+
+    frames = _concurrently(spark, [partial(read, name) for name in SOURCE_TABLES])
+    return dict(zip(SOURCE_TABLES, frames))
 
 
 def run_etl(
@@ -81,7 +98,12 @@ def run_etl(
 ) -> dict[str, int]:
     """Extract → transform → idempotent load for both fact tables.
     Returns appended-row counts (re-running the same window appends zeros,
-    reference semantics at ``function_app.py:305-312, 378-385``)."""
+    reference semantics at ``function_app.py:305-312, 378-385``).
+
+    The two facts are built and loaded as two concurrent chains. If either
+    chain fails, the error is raised once both have finished; the other
+    chain's append stays, and re-running the window loads what is missing,
+    as the idempotent load makes any partial run repairable."""
     validate_date(from_date)
     validate_date(to_date)
     src = load_sources(spark, input_dir)
@@ -92,23 +114,26 @@ def run_etl(
         F.to_date(F.to_timestamp("time_entry_in_datetime")).between(from_date, to_date)
     )
     wh = src["worked_hours"].filter(F.col("date").between(from_date, to_date))
-
-    imputaciones = build_imputaciones(
-        te, src["employees"], src["dim_empleado"], src["dim_empresa"],
-        src["dim_departamento"], src["department_assignations"],
-    )
-    fichajes = build_fichajes(
-        wh, src["employees"], src["dim_empleado"], src["dim_empresa"],
+    dims = (
+        src["employees"], src["dim_empleado"], src["dim_empresa"],
         src["dim_departamento"], src["department_assignations"],
     )
 
-    n_imp = incremental_insert_only(
-        imputaciones, f"{output_dir}/fact_imputaciones",
-        ["empleado_id", "fecha", "tarea"],
-    )
-    n_fic = incremental_insert_only(
-        fichajes, f"{output_dir}/fact_fichajes", ["fecha", "empleado_id"]
-    )
+    # builders and sink are read from the module globals at call time, so a
+    # wrapper installed on this module (a tracer, a test double) applies
+    def imputaciones() -> int:
+        return incremental_insert_only(
+            build_imputaciones(te, *dims), f"{output_dir}/fact_imputaciones",
+            ["empleado_id", "fecha", "tarea"],
+        )
+
+    def fichajes() -> int:
+        return incremental_insert_only(
+            build_fichajes(wh, *dims), f"{output_dir}/fact_fichajes",
+            ["fecha", "empleado_id"],
+        )
+
+    n_imp, n_fic = _concurrently(spark, [imputaciones, fichajes])
     return {"fact_imputaciones": n_imp, "fact_fichajes": n_fic}
 
 

@@ -27,13 +27,16 @@ def incremental_new_rows(
 
     Scale: left_anti on the composite key. Spark broadcasts ``existing``'s
     key projection when small; otherwise a shuffled anti-join — both fine.
+    The key projection is not deduplicated first: an anti-join's result
+    does not depend on how often a key occurs on its right side, so a
+    dedup would only add a shuffle stage.
     On Delta/Iceberg targets, swap for ``MERGE WHEN NOT MATCHED THEN INSERT``
     to make the read-filter-append atomic.
     """
     in_types = dict(incoming.dtypes)
     existing_keys = existing.select(
         *[F.col(k).cast(in_types[k]).alias(f"__ex_{k}") for k in keys]
-    ).dropDuplicates([f"__ex_{k}" for k in keys])
+    )
     # Null-safe equality: a null key component must match a stored null —
     # the reference's pandas tuple-isin treats NaN as equal
     # (function_app.py:308; pipeline B's empleado_id is nullable, :381),
