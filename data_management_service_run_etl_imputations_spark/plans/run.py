@@ -1,7 +1,7 @@
 """End-to-end ETL runner — the engine's analog of the reference's single
 HTTP entry point (``POST /api/run_etl_imputations``, ``function_app.py:23-53``):
-validate a date window, build both fact pipelines and load them
-idempotently (two concurrent chains), report counts + elapsed time.
+validate a date window, build both fact pipelines, load them idempotently,
+report counts + elapsed time.
 
 CLI:
     python -m data_management_service_run_etl_imputations_spark.plans.run \
@@ -64,11 +64,17 @@ def _concurrently(spark: SparkSession, calls: list) -> list:
     """Run each zero-argument callable on its own thread; return their
     results in order. Each thread starts with the caller's job group,
     description and tags, so every job it submits is filed under them.
-    All calls finish before the first error, if any, is raised."""
+    All calls finish before an error is raised: the first failing call's,
+    with every other failure attached to it as a note."""
     with ThreadPoolExecutor(max_workers=len(calls)) as pool:
         # one wrap per call: each wrap clones the caller's local properties,
         # so a thread that sets its own job group leaves the others' alone
         futures = [pool.submit(inheritable_thread_target(spark)(c)) for c in calls]
+    errors = [e for e in (f.exception() for f in futures) if e is not None]
+    if errors:
+        for other in errors[1:]:
+            errors[0].add_note(f"also failed: {type(other).__name__}: {other}")
+        raise errors[0]
     return [f.result() for f in futures]
 
 
@@ -99,11 +105,9 @@ def run_etl(
     """Extract → transform → idempotent load for both fact tables.
     Returns appended-row counts (re-running the same window appends zeros,
     reference semantics at ``function_app.py:305-312, 378-385``).
-
-    The two facts are built and loaded as two concurrent chains. If either
-    chain fails, the error is raised once both have finished; the other
-    chain's append stays, and re-running the window loads what is missing,
-    as the idempotent load makes any partial run repairable."""
+    If fichajes fails after imputaciones has appended, re-running the
+    window loads what is missing: the idempotent load makes a partial run
+    repairable."""
     validate_date(from_date)
     validate_date(to_date)
     src = load_sources(spark, input_dir)
@@ -119,21 +123,14 @@ def run_etl(
         src["dim_departamento"], src["department_assignations"],
     )
 
-    # builders and sink are read from the module globals at call time, so a
-    # wrapper installed on this module (a tracer, a test double) applies
-    def imputaciones() -> int:
-        return incremental_insert_only(
-            build_imputaciones(te, *dims), f"{output_dir}/fact_imputaciones",
-            ["empleado_id", "fecha", "tarea"],
-        )
-
-    def fichajes() -> int:
-        return incremental_insert_only(
-            build_fichajes(wh, *dims), f"{output_dir}/fact_fichajes",
-            ["fecha", "empleado_id"],
-        )
-
-    n_imp, n_fic = _concurrently(spark, [imputaciones, fichajes])
+    n_imp = incremental_insert_only(
+        build_imputaciones(te, *dims), f"{output_dir}/fact_imputaciones",
+        ["empleado_id", "fecha", "tarea"],
+    )
+    n_fic = incremental_insert_only(
+        build_fichajes(wh, *dims), f"{output_dir}/fact_fichajes",
+        ["fecha", "empleado_id"],
+    )
     return {"fact_imputaciones": n_imp, "fact_fichajes": n_fic}
 
 

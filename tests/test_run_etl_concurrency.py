@@ -1,9 +1,9 @@
-"""``plans.run.run_etl`` reads its sources and runs its two fact chains
-(build + insert-only append) on worker threads. These tests pin what the
-caller can rely on: every job is filed under the caller's job group, a
-thread's own job group stays its own, a failing chain is raised only
-after the other has finished and left no thread behind, and the loaded
-tables equal the serial composition.
+"""``plans.run.run_etl`` reads its seven sources on worker threads, then
+builds and loads the two facts. These tests pin what the caller can rely
+on: every job is filed under the caller's job group, a thread's own job
+group stays its own, every failing read is reported, a failing fichajes
+chain leaves imputaciones loaded and no thread behind, and the loaded
+tables equal the serial ``build_*`` + ``incremental_insert_only``.
 """
 
 from __future__ import annotations
@@ -76,8 +76,8 @@ def test_caller_job_group_holds_every_job(spark, input_dir, tmp_path):
 
 
 def test_threads_set_their_own_job_groups(spark):
-    """A chain that sets its own job group (as a tracer's span does) moves
-    neither the other chain's jobs nor the caller's."""
+    """A thread that sets its own job group (as a tracer's span does) moves
+    neither another thread's jobs nor the caller's."""
     sc = spark.sparkContext
     groups = [f"g{i}" for i in range(8)]  # more threads than cores
     all_set = threading.Barrier(len(groups), timeout=60)
@@ -100,7 +100,18 @@ def test_threads_set_their_own_job_groups(spark):
             sc.setLocalProperty(p, None)
 
 
-def test_failing_chain_raises_after_the_other_loaded(spark, input_dir, tmp_path, monkeypatch):
+def test_every_failing_read_is_reported(spark, tmp_path):
+    """All seven reads fail on an empty directory: the first is raised and
+    the other six ride along as notes, not dropped."""
+    with pytest.raises(FileNotFoundError, match="time_entries") as ei:
+        run.load_sources(spark, str(tmp_path))
+    notes = getattr(ei.value, "__notes__", [])
+    assert len(notes) == len(run.SOURCE_TABLES) - 1
+    for name in run.SOURCE_TABLES[1:]:
+        assert any(f"source table {name} not found" in n for n in notes)
+
+
+def test_failing_fichajes_leaves_imputaciones_loaded(spark, input_dir, tmp_path, monkeypatch):
     clean = run.run_etl(spark, input_dir, str(tmp_path / "clean"), *WINDOW)
     out = str(tmp_path / "out")
 
@@ -125,7 +136,7 @@ def test_failing_chain_raises_after_the_other_loaded(spark, input_dir, tmp_path,
 
 
 def test_tables_equal_serial_composition(spark, input_dir, tmp_path):
-    counts = run.run_etl(spark, input_dir, str(tmp_path / "concurrent"), *WINDOW)
+    counts = run.run_etl(spark, input_dir, str(tmp_path / "run_etl"), *WINDOW)
 
     src = {n: spark.read.parquet(f"{input_dir}/{n}.parquet") for n in run.SOURCE_TABLES}
     te = src["time_entries"].filter(
@@ -143,6 +154,6 @@ def test_tables_equal_serial_composition(spark, input_dir, tmp_path):
     }
     assert counts == want
     for t in want:
-        got = spark.read.parquet(str(tmp_path / "concurrent" / t))
+        got = spark.read.parquet(str(tmp_path / "run_etl" / t))
         assert got.schema == spark.read.parquet(f"{serial}/{t}").schema
-        assert _table(spark, str(tmp_path / "concurrent" / t)) == _table(spark, f"{serial}/{t}")
+        assert _table(spark, str(tmp_path / "run_etl" / t)) == _table(spark, f"{serial}/{t}")
