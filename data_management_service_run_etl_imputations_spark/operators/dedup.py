@@ -307,9 +307,10 @@ def minhash_signatures(
     shingles → one xxhash64 per (doc, shingle) row → num_perm flat
     ``(a·h+b) mod p`` columns → ``groupBy(id).agg(min × num_perm)`` → array.
     Everything is plain column arithmetic inside whole-stage codegen with
-    map-side partial mins; the equivalent array_min(transform(...))×32
-    expression is interpreted AND re-evaluates the shingle pipeline per
-    permutation (no CSE across array_min calls) — measured 30× slower.
+    map-side partial mins; the equivalent higher-order expression (an
+    array minimum over a transform, once per permutation) is interpreted
+    AND re-evaluates the shingle pipeline per permutation (no common
+    subexpression elimination across the calls) — measured 30× slower.
     Operands are reduced below 2^31 so products stay exact in int64.
     """
     params = _perm_params(num_perm, seed)
@@ -533,84 +534,6 @@ def simhash_near_duplicates(
 # --- near-dup clustering (connected components) -------------------------------
 
 
-def connected_components(
-    nodes: DataFrame,
-    edges: DataFrame,
-    id_col: str = "id",
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-    max_iter: int = 15,
-) -> DataFrame:
-    """Connected components by iterative min-label propagation: every node's
-    label converges to the minimum node id reachable through the edge set.
-    Returns (``id_col``, component). Nodes with no edges are their own
-    component — the full ``nodes`` frame is labeled, not just edge
-    endpoints.
-
-    This is the cluster-assignment step of a dedup pipeline: candidate
-    pairs (MinHash/shingle/SimHash) become transitive duplicate groups, and
-    ``component`` is the canonical (minimum) doc id to keep.
-
-    Scale posture: each iteration is one symmetric-edge join + one min
-    aggregate — all shuffles on the node id key, reusable partitioning.
-    Rounds needed = graph diameter (near-dup clusters are shallow — single
-    digits); each round's frame is ``localCheckpoint``-ed to cut lineage
-    growth, and convergence is detected with a count of changed labels
-    (one action per round, the standard Spark trade for iterative
-    algorithms; GraphX/GraphFrames' Pregel loop does the same). For
-    adversarially deep graphs switch to the large-star/small-star
-    alternation, which converges in O(log n) rounds.
-    """
-    labels = nodes.select(F.col(id_col).alias("id"), F.col(id_col).alias("component"))
-    sym = (
-        edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .unionByName(
-            edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    # max_iter useful rounds plus one confirmation round: convergence is
-    # only observable as a round with zero changes, so a graph whose labels
-    # finalize exactly on round max_iter still needs one more (no-op) pass
-    # to prove it — without it a correct result would be rejected.
-    converged = False
-    changed = -1
-    for _ in range(max_iter + 1):
-        neighbor_min = (
-            sym.join(labels, sym.src == labels.id)
-            .groupBy("dst")
-            .agg(F.min("component").alias("nmin"))
-        )
-        new_labels = (
-            labels.join(neighbor_min, labels.id == neighbor_min.dst, "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("component"), F.coalesce(F.col("nmin"), F.col("component"))
-                ).alias("component"),
-                F.col("component").alias("__old"),
-            )
-            .localCheckpoint()
-        )
-        changed = new_labels.filter(F.col("component") != F.col("__old")).count()
-        labels = new_labels.drop("__old")
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        # Labels were still moving after max_iter useful rounds: returning
-        # the partially-propagated labels would silently split long
-        # path-shaped clusters into wrong components. Fail loudly — the
-        # caller raises max_iter or switches to large-star/small-star.
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} iterations "
-            f"({changed} labels still changing); raise max_iter (graph "
-            "diameter exceeds it) or use large-star/small-star alternation"
-        )
-    return labels.select(F.col("id").alias(id_col), "component")
-
-
 def connected_components_star(
     nodes: DataFrame,
     edges: DataFrame,
@@ -621,10 +544,15 @@ def connected_components_star(
 ) -> DataFrame:
     """Connected components by alternating large-star / small-star edge
     rewrites (Kiveris et al. 2014, "Connected Components in MapReduce and
-    Beyond" — public). Converges in O(log n) ROUNDS REGARDLESS OF GRAPH
-    DIAMETER, vs min-label propagation's O(diameter): the scale path for
-    adversarially deep graphs (long chains of pairwise near-dups), where
-    propagation would need thousands of rounds.
+    Beyond" — public). Every node's ``component`` is the minimum node id
+    reachable through the edge set. This is the cluster-assignment step of
+    a dedup pipeline: candidate pairs (MinHash/shingle/SimHash) become
+    transitive duplicate groups, and ``component`` is the canonical doc id
+    to keep.
+
+    Converges in O(log n) ROUNDS REGARDLESS OF GRAPH DIAMETER, where
+    min-label propagation needs O(diameter) rounds — thousands for
+    adversarially deep graphs (long chains of pairwise near-dups).
 
     Per round, two window-aggregate + projection passes (each one shuffle
     on the node key, no join):
@@ -634,8 +562,8 @@ def connected_components_star(
       re-attaches to m(u) — flattens local stars.
     At the fixed point the edge set IS the component star (child →
     component-min). Convergence is detected by an (edge count, xxhash64
-    sum) fingerprint staying constant across a round — one cheap aggregate
-    action per round; the astronomically-unlikely hash-sum collision is
+    xor) fingerprint staying constant across a round — one cheap aggregate
+    action per round; the astronomically-unlikely hash collision is
     accepted (the result remains a valid partition refinement, and catalog
     use is oracle-checked).
 

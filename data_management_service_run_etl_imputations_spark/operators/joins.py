@@ -7,11 +7,13 @@ is a case-insensitive substring of the fact string; null when nothing
 matches. The reference runs it as an O(|fact|·|dim|) Python ``iterrows``
 loop applied per fact row (``function_app.py:258, 268, 335, 345``).
 
-Spark-first rendering: a broadcast theta-join (non-equi containment
-predicate) + a first-match-wins window on the dim's stable order column.
-Everything stays JVM-side / codegen — no Python in the hot path — and the
-fact side streams: at 100 TB the cost is one broadcast of a ≤10⁴-row dim
-and one narrow window over matches.
+Spark-first rendering, two strategies picked by dim size: a small dim
+unrolls into one sorted ``coalesce(CASE WHEN instr(...) ...)`` projection
+(no join node, no shuffle); a larger dim — or a small one the chain
+cannot encode exactly — takes a broadcast theta-join (non-equi
+containment predicate) + a first-match-wins ``min(struct(order, id))``
+aggregate. Everything stays JVM-side / codegen — no Python in the hot
+path — and the fact side streams.
 """
 
 from __future__ import annotations
@@ -21,10 +23,20 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # Dim id types whose values str() renders in a form Spark casts back
-# exactly; a dim with any other id type takes the struct-min form.
+# exactly; a dim with any other id type takes the theta-join path.
 _LITERAL_ID_TYPES = (
     T.StringType, T.IntegralType, T.BooleanType, T.FractionalType, T.DateType,
 )
+
+
+def _fresh_name(name: str, taken: list[str]) -> str:
+    """``name`` with underscores prepended until it matches none of
+    ``taken`` — compared case-insensitively, as Spark resolves columns —
+    so a temporary column never clobbers or shadows a real one."""
+    lowered = {c.lower() for c in taken}
+    while name.lower() in lowered:
+        name = f"_{name}"
+    return name
 
 
 def _sql_literal(v, sql_type: str = "string") -> str:
@@ -75,11 +87,12 @@ def fuzzy_containment_lookup(
        about six py4j ``Column`` calls per dim row: names are written as
        hex literals (parsed alike under any
        ``spark.sql.parser.escapedStringLiterals``), ids as literals cast to
-       the dim's id type. A dim with a null id, a NaN order, or an id
-       type outside ``_LITERAL_ID_TYPES`` takes an equivalent struct-min
-       form instead.
+       the dim's id type.
     2. **Theta-join path** (larger dims): broadcast non-equi join + a
-       ``min_by`` hash aggregate to keep the first match per fact row.
+       ``min(struct(order, id))`` hash aggregate to keep the first match
+       per fact row. A small dim the chain cannot encode exactly — one
+       with a null id, a NaN order, or an id type outside
+       ``_LITERAL_ID_TYPES`` — takes this path too.
     """
     if out_col in fact.columns:
         raise ValueError(f"out_col {out_col!r} already exists on the fact side")
@@ -102,108 +115,81 @@ def fuzzy_containment_lookup(
         dim_rows = [r for r in dim_rows if r[1] is not None]
         if not dim_rows:
             return fact.withColumn(out_col, F.lit(None).cast(id_type))
-        has_nan_order = any(
-            isinstance(r[2], float) and r[2] != r[2] for r in dim_rows
+    # The chain below covers dims whose ids are all non-null literals and
+    # whose orders sort alike in Python and Spark. A NULL dim id must
+    # surface as a null result when its row is the first match, which
+    # coalesce would skip; Python's sorted() is unordered w.r.t. NaN while
+    # Spark sorts NaN above every number. Such dims take the theta join.
+    if (
+        dim_rows is not None
+        and isinstance(dim.schema[dim_id].dataType, _LITERAL_ID_TYPES)
+        and all(r[0] is not None for r in dim_rows)
+        and not any(isinstance(r[2], float) and r[2] != r[2] for r in dim_rows)
+    ):
+        # Sorted-COALESCE encoding. "First match by dim order" = min over
+        # (ord, id) structs; with the rows SORTED at plan time by the same
+        # (nulls-first ord, id) key Spark's struct ordering uses, that min
+        # is simply the first matching branch. The chain contains NO
+        # higher-order functions, so the projection stays inside
+        # WholeStageCodegen, it SHORT-CIRCUITS at the first match instead
+        # of evaluating every branch, and lower(fact_text) is hoisted into
+        # one explicit projection instead of once per branch — measured
+        # ~1.25× over a per-branch array-of-structs minimum on the j6
+        # bench shape (0.42→0.32 s min interleaved).
+        ordered = sorted(dim_rows, key=lambda r: (r[2] is not None, r[2], r[0]))
+        low = _fresh_name("__fuzzy_lowered", fact.columns)
+        branches = [
+            f"CASE WHEN instr(`{low}`, {_sql_literal(str(r[1]).lower())})"
+            f" > 0 THEN {_sql_literal(r[0], id_type)} END"
+            for r in ordered
+        ]
+        branches.append(f"CAST(NULL AS {id_type})")
+        return (
+            fact.withColumn(low, F.lower(F.col(fact_text)))
+            .withColumn(out_col, F.expr(f"coalesce({', '.join(branches)})"))
+            .drop(low)
         )
-        if (
-            isinstance(dim.schema[dim_id].dataType, _LITERAL_ID_TYPES)
-            and all(r[0] is not None for r in dim_rows)
-            and not has_nan_order
-        ):
-            # Sorted-COALESCE encoding (the common case: non-null dim ids).
-            # "First match by dim order" = min over (ord, id) structs; with
-            # the rows SORTED at plan time by the same (nulls-first ord, id)
-            # key Spark's struct ordering uses, that min is simply the first
-            # matching branch — so a coalesce(when(contains, id), …) chain
-            # is exactly equivalent. Unlike the array_min(filter(array(…)))
-            # form it contains NO higher-order functions, so the projection
-            # stays inside WholeStageCodegen (the lambda forms execute
-            # interpreted), it SHORT-CIRCUITS at the first match instead of
-            # evaluating every branch, and lower(fact_text) is hoisted into
-            # one explicit projection instead of once per branch — measured
-            # ~1.25× on the j6 bench shape (0.42→0.32 s min interleaved;
-            # scan cost dominates at that text size, the projection itself
-            # shrinks much more).
-            # NaN order values are routed to the struct-min fallback
-            # above (Python sorted() is unordered w.r.t. NaN while Spark
-            # sorts NaN greater than any non-NaN — the branch order here
-            # could disagree with the theta path's min(struct); ADVICE
-            # r12), so this key sees only None/comparable orders.
-            ordered = sorted(
-                dim_rows,
-                key=lambda r: (r[2] is not None, r[2], r[0]),
-            )
-            low = "__fuzzy_lowered"
-            while low in fact.columns:
-                low = f"_{low}"  # never clobber a real fact column
-            branches = [
-                f"CASE WHEN instr(`{low}`, {_sql_literal(str(r[1]).lower())})"
-                f" > 0 THEN {_sql_literal(r[0], id_type)} END"
-                for r in ordered
-            ]
-            branches.append(f"CAST(NULL AS {id_type})")
-            return (
-                fact.withColumn(low, F.lower(F.col(fact_text)))
-                .withColumn(out_col, F.expr(f"coalesce({', '.join(branches)})"))
-                .drop(low)
-            )
-        # A NULL dim id must surface as a null lookup result when its row
-        # is the first match — coalesce would skip that branch — so the
-        # struct-min form remains for that (degenerate) dim shape, and for
-        # the NaN orders and id types the coalesce chain does not cover.
-        lowered = F.lower(F.col(fact_text))
-        candidates = F.array(
-            *[
-                F.when(
-                    F.instr(lowered, F.lit(str(r[1]).lower())) > 0,
-                    F.struct(
-                        F.lit(r[2]).alias("o"),
-                        F.lit(r[0]).cast(id_type).alias("i"),
-                    ),
-                )
-                for r in dim_rows
-            ]
-        )
-        first_match = F.array_min(F.array_compact(candidates))
-        return fact.withColumn(out_col, first_match["i"])
+    # Temporary names never clash with a fact column (compared as Spark
+    # resolves them), so every fact column survives the aggregate as is.
+    dim_id_c, dim_text_c, dim_order_c, best, row_id = (
+        _fresh_name(n, fact.columns)
+        for n in ("__dim_id", "__dim_text", "__dim_order", "__best", "__fuzzy_row_id")
+    )
     drop_key = fact_key is None
     if drop_key:
-        fact_key = "__fuzzy_row_id"
+        fact_key = row_id
         fact = fact.withColumn(fact_key, F.monotonically_increasing_id())
 
     d = dim.select(
-        F.col(dim_id).alias("__dim_id"),
-        F.lower(F.col(dim_text)).alias("__dim_text"),
-        F.col(order_col).alias("__dim_order"),
+        F.col(dim_id).alias(dim_id_c),
+        F.lower(F.col(dim_text)).alias(dim_text_c),
+        F.col(order_col).alias(dim_order_c),
     )
     joined = fact.join(
         F.broadcast(d),
-        F.instr(F.lower(F.col(fact_text)), F.col("__dim_text")) > 0,
+        F.instr(F.lower(F.col(fact_text)), F.col(dim_text_c)) > 0,
         "left",
     )
     # First match wins: argmin over the dim order as a hash aggregate with
     # map-side partial combine (measured ~8× faster than the equivalent
     # row_number window at sf0.1). min(struct(order, id)) — NOT
     # min_by(id, order) — so the theta path agrees with the projection
-    # path's struct-min semantics on EVERY input: a null order sorts first
-    # (Spark struct ordering is nulls-first ascending; min_by would skip
-    # the row — the two strategies used to diverge there), and order ties
-    # break deterministically by id (min_by picks an arbitrary one). A
-    # no-match fact row survives the left join as one all-null dim row →
-    # min(struct(null, null)) → null id (the reference's None,
-    # function_app.py:256). Other fact columns are constant within the
-    # group, so first() is exact.
+    # path's sorted chain on EVERY input: a null order sorts first (Spark
+    # struct ordering is nulls-first ascending; min_by would skip the
+    # row), and order ties break deterministically by id (min_by picks an
+    # arbitrary one). A no-match fact row survives the left join as one
+    # all-null dim row → min(struct(null, null)) → null id (the
+    # reference's None, function_app.py:256). Other fact columns are
+    # constant within the group, so first() is exact.
     other_cols = [c for c in fact.columns if c != fact_key]
     out = joined.groupBy(fact_key).agg(
         F.min(
-            F.struct(
-                F.col("__dim_order").alias("o"), F.col("__dim_id").alias("i")
-            )
-        ).alias("__best"),
+            F.struct(F.col(dim_order_c).alias("o"), F.col(dim_id_c).alias("i"))
+        ).alias(best),
         *[F.first(c).alias(c) for c in other_cols],
     )
     keep = [c for c in fact.columns if not (drop_key and c == fact_key)]
-    return out.select(*keep, F.col("__best")["i"].alias(out_col))
+    return out.select(*keep, F.col(best)["i"].alias(out_col))
 
 
 def fuzzy_containment_lookup_udf(

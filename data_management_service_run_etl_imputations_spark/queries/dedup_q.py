@@ -381,9 +381,7 @@ def dedup_embedding_lsh_route(spark: SparkSession, sf_dir: str) -> DataFrame:
     return embedding_near_duplicates_lsh(corpus, threshold=0.9)
 
 
-@register(
-    "dedup_cluster_components",
-    oracle=f"""
+_COMPONENTS_ORACLE = f"""
         WITH RECURSIVE {_NGRAM_PAIR_CTES},
         edges AS (
             SELECT id_a AS src, id_b AS dst FROM pairs
@@ -397,54 +395,22 @@ def dedup_embedding_lsh_route(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         SELECT src AS doc_id, MIN(dst) AS component
         FROM reach GROUP BY src
-    """,
-)
+    """
+
+
+@register("dedup_cluster_components_star", oracle=_COMPONENTS_ORACLE)
+@register("dedup_cluster_components", oracle=_COMPONENTS_ORACLE)
 def dedup_cluster_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup cluster assignment: candidate pairs (8-word-shingle Jaccard
     ≥ 0.8) become transitive duplicate groups via connected components
-    (min-label propagation); every document gets the minimum reachable
-    doc_id as its canonical ``component``. The keep-one-per-cluster policy
-    of a corpus dedup pipeline is then ``filter(doc_id == component)``.
-    Oracle: recursive reachability CTE over the same edge set."""
-    from data_management_service_run_etl_imputations_spark.operators.dedup import (
-        connected_components,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = ngram_jaccard_pairs(docs, "doc_id", "text", k=8, threshold=0.8)
-    return connected_components(
-        docs.select("doc_id"),
-        pairs,
-        id_col="doc_id",
-        src_col="id_a",
-        dst_col="id_b",
-    )
-
-
-@register(
-    "dedup_cluster_components_star",
-    oracle=f"""
-        WITH RECURSIVE {_NGRAM_PAIR_CTES},
-        edges AS (
-            SELECT id_a AS src, id_b AS dst FROM pairs
-            UNION
-            SELECT id_b, id_a FROM pairs
-        ),
-        reach(src, dst) AS (
-            SELECT doc_id, doc_id FROM documents
-            UNION
-            SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-        )
-        SELECT src AS doc_id, MIN(dst) AS component
-        FROM reach GROUP BY src
-    """,
-)
-def dedup_cluster_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same cluster assignment as ``dedup_cluster_components`` but via the
-    large-star/small-star alternation — O(log n) rounds independent of
-    graph diameter, the variant that survives adversarially chain-shaped
-    near-dup graphs at corpus scale. Both implementations must agree with
-    the recursive-reachability oracle on the same candidate-pair edges."""
+    (large-star/small-star alternation — O(log n) rounds whatever the
+    graph's diameter, so adversarially chain-shaped near-dup graphs cost no
+    more rounds than shallow ones); every document gets the minimum
+    reachable doc_id as its canonical ``component``. The
+    keep-one-per-cluster policy of a corpus dedup pipeline is then
+    ``filter(doc_id == component)``. Registered under both catalog names
+    the engine has carried for this assignment. Oracle: recursive
+    reachability CTE over the same edge set."""
     from data_management_service_run_etl_imputations_spark.operators.dedup import (
         connected_components_star,
     )
@@ -507,17 +473,17 @@ def dedup_pipeline_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     document, with its cluster size for auditability.
 
     Plan shape: the only data-scale shuffles are the shingle-hash bucket
-    join, the CC label-propagation rounds (checkpointed), and one window
+    join, the CC large-star/small-star rounds (checkpointed), and one window
     per component for the argmax — no all-pairs anywhere. Oracle:
     recursive-reachability CTE + the same argmax policy in SQL."""
     from data_management_service_run_etl_imputations_spark.operators.dedup import (
-        connected_components,
+        connected_components_star,
     )
     from pyspark.sql import Window
 
     docs = load_table(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs(docs, "doc_id", "text", k=8, threshold=0.8)
-    comp = connected_components(
+    comp = connected_components_star(
         docs.select("doc_id"), pairs,
         id_col="doc_id", src_col="id_a", dst_col="id_b",
     )

@@ -185,136 +185,13 @@ def incremental_insert_only(
     return n
 
 
-def merge_upsert(
-    incoming: DataFrame,
-    path: str,
-    keys: list[str],
-    fmt: str = "parquet",
-) -> dict[str, int]:
-    """Full upsert (UPDATE existing keys + INSERT new ones) against a
-    path-backed table — the engine's superset of the reference's
-    insert-only S7 for users who need updates.
-
-    Rendering without a transactional format: existing rows whose key is
-    NOT in the batch survive (null-safe anti-join), the whole batch wins
-    for its keys, and the union rewrites the target. At scale, on plain
-    parquet, restrict the rewrite with partition-overwrite
-    (``partitionOverwriteMode=dynamic``) or use Delta/Iceberg MERGE —
-    rewrite-all is the correctness baseline, not the 100 TB path.
-    Returns {"updated": n, "inserted": n}.
-    """
-    spark = incoming.sparkSession
-    try:
-        existing = spark.read.format(fmt).load(path)
-    except Exception:
-        existing = None
-
-    if existing is None:
-        n = incoming.count()
-        incoming.write.mode("overwrite").format(fmt).save(path)
-        return {"updated": 0, "inserted": n}
-
-    untouched = incremental_new_rows(existing, incoming, keys)
-    merged = untouched.unionByName(incoming.select(*existing.columns)).cache()
-    total = merged.count()
-    n_untouched = untouched.count()
-    n_existing = existing.count()
-    # Rewrite via a temp location: the plan reads the target path, so an
-    # in-place overwrite would clobber its own input mid-job.
-    tmp = path + "__rewrite"
-    merged.write.mode("overwrite").format(fmt).save(tmp)
-    merged.unpersist()
-    import shutil
-
-    shutil.rmtree(path)
-    shutil.move(tmp, path)
-    n_updated = n_existing - n_untouched
-    return {"updated": n_updated, "inserted": total - n_untouched - n_updated}
-
-
-def merge_upsert_partitioned(
-    incoming: DataFrame,
-    path: str,
-    keys: list[str],
-    partition_col: str,
-    fmt: str = "parquet",
-) -> dict[str, int]:
-    """Upsert against a PARTITIONED path-backed table, rewriting only the
-    partitions the batch touches — the 100 TB rendering of
-    :func:`merge_upsert` (which rewrites the whole target and exists as the
-    correctness baseline).
-
-    Mechanics: ``spark.sql.sources.partitionOverwriteMode=dynamic`` makes an
-    overwrite replace exactly the partitions present in the written frame.
-    We write (existing rows of touched partitions that lose to the batch ∪
-    the batch), so untouched partitions are never read past their key
-    projection and never rewritten — a daily upsert over a date-partitioned
-    fact touches |batch dates| directories no matter how large the table is.
-    ``partition_col`` must be one of ``keys``' functional dependents (a row's
-    partition value may not change across versions; enforced by construction
-    here since the batch row wins wholesale).
-
-    The merged frame is ``localCheckpoint``-ed before the write: the write
-    job would otherwise read the same files its commit replaces (Spark
-    rejects self-overwrite lineage). Checkpoint size ∝ touched partitions,
-    not the table.
-
-    VISIBILITY CAVEAT: the overwrite's commit phase replaces touched
-    partition directories one by one, so a concurrent reader scanning
-    during it can observe a mix of old and new partitions. Use
-    :func:`manifest_upsert_partitioned` when concurrent readers exist —
-    same partition-level rewrite economics, atomic manifest-rename
-    visibility.
-
-    Returns {"updated": n, "inserted": n}.
-    """
-    spark = incoming.sparkSession
-    try:
-        existing = spark.read.format(fmt).load(path)
-    except Exception:
-        existing = None
-
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    prev_mode = spark.conf.get(mode_key, "static")
-    if existing is None:
-        n = incoming.count()
-        incoming.write.mode("overwrite").partitionBy(partition_col).format(
-            fmt
-        ).save(path)
-        return {"updated": 0, "inserted": n}
-
-    # Static partition pruning: the touched-partition list is collected at
-    # plan time (bounded by the partition count of the batch — the same
-    # budget as a broadcast) so the existing-side scan prunes directories.
-    touched = [
-        r[0] for r in incoming.select(partition_col).distinct().collect()
-    ]
-    existing_touched = existing.filter(F.col(partition_col).isin(touched))
-    survivors = incremental_new_rows(existing_touched, incoming, keys)
-    merged = survivors.unionByName(
-        incoming.select(*existing.columns)
-    ).localCheckpoint()
-    n_survivors = survivors.count()
-    n_existing_touched = existing_touched.count()
-    n_batch = merged.count() - n_survivors
-    try:
-        spark.conf.set(mode_key, "dynamic")
-        merged.write.mode("overwrite").partitionBy(partition_col).format(
-            fmt
-        ).save(path)
-    finally:
-        spark.conf.set(mode_key, prev_mode)
-    n_updated = n_existing_touched - n_survivors
-    return {"updated": n_updated, "inserted": n_batch - n_updated}
-
-
 # --- manifest-committed partitioned table (atomic upsert) -----------------
 #
-# merge_upsert_partitioned above rewrites live partition directories with
-# dynamic partition overwrite: correct for a single writer, but a reader
-# scanning DURING the commit phase can observe some partitions new and some
-# old. The manifest table fixes that with the core idea of every
-# transactional table format (Delta's _delta_log, Iceberg's snapshots):
+# Rewriting live partition directories in place (dynamic partition
+# overwrite) is correct for a single writer, but a reader scanning DURING
+# the commit phase can observe some partitions new and some old. The
+# manifest table avoids that with the core idea of every transactional
+# table format (Delta's _delta_log, Iceberg's snapshots):
 #
 #   - data directories are IMMUTABLE — an upsert writes rewritten
 #     partitions into a fresh staging dir, never touching live files;
@@ -3070,8 +2947,7 @@ def manifest_upsert_partitioned(
     txn: "tuple[str, int] | None" = None,
     auto_compact_min_files: int | None = None,
 ) -> dict[str, int]:
-    """ATOMIC partition-level upsert: the scale-safe successor of
-    :func:`merge_upsert_partitioned` (reference semantic
+    """ATOMIC partition-level upsert (reference semantic
     ``function_app.py:305-312`` generalized to update+insert). Writes the
     merged content of every touched partition into an immutable staging
     directory, then publishes a new manifest with one exclusive-create

@@ -11,9 +11,8 @@ def test_connected_components_multihop_and_singletons(spark):
     """A-B, B-C chain collapses to one component (min id wins across hops);
     D-E is its own; F (no edges) stays a singleton labeled by itself."""
     from data_management_service_run_etl_imputations_spark.operators.dedup import (
-        connected_components,
+        connected_components_star,
     )
-    from pyspark.sql import functions as F
 
     nodes = spark.createDataFrame([(i,) for i in [1, 2, 3, 4, 5, 6]], "id LONG")
     edges = spark.createDataFrame(
@@ -21,16 +20,16 @@ def test_connected_components_multihop_and_singletons(spark):
     )
     out = {
         r.id: r.component
-        for r in connected_components(nodes, edges).collect()
+        for r in connected_components_star(nodes, edges).collect()
     }
     assert out == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 6: 6}
 
 
 def test_connected_components_long_chain_converges(spark):
-    """A 12-node path graph needs multiple propagation rounds; min label
+    """A 12-node path graph needs several star rounds; the min label
     must reach the far end within the iteration cap."""
     from data_management_service_run_etl_imputations_spark.operators.dedup import (
-        connected_components,
+        connected_components_star,
     )
 
     n = 12
@@ -38,17 +37,17 @@ def test_connected_components_long_chain_converges(spark):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "id_a LONG, id_b LONG"
     )
-    out = {r.id: r.component for r in connected_components(nodes, edges).collect()}
+    out = {
+        r.id: r.component for r in connected_components_star(nodes, edges).collect()
+    }
     assert out == {i: 0 for i in range(n)}
 
 
 def test_connected_components_nonconvergence_raises(spark):
-    """Hitting max_iter with labels still moving must fail loudly, not
-    return partially-propagated (wrong) components (round-2 ADVICE)."""
-    import pytest
-
+    """Hitting max_iter with edges still moving must fail loudly, not
+    return partially-merged (wrong) components."""
     from data_management_service_run_etl_imputations_spark.operators.dedup import (
-        connected_components,
+        connected_components_star,
     )
 
     n = 10
@@ -57,7 +56,7 @@ def test_connected_components_nonconvergence_raises(spark):
         [(i, i + 1) for i in range(n - 1)], "id_a LONG, id_b LONG"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(nodes, edges, max_iter=2)
+        connected_components_star(nodes, edges, max_iter=1)
 
 
 def test_blocked_near_duplicates_equals_exact(spark):
@@ -152,19 +151,37 @@ def test_blocked_near_duplicates_adaptive_coarsening(spark):
     assert out_off == exact
 
 
-def test_connected_components_star_matches_propagation(spark):
+def _union_find_components(ids, edges):
+    """Pure-Python connected components: each id maps to the minimum id of
+    its component."""
+    parent = {i: i for i in ids}
+
+    def root(i):
+        while parent[i] != i:
+            parent[i] = parent[parent[i]]
+            i = parent[i]
+        return i
+
+    for a, b in edges:
+        ra, rb = root(a), root(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {i: root(i) for i in ids}
+
+
+def test_connected_components_star_matches_union_find(spark):
     """The O(log n)-round star alternation labels a long chain, multiple
-    components, and singletons identically to min-label propagation —
-    and needs far fewer rounds than the 40-node chain's diameter."""
+    components, and singletons exactly as a union-find does — and needs
+    far fewer rounds than the 40-node chain's diameter."""
     import random
 
     from data_management_service_run_etl_imputations_spark.operators.dedup import (
-        connected_components,
         connected_components_star,
     )
 
     n = 40
-    nodes = spark.createDataFrame([(i,) for i in range(n + 3)], "id LONG")
+    ids = list(range(n + 3))
+    nodes = spark.createDataFrame([(i,) for i in ids], "id LONG")
     # a 40-chain (diameter 39), one triangle, two singletons
     edges = [(i, i + 1) for i in range(n - 1)]
     edges += [(n, n + 1), (n + 1, n), (n, n)]  # dup + self-loop robustness
@@ -178,11 +195,7 @@ def test_connected_components_star_matches_propagation(spark):
     expect = {i: 0 for i in range(n)}
     expect.update({n: n, n + 1: n, n + 2: n + 2})
     assert star == expect
-    prop = {
-        r.id: r.component
-        for r in connected_components(nodes, edf, max_iter=45).collect()
-    }
-    assert star == prop
+    assert star == _union_find_components(ids, edges)
 
 
 def test_ivf_pq_recall_against_brute_force(spark, sf_dir):

@@ -8,7 +8,7 @@ are frequent; each property is checked against a pure-Python reference of
 
 from __future__ import annotations
 
-from datetime import date, timedelta
+from datetime import date, datetime, timedelta
 from decimal import Decimal
 
 import pytest
@@ -85,13 +85,13 @@ def test_fuzzy_lookup_deterministic_across_runs(spark, dim):
     assert runs[0] == runs[1] == runs[2]
 
 
-# --- r12: sorted-COALESCE projection encoding (operators/joins.py) ---------
+# --- sorted-COALESCE projection encoding (operators/joins.py) --------------
 # The projection path emits a coalesce(when...) chain (codegen-able,
 # short-circuiting) when every dim id is non-null, claiming exact
-# equivalence with min-over-(ord, id). These tests pin the equivalence on
-# the shapes where the encodings could diverge: duplicate ord (tie broken
-# by id), null ord (sorts FIRST, Spark struct ordering is nulls-first
-# ascending), and a null dim id (must fall back to the struct-min form,
+# equivalence with the theta path's min-over-(ord, id). These tests pin the
+# equivalence on the shapes where the encodings could diverge: duplicate
+# ord (tie broken by id), null ord (sorts FIRST, Spark struct ordering is
+# nulls-first ascending), and a null dim id (must take the theta join,
 # because coalesce would skip a winning null branch).
 
 
@@ -133,7 +133,7 @@ def test_fuzzy_null_ord_sorts_first(spark):
 def test_fuzzy_null_dim_id_falls_back_and_matches_theta(spark):
     # first-matching row has a NULL id: the lookup result must be null,
     # not the next matching row's id — the coalesce encoding cannot
-    # express that, so the operator must take the struct-min form here
+    # express that, so the operator must take the theta join here
     out = _both_paths(
         spark,
         [(None, "ab", 1), (2, "ab", 2)],
@@ -159,13 +159,13 @@ def test_fuzzy_projection_path_is_codegen_coalesce(spark):
     assert "array_min" not in plan and "lambdafunction" not in plan
 
 
-# --- r13 (ADVICE r12 hardening): NaN dim order + temp-column collision -----
+# --- degenerate dims, NaN dim order, temp-column collisions -----------------
 
 
 def test_fuzzy_nan_ord_routes_to_struct_min_and_matches_theta(spark):
     # Spark sorts NaN GREATER than any non-NaN while Python sorted() is
-    # unordered w.r.t. NaN — a NaN-order dim must take the struct-min
-    # form so both physical paths agree: ord=1.0 beats ord=NaN.
+    # unordered w.r.t. NaN — a NaN-order dim must take the theta join so
+    # both dim sizes agree: ord=1.0 beats ord=NaN.
     out = _both_paths(
         spark,
         [(5, "ab", float("nan")), (2, "ab", 1.0)],
@@ -175,22 +175,75 @@ def test_fuzzy_nan_ord_routes_to_struct_min_and_matches_theta(spark):
     assert out["projection"] == out["theta"] == {0: 2, 1: None}
 
 
-def test_fuzzy_fact_column_named_like_temp_is_preserved(spark):
-    # a fact column literally named __fuzzy_lowered must survive the
-    # projection path untouched (the temp name uniquifies around it)
+@pytest.mark.parametrize(
+    "dim_rows, dim_schema",
+    [
+        ([(None, "ab", 1), (2, "ab", 2), (3, "xy", 3)], "empresa_id INT"),
+        ([(5, "ab", float("nan")), (2, "ab", 1.0), (3, "xy", 2.0)], "empresa_id INT"),
+        (
+            [
+                (datetime(2024, 1, 2, 3, 4, 5), "ab", 2),
+                (datetime(2023, 6, 7, 8, 9, 10), "ab", 1),
+                (datetime(2022, 1, 1), "xy", 3),
+            ],
+            "empresa_id TIMESTAMP",
+        ),
+    ],
+    ids=["null-id", "nan-order", "timestamp-id"],
+)
+def test_fuzzy_degenerate_dim_takes_theta_join(spark, dim_rows, dim_schema):
+    # a small dim the coalesce chain cannot encode exactly is planned as
+    # the broadcast theta join, with rows equal to a forced theta lookup
+    ord_type = "DOUBLE" if any(isinstance(r[2], float) for r in dim_rows) else "INT"
     dim = spark.createDataFrame(
-        [(1, "ab", 1)], "empresa_id INT, nombre STRING, ord INT"
+        dim_rows, f"{dim_schema}, nombre STRING, ord {ord_type}"
     )
     fact_df = spark.createDataFrame(
-        [(0, "AB", "keep-me")], "k INT, company STRING, __fuzzy_lowered STRING"
+        list(enumerate(["zzab", "XY!", "none", None])), "k INT, company STRING"
     )
-    res = fuzzy_containment_lookup(
-        fact_df, dim, "company", "nombre", "empresa_id", "out",
-        dim_order="ord", fact_key="k",
+    res = {}
+    for label, max_expr in (("projection", 1024), ("theta", 0)):
+        out = fuzzy_containment_lookup(
+            fact_df, dim, "company", "nombre", "empresa_id", "out",
+            dim_order="ord", fact_key="k", max_dim_expr_rows=max_expr,
+        )
+        if label == "projection":
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert "BroadcastNestedLoopJoin" in plan
+            assert "array_min" not in plan
+        res[label] = {r.k: r.out for r in out.collect()}
+    assert res["projection"] == res["theta"]
+    assert res["theta"][1] == dim_rows[2][0] and res["theta"][2] is None
+
+
+TEMP_NAMES = (
+    "__fuzzy_lowered", "__fuzzy_row_id", "__dim_id", "__dim_text",
+    "__dim_order", "__best",
+)
+
+
+def test_fuzzy_fact_column_named_like_temp_is_preserved(spark):
+    # fact columns named like any temporary column of either path (in
+    # either case: Spark resolves names case-insensitively) must survive
+    # untouched — each temp name uniquifies around them
+    dim = spark.createDataFrame(
+        [(1, "ab", 1), (2, "cd", 2)], "empresa_id INT, nombre STRING, ord INT"
     )
-    row = res.collect()[0]
-    assert row.out == 1
-    assert row["__fuzzy_lowered"] == "keep-me"
+    for cols in (list(TEMP_NAMES), [c.upper() for c in TEMP_NAMES]):
+        fact_df = spark.createDataFrame(
+            [("AB", *[f"{c}-0" for c in cols]), ("xcd", *[f"{c}-1" for c in cols])],
+            "company STRING, " + ", ".join(f"{c} STRING" for c in cols),
+        )
+        for max_expr in (1024, 0):  # projection / theta-join path
+            res = fuzzy_containment_lookup(
+                fact_df, dim, "company", "nombre", "empresa_id", "out",
+                dim_order="ord", max_dim_expr_rows=max_expr,
+            )
+            assert res.columns == fact_df.columns + ["out"]
+            rows = sorted(res.collect(), key=lambda r: r.company)
+            assert [r.out for r in rows] == [1, 2]
+            for i, row in enumerate(rows):
+                assert [row[c] for c in cols] == [f"{c}-{i}" for c in cols]
 
 
 # --- dim names and ids rendered as SQL literals (projection path) ----------

@@ -1,9 +1,8 @@
 """Manifest-committed partitioned table: atomic upsert visibility.
 
-The judge-flagged gap (VERDICT r03 #2): merge_upsert_partitioned's dynamic
-partition overwrite lets a concurrent reader observe a partially-rewritten
-partition set. manifest_upsert_partitioned publishes each version with one
-atomic rename, so these tests pin the ACID story: a reader resolved on
+A dynamic partition overwrite lets a concurrent reader observe a
+partially-rewritten partition set. manifest_upsert_partitioned publishes
+each version with one atomic rename, so these tests pin the ACID story: a reader resolved on
 version N sees exactly version N forever (data dirs are immutable); a
 writer crash before the manifest rename is invisible; vacuum only removes
 unreferenced directories.
