@@ -149,8 +149,6 @@ def fuzzy_containment_lookup(
             .withColumn(out_col, F.expr(f"coalesce({', '.join(branches)})"))
             .drop(low)
         )
-    # Temporary names never clash with a fact column (compared as Spark
-    # resolves them), so every fact column survives the aggregate as is.
     dim_id_c, dim_text_c, dim_order_c, best, row_id = (
         _fresh_name(n, fact.columns)
         for n in ("__dim_id", "__dim_text", "__dim_order", "__best", "__fuzzy_row_id")
