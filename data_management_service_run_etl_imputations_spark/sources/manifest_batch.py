@@ -889,10 +889,13 @@ def manifest_sql_view_unregister(spark, view_name: str) -> bool:
 # the path for key-merging upserts/MERGE: those need Spark jobs the
 # DataSourceWriter protocol cannot express). Executors write parquet
 # straight into one immutable stage directory (Arrow batches, no extra
-# shuffle); the driver-side commit() registers the files in a new
-# manifest version through the same pluggable commit point as every
-# other writer, with insert-only fast-forward on a lost race (appending
-# files can always rebase onto a newer head unless the schema moved).
+# shuffle); commit() applies the staged files with ``sinks._apply_stage``
+# (the commit rule of every staged write, zone-map stats included) and
+# publishes through the same pluggable commit point as every other
+# writer. Its own retry policy: an append re-adds its files on a lost
+# race (it can always rebase onto a newer head unless the schema moved);
+# a dynamic overwrite refuses to wipe a concurrent commit into the
+# partitions it replaces.
 #
 # v1 writer REFUSES tables whose features it cannot maintain — CHECK
 # constraints (need a Spark observe pass), generated partition columns
@@ -1091,7 +1094,9 @@ class ManifestAppendWriter(DataSourceArrowWriter):
 
         from data_management_service_run_etl_imputations_spark.sources.sinks import (
             CommitConflict,
+            _apply_stage,
             _latest_manifest,
+            _partition_cols,
             _publish_manifest,
         )
 
@@ -1108,6 +1113,7 @@ class ManifestAppendWriter(DataSourceArrowWriter):
         # frame) must not narrow the table's nullability — later reads
         # null-fill this batch's columns for files that predate an ADD
         # COLUMN, and a non-nullable field there is a codegen NPE
+        from pyspark.sql import SparkSession
         from pyspark.sql.types import StructField, StructType
 
         nullable = StructType(
@@ -1116,8 +1122,16 @@ class ManifestAppendWriter(DataSourceArrowWriter):
                 for f in self.schema.fields
             ]
         )
-        out_schema = nullable.simpleString()
-        out_schema_json = nullable.json()
+        # files group per partition key; a key's files share one dir
+        staged: dict = {}
+        for k, rel, size, rows in entries:
+            staged.setdefault(k, (rel.rsplit("/", 1)[0], []))[1].append(
+                [rel, size, rows]
+            )
+        # the DataSource writer commits in a session-less Python worker,
+        # where new files get footer stats only (SparkSession is None)
+        spark = SparkSession.getActiveSession()
+        memo: dict = {}
         last: "CommitConflict | None" = None
         # dynamic overwrite: snapshot of the replaced partitions' file
         # lists at the FIRST attempt — a retry that silently re-applies
@@ -1129,10 +1143,6 @@ class ManifestAppendWriter(DataSourceArrowWriter):
         for _ in range(10):
             version, base = _latest_manifest(self.path)
             if version > 0:
-                from data_management_service_run_etl_imputations_spark.sources.sinks import (
-                    _partition_cols,
-                )
-
                 if _partition_cols(base) != self.pcols:
                     # two creators raced with different specs, or the
                     # planning-time spec drifted: our staged files are
@@ -1143,24 +1153,21 @@ class ManifestAppendWriter(DataSourceArrowWriter):
                         f"under {self.pcols}; aborting append"
                     )
                 want = json.loads(base["schema_json"])["fields"]
-                got = json.loads(out_schema_json)["fields"]
+                got = json.loads(nullable.json())["fields"]
                 if [(f["name"], f["type"]) for f in want] != [
                     (f["name"], f["type"]) for f in got
                 ]:
                     raise ValueError(
                         "table schema changed concurrently; aborting append"
                     )
-            parts = dict(base.get("partitions", {}))
-            files = dict(base.get("files", {}))
-            dir_schemas = dict(base.get("dir_schemas", {}))
+            files = base.get("files", {})
+            carry = {k: files.get(k, []) for k in staged}
             if self.overwrite:
                 # dynamic partition overwrite: the touched partitions'
                 # file lists REPLACE wholesale (old files stay on disk
                 # for time travel until vacuum)
-                touched = {e[0] for e in entries}
                 snapshot = {
-                    k: [tuple(x) for x in files.get(k, ())]
-                    for k in touched
+                    k: [tuple(x) for x in files.get(k, ())] for k in staged
                 }
                 if replaced_seen is None:
                     replaced_seen = snapshot
@@ -1172,7 +1179,7 @@ class ManifestAppendWriter(DataSourceArrowWriter):
                     # against the new head deliberately.
                     changed = sorted(
                         k
-                        for k in touched
+                        for k in staged
                         if snapshot.get(k) != replaced_seen.get(k)
                     )
                     raise CommitConflict(
@@ -1181,51 +1188,11 @@ class ManifestAppendWriter(DataSourceArrowWriter):
                         f"of {self.path}; re-run the overwrite to "
                         "replace the new contents deliberately"
                     )
-                for k in touched:
-                    files[k] = []
-                    parts.pop(k, None)
-            for k, rel, size, rows in entries:
-                d = rel.rsplit("/", 1)[0]
-                files[k] = [*files.get(k, []), [rel, size, rows]]
-                parts.setdefault(k, d)
-                dir_schemas[d] = out_schema
-            content = {
-                "partitions": parts,
-                "files": files,
-                "fmt": "parquet",
-                "partition_col": (
-                    self.pcols[0] if len(self.pcols) == 1 else None
-                ),
-                "schema": out_schema,
-                "schema_json": out_schema_json,
-                "stats_ref": base.get("stats_ref"),
-                "stats_cols": base.get("stats_cols", []),
-                "bloom_ref": base.get("bloom_ref"),
-                "deletes": base.get("deletes") or [],
-                "dir_schemas": dir_schemas,
-                **(
-                    {"partition_cols": self.pcols}
-                    if len(self.pcols) != 1
-                    else {}
-                ),
-            }
-            for k, v in base.items():
-                content.setdefault(k, v)
-            if self.overwrite:
-                # replaced partitions may orphan dirs and fully
-                # materialize pending delete entries — prune both
-                from data_management_service_run_etl_imputations_spark.sources.sinks import (
-                    _live_dirs,
-                    _purge_dead_deletes,
-                )
-
-                live = _live_dirs(content)
-                content["dir_schemas"] = {
-                    d: sc
-                    for d, sc in content["dir_schemas"].items()
-                    if d in live
-                }
-                content["deletes"] = _purge_dead_deletes(content)
+                carry = {}
+            content = _apply_stage(
+                spark, self.path, base, list(staged), staged, carry,
+                nullable, "parquet", self.pcols, memo=memo,
+            )
             try:
                 _publish_manifest(
                     self.path,
@@ -1254,16 +1221,14 @@ class ManifestAppendWriter(DataSourceArrowWriter):
         )
 
 
-# --- JVM-side staged append (write-half twin of _resolved_table_schema) ----
+# --- JVM-side staged append -------------------------------------------
 #
-# The engine's SQL INSERT / CTAS path never goes through the DataSource
-# writer: it constructs ``ManifestAppendWriter`` DRIVER-SIDE (same
-# validation, same commit-conflict loop, same history record) and stages
-# the rows through ``sinks._write_stage`` — the one staging helper every
-# manifest write uses — so its keys follow the one partition-key rule
-# (``CAST(col AS STRING)``, NULL → NULL_PARTITION_KEY) for every column
-# type. ``df.write.format("manifest")`` stays the public shell over the
-# same writer.
+# SQL INSERT and CTAS on a plain table skip the DataSource's executor
+# write: they stage the rows with ``sinks._write_stage`` (the one staging
+# helper, so keys follow the one partition-key rule) and hand the files
+# to ``ManifestAppendWriter.commit`` in the driver. Validation, the
+# commit rule and the retry policy are the writer's, so both surfaces
+# commit the same manifest.
 
 
 def _fast_staged_append(df, path: str, options: dict, overwrite: bool) -> None:

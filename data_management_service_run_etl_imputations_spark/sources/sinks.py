@@ -2659,7 +2659,7 @@ def manifest_update_where(
                 )
                 if (
                     n_pos + 1 <= POS_CONSOLIDATE_THRESHOLD
-                    and not meta.get("stats_ref")
+                    and not meta.get("stats_cols")
                     and not meta.get("col_ids")
                 ):
                     content, files_plan = resolved
@@ -3014,7 +3014,7 @@ def manifest_upsert_partitioned(
         if resolved is not None:
             meta = resolved[0]
             if (
-                not meta.get("stats_ref")
+                not meta.get("stats_cols")
                 and not meta.get("col_ids")
                 and not meta.get("bloom_ref")
             ):
@@ -3149,16 +3149,14 @@ def manifest_insert(
     :func:`manifest_upsert_partitioned` minus the key probe and merge:
     every incoming row lands as a NEW file in its partition, every
     existing file carries by reference (nothing is rewritten, dup keys
-    are NOT collapsed — SQL ``INSERT INTO`` semantics). This is the
-    full-featured twin of the writer DataSource's append
-    (``df.write.format("manifest")``): unlike writer v1 it enforces
-    CHECK constraints (the same ``DataFrame.observe`` pass as every
-    engine — a violating batch aborts before staging), computes
-    generated partition columns, and writes column-mapped tables
-    (``col_ids`` — ids for evolved names are assigned in the commit
-    build). The SQL dispatcher routes ``INSERT INTO`` here whenever the
-    table carries one of those features; plain tables take the staged
-    append.
+    are NOT collapsed — SQL ``INSERT INTO`` semantics). It commits
+    through the same :func:`_apply_stage` rule as the writer
+    DataSource's append; what it adds is the Spark-side work the writer
+    refuses: CHECK constraints (the ``DataFrame.observe`` pass — a
+    violating batch aborts before staging), generated partition columns,
+    column-mapped tables and schema evolution. The SQL dispatcher routes
+    ``INSERT INTO`` here whenever the table carries one of those
+    features; plain tables take the staged append.
 
     Lazy planning mirrors the upsert: on a checkpoint-anchored chain the
     plan hydrates only the incoming batch's partitions and the commit
@@ -3185,7 +3183,7 @@ def manifest_insert(
     if resolved is not None:
         meta = resolved[0]
         if (
-            not meta.get("stats_ref")
+            not meta.get("stats_cols")
             and not meta.get("col_ids")
             and not meta.get("bloom_ref")
         ):
@@ -3237,6 +3235,138 @@ def manifest_insert(
     return {"inserted": n}
 
 
+def _apply_stage(
+    spark,
+    path: str,
+    base: dict,
+    keys: list[str],
+    staged: dict[str, tuple[str, list]],
+    carry: dict[str, list],
+    schema,
+    fmt: str,
+    pcols: list[str],
+    extra_meta: dict | None = None,
+    lazy: bool = False,
+    memo: dict | None = None,
+) -> dict:
+    """How a staged write changes a manifest: the one rule behind every
+    commit that publishes freshly written data files (insert, upsert,
+    merge, update, copy-on-write delete, replace-partitions, compact,
+    zorder, the writer DataSource and SQL ``INSERT``).
+
+    ``staged`` maps a touched key to its ``(rel_dir, file_entries)``
+    (``_write_stage``'s result), ``carry`` to the live files that stay
+    by reference, ``schema`` is the staged StructType. Per touched key:
+    staged files repoint the key to its staged dir and list carried plus
+    staged files; carried files alone keep the key's dir entry; neither
+    drops the key. Staged dirs record the staged schema (and, on a
+    column-mapped table, their column ids), which becomes the table
+    schema. ``dir_schemas``/``dir_col_ids`` of dead dirs and delete
+    entries that scope no live file are pruned. When the table keeps
+    ``stats_cols``, every staged file gets footer stats for them
+    (computed once per column set and kept in ``memo`` across the
+    caller's retries) and a new sidecar holds them with the surviving
+    entries. Metadata keys this rule does not manage carry through;
+    ``extra_meta`` rides the commit.
+
+    Returns the new content, or with ``lazy=True`` the same per-key
+    change as an actions diff for ``_publish_manifest(actions=…)``.
+    The lazy form never sees the full file set, so it leaves out the
+    pruning and the stats: callers take it only on tables without
+    ``stats_cols`` or column mapping, and with a staged schema equal to
+    the table's."""
+    out_schema = schema.simpleString()
+    staged_names = _struct_field_names(out_schema)
+    parts_set: dict[str, str] = {}
+    files_set: dict[str, list] = {}
+    dirs_set: dict[str, str] = {}
+    dropped: list[str] = []
+    for k in keys:
+        rel, entries = staged.get(k, (None, []))
+        carried = carry.get(k, [])
+        if entries:
+            parts_set[k] = rel
+            files_set[k] = [*carried, *entries]
+            dirs_set[rel] = out_schema
+        elif carried:
+            files_set[k] = list(carried)
+        else:
+            dropped.append(k)
+    if lazy:
+        actions = {
+            "set": dict(extra_meta or {}),
+            "partitions.set": parts_set,
+            "files.set": files_set,
+            "dir_schemas.set": dirs_set,
+        }
+        if dropped:
+            actions["partitions.del"] = actions["files.del"] = dropped
+        return actions
+
+    parts = {
+        k: v for k, v in base.get("partitions", {}).items() if k not in dropped
+    }
+    parts.update(parts_set)
+    files = {k: v for k, v in base.get("files", {}).items() if k not in dropped}
+    files.update(files_set)
+    live_dirs = _live_dirs({"partitions": parts, "files": files})
+    nc = {
+        "partitions": parts,
+        "files": files,
+        "fmt": fmt,
+        "partition_col": _single_pcol(pcols),
+        "schema": out_schema,
+        # JSON twin: parseable by StructType.fromJson WITHOUT a
+        # SparkSession — the streaming source's schema() runs in a
+        # session-less Python worker
+        "schema_json": schema.json(),
+        # sidecars carry BY REFERENCE: loaders intersect their entries
+        # with the live file list, so entries of dropped files go stale
+        # harmlessly
+        "stats_ref": base.get("stats_ref"),
+        "stats_cols": base.get("stats_cols", []),
+        "bloom_ref": base.get("bloom_ref"),
+        "deletes": base.get("deletes") or [],
+        "dir_schemas": {
+            d: sc
+            for d, sc in {**base.get("dir_schemas", {}), **dirs_set}.items()
+            if d in live_dirs
+        },
+        **({"partition_cols": pcols} if len(pcols) != 1 else {}),
+        **(extra_meta or {}),
+    }
+    for k, v in base.items():
+        nc.setdefault(k, v)
+    if nc.get("col_ids"):
+        nc["dir_col_ids"] = {
+            d: m
+            for d, m in base.get("dir_col_ids", {}).items()
+            if d in live_dirs
+        }
+        for rel in dirs_set:
+            _record_dir_mapping(nc, rel, staged_names)
+    nc["deletes"] = _purge_dead_deletes(nc)
+    cols = tuple(c for c in nc["stats_cols"] if c in staged_names)
+    new_rels = [e[0] for k in parts_set for e in staged[k][1]]
+    if cols and new_rels:
+        from data_management_service_run_etl_imputations_spark.sources.skipping import (
+            _collect_stats,
+            _load_stats_sidecar,
+            _write_stats_sidecar,
+        )
+
+        memo = {} if memo is None else memo
+        if cols not in memo:
+            memo[cols] = _collect_stats(spark, path, new_rels, list(cols), nc)
+        live = {e[0] for fs in files.values() for e in fs}
+        stats = {
+            r: v for r, v in _load_stats_sidecar(path, base).items() if r in live
+        }
+        stats.update(memo[cols])
+        nc["stats_ref"] = _write_stats_sidecar(path, stats)
+    return nc
+
+
 def _stage_and_commit(
     path: str,
     merged: DataFrame,
@@ -3253,45 +3383,31 @@ def _stage_and_commit(
     carry_files: dict[str, list] | None = None,
     lazy_actions: bool = False,
 ) -> int:
-    """Shared write tail for partition-rewriting commits (upsert, merge):
-    stage the touched partitions' merged content into an immutable
-    directory, then publish through the fast-forward commit loop.
-    Returns the staged row count (one job — count and write share the
-    localCheckpoint).
+    """Write tail of the row-level writers (insert, upsert, merge,
+    update, copy-on-write delete): stage ``merged`` for the touched
+    partitions under an immutable directory, apply it with
+    :func:`_apply_stage` and publish. Returns the staged row count (one
+    job: count and write share the localCheckpoint).
 
-    ``carry_files`` is the FILE-GRANULAR copy-on-write hook: per touched
-    partition, file entries that stay live BY REFERENCE alongside the
-    freshly staged files (a narrow merge rewrites only the files its
-    probe proved hold matching keys; the partition's other files never
-    move — Delta's rewrite-matched-files-only design). A touched
-    partition with neither staged nor carried files is dropped; one with
-    only carried files keeps its existing primary dir entry.
+    ``carry_files`` lists, per touched partition, the live files that
+    stay by reference next to the staged ones (a narrow merge rewrites
+    only the files its probe matched).
 
-    ``allow_fast_forward=False`` disables the lost-race fast-forward and
-    escalates every conflict to :class:`CommitConflict` — required by
-    writers whose STAGED CONTENT depends on table state outside the
-    touched partitions (MERGE's pass-1 match probe scans other
-    partitions' keys: a concurrent commit adding a source-matching key
-    to an untouched partition invalidates the staged merge even though
-    no touched partition moved, so the whole merge must re-run against
-    the new head via ``with_commit_retry``).
+    Retry policy: a lost commit race FAST-FORWARDS, re-applying the same
+    stage to the new head, when the winner touched none of our
+    partitions, deletes or schema (``_upsert_fast_forward_safe``);
+    anything else escapes as :class:`CommitConflict` for
+    ``with_commit_retry`` to re-run the write. ``extra_meta`` carriers
+    never fast-forward (their keys were computed against our base), nor
+    does ``allow_fast_forward=False`` — MERGE's match probe read
+    partitions outside the touched ones.
 
-    ``lazy_actions=True`` is the MoR-update extension of the lazy DELETE
-    commit: the caller planned through :func:`_pruned_resolve`, so
-    ``content`` carries NO file lists, and the commit publishes an
-    explicit ACTIONS diff (partitions/files/dir_schemas sets for the
-    touched keys plus ``extra_meta``) instead of letting
-    ``_publish_manifest`` re-materialize the parent to diff against —
-    commit cost O(touched partitions), never O(table files). Contract:
-    the staged schema must equal the table schema (an UPDATE cannot
-    mutate it — verified, with a full-materialization fallback),
-    table-wide maintenance (positional-entry consolidation, dead-delete
-    purge, stats sidecar refresh, column-mapping pruning) is the
-    CALLER's gate (it must fall back to the eager path when any is
-    due), and fast-forward must be off (a head compare would hydrate
-    what the plan avoided)."""
-    out_schema = merged.schema.simpleString()
-    out_schema_json = merged.schema.json()
+    ``lazy_actions=True``: the caller planned through
+    :func:`_pruned_resolve`, ``content`` carries only the touched
+    partitions' file lists, and the commit publishes the lazy actions
+    diff, so its cost is O(touched partitions). A staged schema that
+    drifted from the table's falls back to the eager path."""
+    schema = merged.schema
     constraints = content.get("constraints") or {}
     obs = None
     if constraints:
@@ -3316,250 +3432,65 @@ def _stage_and_commit(
             nparts, *copies, *sort_cols
         ).sortWithinPartitions(*copies, *sort_cols)
     _, written = _write_stage(staged, path, pcols, fmt, expect=touched_keys)
-    staged_files = {
-        k: written[k][1] if k in written else [] for k in touched_keys
-    }
-    staged_rel = {k: written[k][0] for k in written}
     carry = carry_files or {}
-
-    # write-path index maintenance: once a table maintains zone-map
-    # stats (stats_ref exists), every data commit covers its own output
-    # files — footer reads only, computed ONCE per stage (the staged
-    # files don't change across fast-forward rebuilds) and merged into
-    # the sidecar per build. Bloom stays ANALYZE/compact-refreshed (a
-    # bitset build is a real column scan, not metadata).
-    new_rels_flat = [e[0] for k in touched_keys for e in staged_files[k]]
-    _fresh_stats_cache: dict = {}
-
-    def _fresh_stats(cols_key: tuple, nc: dict) -> dict:
-        if cols_key not in _fresh_stats_cache:
-            from data_management_service_run_etl_imputations_spark.sources.skipping import (
-                _collect_stats,
-            )
-
-            _fresh_stats_cache[cols_key] = _collect_stats(
-                merged.sparkSession, path, new_rels_flat, list(cols_key), nc
-            )
-        return _fresh_stats_cache[cols_key]
-
-    def _build(base: dict) -> dict:
-        b_parts = dict(base.get("partitions", {}))
-        b_files = dict(base.get("files", {}))
-        dir_schemas = dict(base.get("dir_schemas", {}))
-        for k in touched_keys:
-            carried = carry.get(k, [])
-            if staged_files[k]:
-                rel = staged_rel[k]
-                b_parts[k] = rel
-                b_files[k] = [*carried, *staged_files[k]]
-                dir_schemas[rel] = out_schema
-            elif carried:
-                # file-granular rewrite emptied its slice but other files
-                # carry: the partition survives on its existing dir entry
-                b_files[k] = list(carried)
-            elif k in b_parts:
-                # every row of the partition was deleted by the rewrite
-                del b_parts[k]
-                b_files.pop(k, None)
-        live_dirs = _live_dirs({"partitions": b_parts, "files": b_files})
-        # stats/bloom sidecars carry BY REFERENCE: the sidecar files are
-        # immutable, and every loader intersects sidecar entries with the
-        # manifest's live file list — entries for rewritten files go stale
-        # harmlessly until the next collect pass rewrites the sidecar.
-        nc = {
-            "partitions": b_parts,
-            "files": b_files,
-            "fmt": fmt,
-            "partition_col": _single_pcol(partition_col),
-            "schema": out_schema,
-            # JSON twin: parseable by StructType.fromJson WITHOUT a
-            # SparkSession — the streaming source's schema() runs in a
-            # session-less Python worker
-            "schema_json": out_schema_json,
-            "stats_ref": base.get("stats_ref"),
-            "stats_cols": base.get("stats_cols", []),
-            "bloom_ref": base.get("bloom_ref"),
-            "deletes": base.get("deletes") or [],
-            "dir_schemas": {
-                d: sc for d, sc in dir_schemas.items() if d in live_dirs
-            },
-            **({"partition_cols": pcols} if len(pcols) != 1 else {}),
-            **(extra_meta or {}),
-        }
-        # metadata keys this writer does not manage (streaming batch
-        # markers, future extensions) carry through — a maintenance upsert
-        # must never erase another component's state
-        for k, v in base.items():
-            nc.setdefault(k, v)
-        if nc.get("col_ids"):
-            # column mapping: drop dead dirs' entries, record the staged
-            # dirs' (new columns get fresh ids — schema-evolution ADD)
-            nc["dir_col_ids"] = {
-                d: m
-                for d, m in base.get("dir_col_ids", {}).items()
-                if d in live_dirs
-            }
-            staged_names = _struct_field_names(out_schema)
-            for k in touched_keys:
-                if staged_files[k]:
-                    _record_dir_mapping(nc, staged_rel[k], staged_names)
-        nc["deletes"] = _purge_dead_deletes(nc)
-        if nc.get("stats_ref") and nc.get("stats_cols") and new_rels_flat:
-            from data_management_service_run_etl_imputations_spark.sources.skipping import (
-                _load_stats_sidecar,
-                _write_stats_sidecar,
-            )
-
-            staged_names = set(_struct_field_names(out_schema))
-            cols_key = tuple(
-                c for c in nc["stats_cols"] if c in staged_names
-            )
-            if cols_key:
-                # entries live under BASE (they predate this commit);
-                # prune to the new manifest's live files so the sidecar
-                # never accretes dead rels
-                stats = _load_stats_sidecar(path, base)
-                live = {e[0] for fs in nc["files"].values() for e in fs}
-                stats = {r: v for r, v in stats.items() if r in live}
-                stats.update(_fresh_stats(cols_key, nc))
-                nc["stats_ref"] = _write_stats_sidecar(path, stats)
-        return nc
-
-    # Commit loop with LOGICAL conflict detection (the Delta/Iceberg
-    # distinction between a physical version-number race and a true data
-    # conflict): losing the exclusive create means someone committed a
-    # newer version, but if that winner touched none of OUR partitions,
-    # changed no delete entries, and left the schema alone, our staged
-    # stage is still a correct merge — FAST-FORWARD by rebuilding the
-    # metadata against the new head and re-committing; no data is
-    # re-staged. Only a genuine overlap (same partition rewritten, a new
-    # delete whose scope our merge should have materialized, or a schema
-    # change) escapes as CommitConflict, where `with_commit_retry`
-    # re-runs the whole merge against the refreshed head. Writers
-    # carrying `extra_meta` never fast-forward: those keys were computed
-    # against OUR base (e.g. streaming batch markers) and must be
-    # recomputed by the caller against the winner's head.
+    n_staged = {
+        k: len(written[k][1]) if k in written else 0 for k in touched_keys
+    }
     op_metrics = {
         "rows_staged": n_merged,
-        "partitions_rewritten": sum(
-            1 for k in touched_keys if staged_files[k]
-        ),
+        "partitions_rewritten": sum(1 for k in touched_keys if n_staged[k]),
         "partitions_dropped": sum(
-            1
-            for k in touched_keys
-            if not staged_files[k] and not carry.get(k)
+            1 for k in touched_keys if not n_staged[k] and not carry.get(k)
         ),
-        "files_added": sum(len(v) for v in staged_files.values()),
+        "files_added": sum(n_staged.values()),
         "files_carried": sum(len(v) for v in carry.values()),
         **(op_metrics_extra or {}),
     }
+    if lazy_actions and schema.simpleString() != content.get("schema"):
+        content = _materialize(path, version)
+        lazy_actions = False
     if lazy_actions:
-        if out_schema != content.get("schema"):
-            # staged schema drifted from the table's (should be
-            # impossible for UPDATE; defensive): the actions diff below
-            # would be incomplete — hydrate and take the eager path
-            content = _materialize(path, version)
-            lazy_actions = False
-    if lazy_actions:
-        parts_set: dict[str, str] = {}
-        files_set: dict[str, list] = {}
-        dirs_set: dict[str, str] = {}
-        for k in touched_keys:
-            carried = carry.get(k, [])
-            if staged_files[k]:
-                rel = staged_rel[k]
-                parts_set[k] = rel
-                files_set[k] = [*carried, *staged_files[k]]
-                dirs_set[rel] = out_schema
-            elif carried:
-                files_set[k] = list(carried)
-            else:  # pragma: no cover — touched keys come from staged rows
-                raise RuntimeError(
-                    f"{op} at {path}: touched partition {k!r} has neither "
-                    "staged nor carried files on the lazy commit path"
-                )
-        actions = {
-            "set": dict(extra_meta or {}),
-            "partitions.set": parts_set,
-            "files.set": files_set,
-            "dir_schemas.set": dirs_set,
-        }
-        for _ in range(16):
-            try:
-                _publish_manifest(
-                    path,
-                    version + 1,
-                    {**content, **(extra_meta or {})},
-                    op=op,
-                    op_metrics={**op_metrics, "lazy_commit": True},
-                    actions=actions,
-                )
-                break
-            except CommitConflict:
-                if extra_meta or not allow_fast_forward:
-                    raise
-                # LAZY fast-forward: the eager loop's head compare is
-                # touched-keys + meta only (_upsert_fast_forward_safe
-                # never looks outside them), so a PRUNED head resolve —
-                # meta + file lists for just the touched keys — answers
-                # it without hydrating the O(files) dict. The winner
-                # having grown an index sidecar / column mapping is an
-                # escape (our actions skipped their maintenance).
-                head_v = _latest_version(path)
-                resolved = (
-                    _pruned_resolve(path, head_v) if head_v > 0 else None
-                )
-                if resolved is None:
-                    head = _materialize(path, head_v)
-                else:
-                    hmeta, hplan = resolved
-                    head = {
-                        **hmeta,
-                        "files": _load_files_pruned(
-                            path, hplan, touched_keys
-                        ),
-                    }
-                if (
-                    head.get("stats_ref")
-                    or head.get("col_ids")
-                    or head.get("bloom_ref")
-                    or not _upsert_fast_forward_safe(
-                        content, head, touched_keys, fmt, partition_col
-                    )
-                ):
-                    raise
-                version, content = head_v, head
-        else:  # pragma: no cover — 16 straight fast-forward losses
-            raise CommitConflict(
-                f"{op} at {path} lost {16} lazy fast-forward commit races"
-            )
-        return n_merged
+        op_metrics["lazy_commit"] = True
+    memo: dict = {}
     for _ in range(16):
+        new = _apply_stage(
+            merged.sparkSession, path, content, touched_keys, written, carry,
+            schema, fmt, pcols, extra_meta, lazy=lazy_actions, memo=memo,
+        )
         try:
             _publish_manifest(
                 path,
                 version + 1,
-                _build(content),
+                {**content, **(extra_meta or {})} if lazy_actions else new,
                 op=op,
                 op_metrics=op_metrics,
+                actions=new if lazy_actions else None,
             )
-            break
+            return n_merged
         except CommitConflict:
-            head_version, head = _latest_manifest(path)
+            if extra_meta or not allow_fast_forward:
+                raise
+            head_v = _latest_version(path)
+            resolved = _pruned_resolve(path, head_v) if lazy_actions else None
+            if resolved is None:
+                head = _materialize(path, head_v)
+            else:
+                # the fast-forward check reads only meta and the touched
+                # keys, so a pruned head resolve answers it
+                hmeta, hplan = resolved
+                head = {
+                    **hmeta,
+                    "files": _load_files_pruned(path, hplan, touched_keys),
+                }
             if (
-                extra_meta
-                or not allow_fast_forward
-                or not _upsert_fast_forward_safe(
-                    content, head, touched_keys, fmt, partition_col
-                )
+                lazy_actions
+                and (head.get("stats_cols") or head.get("col_ids"))
+            ) or not _upsert_fast_forward_safe(
+                content, head, touched_keys, fmt, partition_col
             ):
                 raise
-            version, content = head_version, head
-    else:  # pragma: no cover — 16 straight fast-forward losses
-        raise CommitConflict(
-            f"{op} at {path} lost {16} fast-forward commit races"
-        )
-    return n_merged
+            version, content = head_v, head
+    raise CommitConflict(f"{op} at {path} lost 16 fast-forward commit races")
 
 
 def _upsert_fast_forward_safe(
@@ -4469,7 +4400,6 @@ def manifest_compact(
     fmt: str = "parquet",
     min_files: int | None = None,
     target_file_mb: int | None = None,
-    refresh_indexes: bool = True,
 ) -> dict[str, int]:
     """File compaction for a manifest table: rewrite the (selected)
     partitions' data into one-file-per-partition and publish the result
@@ -4501,20 +4431,18 @@ def manifest_compact(
     outputs row-group-friendly. Default None keeps the
     one-file-per-partition behavior for small tables.
 
-    ``refresh_indexes`` (default True) keeps the table's index sidecars
-    WARM across the rewrite: zone-map stats for the output files come
-    from parquet footers (metadata cost only) and bloom bitsets rebuild
-    under each column's existing geometry, all in the SAME commit — a
-    nightly compaction no longer degrades skipping until the next
-    ANALYZE. No-op on tables without sidecars.
+    The table's index sidecars stay WARM across the rewrite: zone-map
+    stats for the output files come from parquet footers (the
+    :func:`_apply_stage` rule) and bloom bitsets rebuild under each
+    column's existing geometry, all in the SAME commit — a nightly
+    compaction does not degrade skipping until the next ANALYZE.
 
     Returns {"partitions": n, "files_before": n, "files_after": n}.
     """
     version, content = _latest_manifest(path)
     if version == 0:
         return {"partitions": 0, "files_before": 0, "files_after": 0}
-    parts: dict = dict(content["partitions"])
-    files: dict = dict(content.get("files", {}))
+    files: dict = content.get("files", {})
     delete_stages = {
         s for e in content.get("deletes") or [] for s in e["stages"]
     }
@@ -4529,15 +4457,15 @@ def manifest_compact(
             for e in files.get(k, [])
         )
 
-    _sel_pcols = _partition_cols(content)
+    pcols = _partition_cols(content)
     selected = {
         k: rel
-        for k, rel in parts.items()
+        for k, rel in content["partitions"].items()
         if (
             partition_values is None
             or k
             in {
-                _normalize_partition_value(v, _sel_pcols)
+                _normalize_partition_value(v, pcols)
                 for v in partition_values
             }
         )
@@ -4552,7 +4480,6 @@ def manifest_compact(
 
     # file counts come from the manifest, not a directory listing
     files_before = sum(len(files.get(k, [])) for k in selected)
-    pcols = _partition_cols(content)
     # pending MoR deletes materialize here — compaction is the eager purge
     df = _apply_deletes(
         spark,
@@ -4639,105 +4566,49 @@ def manifest_compact(
     # a selected partition absent from what was written had every row
     # deleted by the materialized MoR deletes
     _, written = _write_stage(staged, path, pcols, fmt, expect=selected)
-    dir_schemas: dict = dict(content.get("dir_schemas", {}))
-    new_schema = staged.drop(*copies).schema.simpleString()
-    # every old live file of the selected partitions is being replaced —
-    # capture the set BEFORE repointing so their index entries drop
-    old_rels = {e[0] for k in selected for e in files.get(k, [])}
-    for k in selected:
-        if k in written:
-            rel, staged_list = written[k]
-            parts[k] = rel
-            files[k] = staged_list
-            dir_schemas[rel] = new_schema
-        else:
-            # materializing pending MoR deletes emptied the partition:
-            # drop it from the manifest (same as _stage_and_commit)
-            parts.pop(k, None)
-            files.pop(k, None)
-    live_dirs = _live_dirs({"partitions": parts, "files": files})
-    pre_compact = content  # index sidecars load against the OLD live set
-    content = dict(content)
-    content["partitions"] = parts
-    content["files"] = files
-    content["dir_schemas"] = {
-        d: sc for d, sc in dir_schemas.items() if d in live_dirs
-    }
-    if content.get("col_ids"):
-        content["dir_col_ids"] = {
-            d: m
-            for d, m in content.get("dir_col_ids", {}).items()
-            if d in live_dirs
-        }
-        for k in selected:
-            if k in written:
-                _record_dir_mapping(
-                    content, written[k][0], _struct_field_names(new_schema)
-                )
-    content["deletes"] = _purge_dead_deletes(content)
+    new_content = _apply_stage(
+        spark, path, content, list(selected), written, {},
+        staged.drop(*copies).schema, fmt, pcols,
+    )
     new_rels = [
         e[0] for k in selected if k in written for e in written[k][1]
     ]
-    if refresh_indexes and new_rels:
-        # keep the index sidecars WARM across the rewrite, committed
-        # atomically with the data they index (zorder's pattern): stats
-        # from parquet footers (metadata-only on the auto path), bloom
-        # bitsets rebuilt under each column's existing geometry
+    if new_content.get("bloom_ref") and new_rels:
+        # bloom bitsets rebuild under each column's existing geometry, in
+        # the same commit (a bitset build scans data, so only compaction
+        # pays for it on the write path)
         from data_management_service_run_etl_imputations_spark.sources.skipping import (
             _bloom_file_entries,
-            _collect_stats,
             _load_bloom_sidecar,
-            _load_stats_sidecar,
             _write_bloom_sidecar,
-            _write_stats_sidecar,
         )
 
-        live_names = set(_struct_field_names(new_schema))
-        stats_cols = [
-            c for c in content.get("stats_cols", []) if c in live_names
-        ]
-        if content.get("stats_ref") and stats_cols:
-            # load against the PRE-compact content: the loaders intersect
-            # with the live file list, and the surviving entries we must
-            # carry (non-selected partitions) are live in the OLD set
-            stats = _load_stats_sidecar(path, pre_compact)
-            for frel in old_rels:
-                stats.pop(frel, None)
-            stats.update(
-                _collect_stats(spark, path, new_rels, stats_cols, content)
-            )
-            content["stats_ref"] = _write_stats_sidecar(path, stats)
-        if content.get("bloom_ref"):
-            bloom = _load_bloom_sidecar(path, pre_compact)
-            refreshed = False
-            for bcol in sorted(bloom):
-                if bcol not in live_names:
-                    continue
-                entry = dict(bloom[bcol])
-                bfiles = dict(entry["files"])
-                for frel in old_rels:
-                    bfiles.pop(frel, None)
-                bfiles.update(
-                    _bloom_file_entries(
-                        spark,
-                        path,
-                        content,
-                        new_rels,
-                        bcol,
-                        entry["bits"],
-                        entry["k"],
-                    )
-                )
-                entry["files"] = bfiles
-                bloom[bcol] = entry
-                refreshed = True
-            if refreshed:
-                content["bloom_ref"] = _write_bloom_sidecar(path, bloom)
-    files_after = sum(len(files.get(k, [])) for k in selected)
+        live = set(_struct_field_names(new_content["schema"]))
+        live_files = {
+            e[0] for fs in new_content["files"].values() for e in fs
+        }
+        bloom = _load_bloom_sidecar(path, content)
+        refresh = [c for c in sorted(bloom) if c in live]
+        for bcol in refresh:
+            entry = bloom[bcol]
+            entry["files"] = {
+                **{
+                    r: fe
+                    for r, fe in entry["files"].items()
+                    if r in live_files
+                },
+                **_bloom_file_entries(
+                    spark, path, new_content, new_rels, bcol,
+                    entry["bits"], entry["k"],
+                ),
+            }
+        if refresh:
+            new_content["bloom_ref"] = _write_bloom_sidecar(path, bloom)
+    files_after = sum(len(new_content["files"].get(k, [])) for k in selected)
     _publish_manifest(
         path,
         version + 1,
-        content,
+        new_content,
         op="compact",
         op_metrics={
             "partitions_compacted": len(selected),
@@ -4987,16 +4858,13 @@ def manifest_replace_partitions(
             "partitions_dropped": 0,
             "skipped": True,
         }
-    parts: dict = dict(content.get("partitions", {}))
-    files: dict = dict(content.get("files", {}))
     pcols = _pcols(partition_col)
     wanted = [_normalize_partition_value(v, pcols) for v in partition_values]
     gen = content.get("generated_cols") or {}
     if gen:
         df = _apply_generated(df, gen)
 
-    out_schema = df.schema.simpleString()
-    out_schema_json = df.schema.json()
+    schema = df.schema
     constraints = content.get("constraints") or {}
     obs = None
     if constraints:
@@ -5008,90 +4876,19 @@ def manifest_replace_partitions(
     # came from a different evaluation than the staged frame (e.g. before
     # generated-column application): refused, never dropped silently
     _, staged_dirs = _write_stage(staged, path, pcols, fmt, expect=wanted)
-    written = dropped = 0
-    dir_schemas: dict = dict(content.get("dir_schemas", {}))
-    for k in wanted:
-        if k in staged_dirs:
-            rel, listed = staged_dirs[k]
-            parts[k] = rel
-            files[k] = listed
-            dir_schemas[rel] = out_schema
-            written += 1
-        elif k in parts:
-            del parts[k]
-            files.pop(k, None)
-            dropped += 1
-    dir_schemas = {
-        d: sc
-        for d, sc in dir_schemas.items()
-        if d in _live_dirs({"partitions": parts, "files": files})
-    }
-    new_content = {
-        "partitions": parts,
-        "files": files,
-        "fmt": fmt,
-        "partition_col": _single_pcol(partition_col),
-        **({"partition_cols": pcols} if len(pcols) != 1 else {}),
-        "schema": out_schema,
-        "schema_json": out_schema_json,
-        "stats_ref": content.get("stats_ref"),
-        "stats_cols": content.get("stats_cols", []),
-        "bloom_ref": content.get("bloom_ref"),
-        "deletes": _purge_dead_deletes(
-            {
-                "partitions": parts,
-                "files": files,
-                "deletes": content.get("deletes") or [],
-            }
-        ),
-        "dir_schemas": dir_schemas,
-    }
-    for k, v in content.items():
-        new_content.setdefault(k, v)
-    if new_content.get("col_ids"):
-        live = _live_dirs({"partitions": parts, "files": files})
-        new_content["dir_col_ids"] = {
-            d: m
-            for d, m in new_content.get("dir_col_ids", {}).items()
-            if d in live
-        }
-        for k in wanted:
-            if k in staged_dirs:
-                _record_dir_mapping(
-                    new_content,
-                    staged_dirs[k][0],
-                    _struct_field_names(out_schema),
-                )
-    new_rels = [
-        e[0] for k in wanted if k in staged_dirs for e in staged_dirs[k][1]
-    ]
-    if new_content.get("stats_ref") and new_rels:
-        # same write-path maintenance as _stage_and_commit: a stats-
-        # maintained table's replace covers its own output files from
-        # parquet footers, in the same commit
-        from data_management_service_run_etl_imputations_spark.sources.skipping import (
-            _collect_stats,
-            _load_stats_sidecar,
-            _write_stats_sidecar,
-        )
-
-        staged_names = set(_struct_field_names(out_schema))
-        cols = [
-            c for c in new_content.get("stats_cols", []) if c in staged_names
-        ]
-        if cols:
-            stats = _load_stats_sidecar(path, content)
-            live_rels = {e[0] for fs in files.values() for e in fs}
-            stats = {r: v for r, v in stats.items() if r in live_rels}
-            stats.update(
-                _collect_stats(spark, path, new_rels, cols, new_content)
-            )
-            new_content["stats_ref"] = _write_stats_sidecar(path, stats)
-    if extra_meta:
-        # caller keys ride the same atomic commit (the upsert contract)
-        new_content.update(extra_meta)
-    if txn is not None:
-        new_content.update(_txn_meta(content, txn))
+    written = sum(1 for k in wanted if k in staged_dirs)
+    dropped = sum(
+        1
+        for k in wanted
+        if k not in staged_dirs and k in content.get("partitions", {})
+    )
+    new_content = _apply_stage(
+        spark, path, content, wanted, staged_dirs, {}, schema, fmt, pcols,
+        {
+            **(extra_meta or {}),
+            **(_txn_meta(content, txn) if txn is not None else {}),
+        },
+    )
     _publish_manifest(
         path,
         version + 1,
@@ -6331,31 +6128,19 @@ def manifest_replace_table(
             f"PARTITIONED BY column(s) {missing} are not produced by the "
             f"replacement data (have {df.columns})"
         )
-    out_schema = df.schema.simpleString()
-    out_schema_json = df.schema.json()
     staged = _with_part_copies(df, pcols)
     _, staged_dirs = _write_stage(
         staged.localCheckpoint() if pcols else staged, path, pcols, fmt
     )
-    parts = {k: rel for k, (rel, _) in staged_dirs.items()}
-    files = {k: listed for k, (_, listed) in staged_dirs.items()}
-    new_content = {
-        "partitions": parts,
-        "files": files,
-        "fmt": fmt,
-        "partition_col": pcols[0] if len(pcols) == 1 else None,
-        **({"partition_cols": pcols} if len(pcols) != 1 else {}),
-        "schema": out_schema,
-        "schema_json": out_schema_json,
-        "stats_ref": None,
-        "stats_cols": [],
-        "bloom_ref": None,
-        "deletes": [],
-        "dir_schemas": {rel: out_schema for rel in parts.values()},
+    # the new table starts from nothing but the carried markers
+    markers = {
+        k: content[k] for k in ("stream_batches", "txns") if content.get(k)
     }
-    for k in ("stream_batches", "txns"):
-        if content.get(k):
-            new_content[k] = dict(content[k])
+    new_content = _apply_stage(
+        df.sparkSession, path, markers, list(staged_dirs), staged_dirs, {},
+        df.schema, fmt, pcols,
+    )
+    files = new_content["files"]
     n_rows = sum(
         e[2]
         for fs in files.values()
@@ -6365,7 +6150,7 @@ def manifest_replace_table(
     metrics = {
         "rows_written": n_rows,
         "files_added": sum(len(fs) for fs in files.values()),
-        "partitions_written": len(parts),
+        "partitions_written": len(files),
     }
     _publish_manifest(
         path,

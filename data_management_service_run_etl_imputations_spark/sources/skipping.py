@@ -65,14 +65,18 @@ from pyspark.sql import functions as F
 
 from data_management_service_run_etl_imputations_spark.sources.sinks import (
     _apply_deletes,
+    _apply_stage,
     _has_pos_deletes,
     _latest_manifest,
-    _live_dirs,
     _live_file_rels,
     _load_table_files,
+    _normalize_partition_value,
+    _part_copy_cols,
+    _partition_cols,
     _publish_manifest,
     _resolve_manifest,
     _scan_rel,
+    _with_part_copies,
     _write_stage,
 )
 
@@ -587,11 +591,11 @@ def _footer_stats_for_files(
     if not file_rels:
         return {}, []
     root_abs = os.path.abspath(table_root)
-    if len(file_rels) <= _DRIVER_FOOTER_BATCH:
+    if spark is None or len(file_rels) <= _DRIVER_FOOTER_BATCH:
         # small lists (a single commit's staged files): a Spark job's
         # fixed scheduling latency dwarfs reading a handful of footers,
         # so read them driver-side — the distributed path remains for
-        # ANALYZE-scale backlogs
+        # ANALYZE-scale backlogs, when a session is at hand
         out_d: dict[str, dict] = {}
         left_d: list[str] = []
         for rel in sorted(file_rels):
@@ -647,7 +651,9 @@ def _collect_stats(
     """Stats for a file list by ``source``: "scan" always reads the data;
     "footer" reads only parquet footers and raises if any file cannot be
     covered from metadata; "auto" (default) takes footers where
-    trustworthy and scans only the leftovers."""
+    trustworthy and scans only the leftovers. Without a session
+    (``spark=None``) "auto" leaves the leftovers out: a file without an
+    entry is never skipped, only not answerable by ``manifest_minmax``."""
     if source == "scan" or content.get("fmt", "parquet") != "parquet":
         return _stats_for_files(spark, table_root, file_rels, cols, content)
     fresh, leftover = _footer_stats_for_files(
@@ -660,9 +666,10 @@ def _collect_stats(
                 f"statistics for {cols!r} (e.g. {leftover[0]!r}) — use "
                 "source='auto' or 'scan'"
             )
-        fresh.update(
-            _stats_for_files(spark, table_root, leftover, cols, content)
-        )
+        if spark is not None:
+            fresh.update(
+                _stats_for_files(spark, table_root, leftover, cols, content)
+            )
     return fresh
 
 
@@ -692,11 +699,6 @@ def manifest_collect_stats(
     fmt = content.get("fmt", "parquet")
     stats = _load_stats_sidecar(path, content)
     want = set(cols)
-    from data_management_service_run_etl_imputations_spark.sources.sinks import (
-        _normalize_partition_value,
-        _partition_cols,
-    )
-
     wanted = (
         None
         if partition_values is None
@@ -767,20 +769,12 @@ def manifest_cluster_zorder(
     version, content = _latest_manifest(path)
     if version == 0:
         return {"partitions": 0, "files": 0}
-    from data_management_service_run_etl_imputations_spark.sources.sinks import (
-        _normalize_partition_value,
-        _part_copy_cols,
-        _partition_cols,
-        _with_part_copies,
-    )
-
     fmt = content.get("fmt", "parquet")
     pcols = _partition_cols(content)
-    parts: dict = dict(content["partitions"])
-    files: dict = dict(content.get("files", {}))
+    files: dict = content.get("files", {})
     selected = {
         k: rel
-        for k, rel in parts.items()
+        for k, rel in content["partitions"].items()
         if partition_values is None
         or k
         in {_normalize_partition_value(v, pcols) for v in partition_values}
@@ -824,84 +818,28 @@ def manifest_cluster_zorder(
         .drop("__z")
     )
     # materializing pending MoR deletes can empty a partition entirely —
-    # absent from what was written, it must DROP, not point at a
-    # never-created directory
+    # absent from what was written, it drops
     _, written = _write_stage(staged, path, pcols, fmt, expect=selected)
-
-    # stats surviving on unrewritten files (loaded against the OLD live
-    # set) merge with fresh stats for the rewritten partitions into a new
-    # sidecar, committed atomically with the data it indexes
-    stats = _load_stats_sidecar(path, content)
-    dir_schemas: dict = dict(content.get("dir_schemas", {}))
-    new_schema = staged.drop(*copies).schema.simpleString()
-    # every OLD live file of the selected partitions is being replaced
-    # (incl. files a file-granular merge carried into other stages) —
-    # capture the set BEFORE repointing so their stale stats drop
-    old_rels = {e[0] for k in selected for e in files.get(k, [])}
-    new_file_rels: list[str] = []
-    for k in selected:
-        if k in written:
-            rel, listed = written[k]
-            parts[k] = rel
-            files[k] = listed
-            dir_schemas[rel] = new_schema
-            new_file_rels.extend(e[0] for e in listed)
-        else:
-            parts.pop(k, None)
-            files.pop(k, None)
-    for frel in old_rels:
-        stats.pop(frel, None)
-    fresh = _collect_stats(
-        spark, path, new_file_rels, zorder_cols, {"fmt": fmt}
+    # the rewritten files get stats for the table's stats columns and the
+    # z-order columns, committed atomically with the data they index
+    stats_cols = sorted(set(content.get("stats_cols", [])) | set(zorder_cols))
+    new_content = _apply_stage(
+        spark, path, {**content, "stats_cols": stats_cols}, list(selected),
+        written, {}, staged.drop(*copies).schema, fmt, pcols,
     )
-    stats.update(fresh)
-    content = dict(content)
-    content["partitions"] = parts
-    content["files"] = files
-    live = _live_dirs({"partitions": parts, "files": files})
-    content["dir_schemas"] = {
-        d: sc for d, sc in dir_schemas.items() if d in live
-    }
-    if content.get("col_ids"):
-        # column mapping: the fresh dirs must record their column ids —
-        # an unmapped dir written AFTER mapping initialization would
-        # read as legacy by-name and lose its columns on a later rename
-        from data_management_service_run_etl_imputations_spark.sources.sinks import (
-            _record_dir_mapping,
-            _struct_field_names,
-        )
-
-        content["dir_col_ids"] = {
-            d: m
-            for d, m in content.get("dir_col_ids", {}).items()
-            if d in live
-        }
-        for k in selected:
-            if k in written:
-                _record_dir_mapping(
-                    content, written[k][0], _struct_field_names(new_schema)
-                )
-    content["stats_ref"] = _write_stats_sidecar(path, stats)
-    content["stats_cols"] = sorted(
-        set(content.get("stats_cols", [])) | set(zorder_cols)
-    )
-    from data_management_service_run_etl_imputations_spark.sources.sinks import (
-        _purge_dead_deletes,
-    )
-
-    content["deletes"] = _purge_dead_deletes(content)
+    n_files = sum(len(written[k][1]) for k in selected if k in written)
     _publish_manifest(
         path,
         version + 1,
-        content,
+        new_content,
         op="optimize-zorder",
         op_metrics={
             "partitions_rewritten": len(selected),
-            "files_written": len(fresh),
+            "files_written": n_files,
             "zorder_cols": list(zorder_cols),
         },
     )
-    return {"partitions": len(selected), "files": len(fresh)}
+    return {"partitions": len(selected), "files": n_files}
 
 
 def manifest_skipping_plan(
@@ -1056,11 +994,6 @@ def manifest_collect_bloom(
     if entry is None or entry["bits"] != bits or entry["k"] != k:
         entry = {"bits": bits, "k": k, "files": {}}
     files: dict = dict(entry["files"])
-    from data_management_service_run_etl_imputations_spark.sources.sinks import (
-        _normalize_partition_value,
-        _partition_cols,
-    )
-
     wanted = (
         None
         if partition_values is None

@@ -903,20 +903,80 @@ def test_compact_keeps_index_sidecars_warm(spark, tmp_path):
     assert len(kept_b) < 4, kept_b
     assert manifest_read(spark, path).count() == 4000
 
-    # refresh_indexes=False keeps the old (now-stale-harmless) sidecar
-    manifest_compact(spark, path, refresh_indexes=False)
-    content2 = _latest_manifest(path)[1]
-    assert content2["stats_ref"] == content["stats_ref"]
+
+def _replace_d1(spark, path, batch):
+    from data_management_service_run_etl_imputations_spark.sources.sinks import (
+        manifest_replace_partitions,
+    )
+
+    manifest_replace_partitions(batch, path, "day", ["d1"])
 
 
-def test_replace_partitions_covers_files_on_stats_table(spark, tmp_path):
-    """replace-partitions on a stats-maintained table covers its staged
-    files in the same commit — metadata MIN/MAX stays answerable with
-    the replaced extremum, no interim ANALYZE."""
+def _manifest_insert(spark, path, batch):
+    from data_management_service_run_etl_imputations_spark.sources.sinks import (
+        manifest_insert,
+    )
+
+    manifest_insert(batch, path)
+
+
+def _sql_insert(verb):
+    def write(spark, path, batch):
+        from data_management_service_run_etl_imputations_spark.sources.manifest_batch import (
+            manifest_sql,
+            manifest_sql_register,
+            manifest_sql_unregister,
+        )
+
+        batch.createOrReplaceTempView("repl_src")
+        manifest_sql_register(spark, "repl_t", path)
+        try:
+            manifest_sql(spark, f"INSERT {verb} repl_t SELECT * FROM repl_src")
+        finally:
+            manifest_sql_unregister(spark, "repl_t")
+
+    return write
+
+
+def _df_write(mode):
+    def write(spark, path, batch):
+        w = batch.write.format("manifest").mode(mode).option("path", path)
+        if mode == "overwrite":
+            w = w.option("partitionOverwriteMode", "dynamic")
+        w.save()
+
+    return write
+
+
+@pytest.mark.parametrize(
+    "write, v_max",
+    [
+        (_replace_d1, 49.0),
+        (_manifest_insert, 99.0),
+        (_sql_insert("INTO"), 99.0),
+        (_sql_insert("OVERWRITE"), 49.0),
+        (_df_write("append"), 99.0),
+        (_df_write("overwrite"), 49.0),
+    ],
+    ids=[
+        "replace_partitions",
+        "manifest_insert",
+        "sql_insert_into",
+        "sql_insert_overwrite",
+        "df_write_append",
+        "df_write_dynamic_overwrite",
+    ],
+)
+def test_replace_partitions_covers_files_on_stats_table(
+    spark, tmp_path, write, v_max
+):
+    """Every writer of staged files on a stats-maintained table covers
+    them in the same commit — metadata MIN/MAX stays answerable with the
+    new extremum, no interim ANALYZE. Overwriting writers replace
+    partition d1 (v up to 49 survives); appending writers keep it."""
     from pyspark.sql import functions as F
 
     from data_management_service_run_etl_imputations_spark.sources.sinks import (
-        manifest_replace_partitions,
         manifest_upsert_partitioned,
     )
     from data_management_service_run_etl_imputations_spark.sources.skipping import (
@@ -934,18 +994,39 @@ def test_replace_partitions_covers_files_on_stats_table(spark, tmp_path):
     manifest_collect_stats(spark, path, ["k", "v"])
     assert manifest_minmax(path, ["v"])["v"] == (0.0, 99.0)
 
-    manifest_replace_partitions(
+    write(
+        spark,
+        path,
         spark.createDataFrame(
             [(1000, "d1", -7.0)], "k LONG, day STRING, v DOUBLE"
         ),
-        path,
-        "day",
-        ["d1"],
     )
     got = manifest_minmax(path, ["v", "k"])
-    assert got["v"] == (-7.0, 49.0)
+    assert got["v"] == (-7.0, v_max)
     assert got["k"] == (0.0, 1000.0)
     assert manifest_collect_stats(spark, path, ["k", "v"]) == {
         "files": 0,
         "directories": 0,
     }
+
+
+def test_zorder_keeps_stats_of_analyzed_columns(spark, tmp_path):
+    """ZORDER BY one column rewrites files with stats for the table's
+    analyzed columns too, so MIN/MAX of those stays answerable."""
+    from data_management_service_run_etl_imputations_spark.sources.skipping import (
+        manifest_minmax,
+    )
+
+    path = str(tmp_path / "zstats")
+    df = spark.range(100).select(
+        F.col("id").alias("k"),
+        (F.col("id") % 2).cast("string").alias("day"),
+        (F.col("id") * 1.0).alias("v"),
+    )
+    manifest_upsert_partitioned(df, path, ["k"], "day")
+    manifest_collect_stats(spark, path, ["v"])
+    manifest_cluster_zorder(spark, path, ["k"], files_per_partition=2)
+    assert manifest_minmax(path, ["v"])["v"] == (0.0, 99.0)
+    assert manifest_minmax(path, ["k"])["k"] == (0.0, 99.0)
+    _, content = _latest_manifest(path)
+    assert content["stats_cols"] == ["k", "v"]
