@@ -50,6 +50,10 @@ RUNTIME_REQUIRED_CONFS: dict[str, str] = {
     # (plans/fixtures._spark_literal), which holds only while backslash
     # escapes are parsed: under `true` a literal backslash would double.
     "spark.sql.parser.escapedStringLiterals": "false",
+    # The manifest DataSource's reader prunes through pushFilters; Spark
+    # refuses to plan a reader that implements it
+    # (DATA_SOURCE_PUSHDOWN_DISABLED) unless this is on.
+    "spark.sql.python.filterPushdown.enabled": "true",
 }
 
 

@@ -14,8 +14,11 @@ table at all. This source closes that gap::
     manifest_sql_register(spark, "my_table", table_root)
     spark.sql("SELECT day, count(*) FROM my_table GROUP BY day")
 
-or raw::
+or raw, on a session that carries the engine's runtime confs
+(:func:`session.ensure_runtime_confs`, which turns on the filter
+pushdown the reader needs)::
 
+    ensure_runtime_confs(spark)
     spark.dataSource.register(ManifestTableDataSource)
     df = (spark.read.format("manifest")
           .option("path", table_root)
@@ -34,13 +37,19 @@ Semantics — BYTE-IDENTICAL to ``manifest_read`` at the same version:
   ``(file, row_index)`` addresses; EQUALITY entries mask key-matching
   rows from the stages that were live when the delete committed —
   both applied executor-side per file, mirroring
-  ``sinks._apply_deletes`` (same null-safe key equality, same stage
-  scoping, same ``key_cols``-vs-``cols`` rename indirection).
+  ``sinks._apply_deletes`` (same null-safe key equality that keeps
+  NULL and NaN apart, same stage scoping, same ``key_cols``-vs-``cols``
+  rename indirection).
 - **Schema evolution + column mapping.** Each file's columns route
   through its directory's stable column ids (``dir_col_ids``) to
   current logical names — renamed columns land under their new name,
   dropped ids are excluded, pre-evolution files null-fill and narrower
   types cast up (the executor-side mirror of ``_load_table_files``).
+
+Both halves run in :func:`manifest_stream._read_data_file`, the one
+executor-side reader of a manifest data file, which the streaming
+feed (append and CDF modes) calls too; the planner picks each file's
+delete entries with :func:`manifest_stream._deletes_by_file`.
 
 Scale design:
 
@@ -61,10 +70,12 @@ Scale design:
   sidecars are shipped by REFERENCE (rel path), read executor-side by
   only the partitions whose stage/file they address — a wide delete is
   never materialized on the driver.
-- **requires the pushdown flag**: Spark calls ``pushFilters`` only
-  when ``spark.sql.python.filterPushdown.enabled`` is true;
-  :func:`manifest_sql_register` sets it. When disabled the scan is
-  unpruned but still correct.
+- **Requires the pushdown flag.** Spark refuses to plan a reader
+  that implements ``pushFilters`` (``DATA_SOURCE_PUSHDOWN_DISABLED``)
+  unless ``spark.sql.python.filterPushdown.enabled`` is true. It is one
+  of ``session.RUNTIME_REQUIRED_CONFS``: :func:`session.get_session`
+  builds sessions with it and :func:`manifest_sql_register` applies it
+  through ``ensure_runtime_confs``.
 
 Reference parity: the reference's only query surface is eager pandas
 behind HTTP (`function_app.py:160-260`); SQL access over a
@@ -87,18 +98,10 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
 )
 
-# sentinels for SQL NULL vs float NaN in executor-side equality-delete
-# key tuples. They must stay DISTINCT: Spark's eqNullSafe/`<=>` (the
-# semantics `sinks._apply_deletes` masks with) treats NULL<=>NULL and
-# NaN<=>NaN as true but NULL<=>NaN as FALSE — collapsing both to one
-# sentinel would make a NULL delete key mask NaN data cells and vice
-# versa, diverging SQL reads from manifest_read.
-_NULL = "\x00__mb_null__"
-_NAN = "\x00__mb_nan__"
-
 
 class _ScanPartition(InputPartition):
-    """One data file plus the delete masks that apply to it."""
+    """One data file plus the delete entries that mask its rows
+    (:func:`manifest_stream._deletes_by_file`)."""
 
     def __init__(
         self,
@@ -107,40 +110,14 @@ class _ScanPartition(InputPartition):
         arrow_schema_bytes: bytes,
         dir_map: dict | None,
         name_by_id: dict | None,
-        pos_refs: list[str],
-        eq_entries: list[dict],
+        deletes: list[dict],
     ):
         self.root = root
         self.rel = rel
         self.arrow_schema_bytes = arrow_schema_bytes
         self.dir_map = dir_map
         self.name_by_id = name_by_id
-        self.pos_refs = pos_refs
-        self.eq_entries = eq_entries
-
-
-def _norm_key(v):
-    """Hashable, null/NaN-normalized key cell for the executor-side
-    equality-delete anti-join (mirror of ``_apply_deletes``'s
-    ``eqNullSafe``): None/NaT → ``_NULL``, float NaN → ``_NAN`` — two
-    DISTINCT sentinels, because NULL <=> NaN is false."""
-    import numpy as np
-    import pandas as pd
-
-    if isinstance(v, (list, tuple, np.ndarray)):
-        return tuple(_norm_key(x) for x in v)
-    if v is None:
-        return _NULL
-    if isinstance(v, (float, np.floating)) and v != v:
-        return _NAN  # float NaN: matches NaN, never SQL NULL
-    try:
-        if pd.isna(v):  # NaT and friends: the domain's NULL
-            return _NULL
-    except (TypeError, ValueError):
-        pass
-    if isinstance(v, np.generic):
-        return v.item()
-    return v
+        self.deletes = deletes
 
 
 class ManifestBatchReader(DataSourceReader):
@@ -298,11 +275,13 @@ class ManifestBatchReader(DataSourceReader):
     def partitions(self):
         import json
 
+        from data_management_service_run_etl_imputations_spark.sources.manifest_stream import (
+            _deletes_by_file,
+        )
         from data_management_service_run_etl_imputations_spark.sources.sinks import (
             _live_file_rels,
             _part_eq_matcher,
             _partition_cols,
-            _stage_of,
         )
 
         content = self.content
@@ -386,114 +365,44 @@ class ManifestBatchReader(DataSourceReader):
             "files_after_partition_prune": n_files_after_parts,
             "files_kept": len(rels),
         }
-        deletes = content.get("deletes") or []
+        rels = sorted(rels)
+        deletes = _deletes_by_file(content.get("deletes") or [], rels)
         dir_col_ids = content.get("dir_col_ids", {})
         col_ids = content.get("col_ids")
         name_by_id = (
             {i: n for n, i in col_ids.items()} if col_ids else None
         )
-        out = []
-        for rel in sorted(rels):
-            d = rel.rsplit("/", 1)[0]
-            stage = _stage_of(rel)
-            pos_refs = [
-                e["ref"]
-                for e in deletes
-                if e.get("kind") == "pos" and rel in (e.get("files") or ())
-            ]
-            eq_entries = [
-                {
-                    "ref": e["ref"],
-                    "cols": e["cols"],
-                    "key_cols": e.get("key_cols", e["cols"]),
-                }
-                for e in deletes
-                if e.get("kind") != "pos" and stage in e["stages"]
-            ]
-            out.append(
-                _ScanPartition(
-                    self.path,
-                    rel,
-                    self._arrow_schema_bytes,
-                    dir_col_ids.get(d),
-                    name_by_id,
-                    pos_refs,
-                    eq_entries,
-                )
+        return [
+            _ScanPartition(
+                self.path,
+                rel,
+                self._arrow_schema_bytes,
+                dir_col_ids.get(rel.rsplit("/", 1)[0]),
+                name_by_id,
+                deletes.get(rel, []),
             )
-        return out
+            for rel in rels
+        ]
 
     # -- execution (runs on executors) ------------------------------------
     def read(self, partition):
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         from data_management_service_run_etl_imputations_spark.sources.manifest_stream import (
-            _source_columns,
+            _read_data_file,
         )
 
         p = partition
         if p is None:  # fully pruned scan: Spark still planned one task
             return iter(())
-        t = pq.read_table(f"{p.root}/{p.rel}")
-        # 1) positional masks address raw row order within THIS file
-        if p.pos_refs:
-            import numpy as np
-
-            drop: set[int] = set()
-            for ref in p.pos_refs:
-                side = pq.read_table(
-                    f"{p.root}/{ref}", columns=["file", "pos"]
-                )
-                files = side.column("file").to_pylist()
-                poss = side.column("pos").to_pylist()
-                drop.update(
-                    int(pos)
-                    for f, pos in zip(files, poss)
-                    if f == p.rel
-                )
-            if drop:
-                keep = np.ones(len(t), dtype=bool)
-                keep[sorted(i for i in drop if i < len(t))] = False
-                t = t.filter(pa.array(keep))
-        # 2) align to the current logical schema through column mapping
-        target = pa.ipc.read_schema(
-            pa.BufferReader(p.arrow_schema_bytes)
+        t = _read_data_file(
+            p.root,
+            p.rel,
+            pa.ipc.read_schema(pa.BufferReader(p.arrow_schema_bytes)),
+            p.dir_map,
+            p.name_by_id,
+            p.deletes,
         )
-        src_of = _source_columns(t.column_names, p.dir_map, p.name_by_id)
-        n = len(t)
-        cols = []
-        for field in target:
-            if field.name in src_of:
-                cols.append(t.column(src_of[field.name]).cast(field.type))
-            else:
-                cols.append(pa.nulls(n, field.type))
-        t = pa.table(cols, schema=target)
-        # 3) equality masks: null-safe key anti-join per pending entry
-        for entry in p.eq_entries:
-            side = pq.read_table(
-                f"{p.root}/{entry['ref']}", columns=entry["key_cols"]
-            )
-            del_keys = {
-                tuple(_norm_key(v) for v in row)
-                for row in zip(
-                    *[
-                        side.column(c).to_pylist()
-                        for c in entry["key_cols"]
-                    ]
-                )
-            }
-            if not del_keys:
-                continue
-            data_cols = [
-                t.column(c).to_pylist() for c in entry["cols"]
-            ]
-            keep_mask = [
-                tuple(_norm_key(v) for v in row) not in del_keys
-                for row in zip(*data_cols)
-            ]
-            if not all(keep_mask):
-                t = t.filter(pa.array(keep_mask))
         return iter(t.to_batches())
 
 
@@ -572,16 +481,12 @@ def _native_read_frame(spark, path: str, version: int):
         _pruned_resolve,
     )
 
-    max_files = _NATIVE_READ_MAX_FILES
-    if max_files <= 0:  # 0 switches native binding off
-        return None
-
     resolved = _pruned_resolve(path, version)
     if resolved is not None:
         meta, files_plan = resolved
         # partitions ≤ files: reject oversized tables BEFORE hydrating
         # any file list (the lazy plan exists precisely for them)
-        if len(meta.get("partitions", {})) > max_files:
+        if len(meta.get("partitions", {})) > _NATIVE_READ_MAX_FILES:
             return None
         content = {
             **meta,
@@ -604,7 +509,7 @@ def _native_read_frame(spark, path: str, version: int):
         for k in sorted(set(content.get("partitions", {})) | set(files))
         for e in files.get(k, [])
     ]
-    if len(rels) > max_files:
+    if len(rels) > _NATIVE_READ_MAX_FILES:
         return None
     if not rels:
         return spark.createDataFrame(
@@ -709,12 +614,12 @@ def manifest_sql_register(
     prune: bool = True,
 ):
     """Expose a manifest table to SQL: register the ``manifest`` format,
-    enable Python-DataSource filter pushdown (prune-only — disabled, the
-    scan is merely unpruned), load the table, and publish it as a temp
-    view. Returns the DataFrame. A SELECT with pushable filters prunes
-    files at plan time; the SNAPSHOT stays pinned to registration time
-    (re-register to see newer commits — the same "view of a version"
-    contract as Delta's ``@v`` syntax).
+    apply the engine's runtime confs (Python-DataSource filter pushdown
+    among them, which the reader cannot be planned without), load the
+    table, and publish it as a temp view. Returns the DataFrame. A
+    SELECT with pushable filters prunes files at plan time; the SNAPSHOT
+    stays pinned to registration time (re-register to see newer commits
+    — the same "view of a version" contract as Delta's ``@v`` syntax).
 
     ONE-FILTER-CONTEXT-PER-BINDING contract (``prune=True``, default):
     Spark caches a Python DataSource's planned scan per relation
@@ -746,14 +651,14 @@ def manifest_sql_register(
             "follow_head=True pins to the moving head — it cannot be "
             "combined with an explicit version/as_of"
         )
-    try:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    except Exception:  # noqa: BLE001 — older/locked conf: stay unpruned
-        pass
+    from data_management_service_run_etl_imputations_spark.session import (
+        ensure_runtime_confs,
+    )
     from data_management_service_run_etl_imputations_spark.sources.sinks import (
         _resolve_version,
     )
 
+    ensure_runtime_confs(spark)
     spark.dataSource.register(ManifestTableDataSource)
     with _SQL_REG_LOCK:
         bound_v = _resolve_version(

@@ -62,9 +62,16 @@ the immutable commit log:
   (pre-images are suppressed), unmatched added rows are ``insert``,
   unmatched removed rows are ``delete`` — so MoR deletes and partition
   rewrites surface as real change rows, the gap the append-driven mode
-  documents.
+  documents. Rows compare with SQL NULL and float NaN distinct (the
+  ``eqNullSafe`` semantics of ``manifest_read`` and ``manifest_diff``),
+  and are emitted as read, never through pandas.
 - Content-identical maintenance commits (compact, Z-order, analyze,
   constraints) are skipped at plan time — zero I/O.
+
+Every executor read of a data file — append mode, both CDF sides and
+the batch ``manifest`` source — goes through :func:`_read_data_file`;
+the planners pick each file's delete entries with
+:func:`_deletes_by_file`.
 
 Usage::
 
@@ -98,21 +105,29 @@ _CDF_SKIP_OPS = (
     "drop-constraint",
 )
 
-# sentinel standing in for SQL NULL during the executor-side multiset
-# diff: NaN != NaN would keep identical survivor rows from cancelling
-_NULL = "\x00__cdf_null__"
+# sentinels for SQL NULL and float NaN in the executor-side row keys
+# (equality-delete masks and the CDF multiset diff). They stay DISTINCT:
+# Spark's eqNullSafe/`<=>`, which `sinks._apply_deletes` masks with,
+# holds for NULL<=>NULL and NaN<=>NaN but not for NULL<=>NaN.
+_NULL = "\x00__null__"
+_NAN = "\x00__nan__"
 
 
 class _FilePartition(InputPartition):
+    """One data file a commit added (append mode); an empty ``rel`` is
+    the placeholder partition of a batch with nothing to read."""
+
     def __init__(
         self,
-        file_path: str,
+        root: str,
+        rel: str,
         version: int,
         arrow_schema_bytes: bytes,
         dir_map: dict | None = None,
         name_by_id: dict | None = None,
     ):
-        self.file_path = file_path
+        self.root = root
+        self.rel = rel
         self.version = version
         self.arrow_schema_bytes = arrow_schema_bytes
         # column mapping: {file_col -> stable id} for this file's dir and
@@ -140,11 +155,151 @@ def _source_columns(
     return out
 
 
+def _norm_cell(v):
+    """Hashable stand-in for one Arrow cell (a ``to_pylist`` value):
+    NULL → ``_NULL``, NaN → ``_NAN`` (so NaN matches NaN but never NULL),
+    lists and maps → tuples, structs → tuples of (field, value)."""
+    if v is None:
+        return _NULL
+    if isinstance(v, float):
+        return _NAN if v != v else v
+    if isinstance(v, (list, tuple)):
+        return tuple(_norm_cell(x) for x in v)
+    if isinstance(v, dict):
+        return tuple((k, _norm_cell(x)) for k, x in v.items())
+    return v
+
+
+def _row_keys(t, cols: list[str]) -> list[tuple]:
+    """The normalised key of every row of Arrow table ``t`` over
+    ``cols``."""
+    return [
+        tuple(_norm_cell(v) for v in row)
+        for row in zip(*(t.column(c).to_pylist() for c in cols))
+    ]
+
+
+def _deletes_by_file(deletes: list[dict], rels) -> dict[str, list[dict]]:
+    """{rel: the pending merge-on-read entries that mask rows of that
+    data file} — a positional entry that lists the file, an equality
+    entry whose ``stages`` hold the file's stage — slimmed to what an
+    executor reads. Files no entry touches are absent."""
+    from data_management_service_run_etl_imputations_spark.sources.sinks import (
+        _stage_of,
+    )
+
+    out: dict[str, list[dict]] = {}
+    for e in deletes:
+        if e.get("kind") == "pos":
+            files = set(e.get("files") or ())
+            hit = [r for r in rels if r in files]
+            slim = {"ref": e["ref"], "kind": "pos"}
+        else:
+            stages = set(e["stages"])
+            hit = [r for r in rels if _stage_of(r) in stages]
+            slim = {
+                "ref": e["ref"],
+                "cols": e["cols"],
+                "key_cols": e.get("key_cols", e["cols"]),
+            }
+        for r in hit:
+            out.setdefault(r, []).append(slim)
+    return out
+
+
+def _read_data_file(
+    root: str,
+    rel: str,
+    target,
+    dir_map: dict | None,
+    name_by_id: dict | None,
+    deletes: list[dict] = (),
+    sidecars: dict | None = None,
+):
+    """The rows of data file ``root/rel`` as an Arrow table of schema
+    ``target`` — the executor-side read every manifest reader shares,
+    the Arrow mirror of ``sinks._load_table_files`` under
+    ``sinks._apply_deletes``:
+
+    1. positional masks drop exact physical rows (they address the
+       file's raw row order, so they go first);
+    2. columns route through the file's column-id map to their current
+       names; missing columns null-fill and narrower types cast up;
+    3. equality masks drop rows whose ``cols`` match a key of the
+       entry's sidecar, NULL-safe and NULL/NaN-distinct.
+
+    ``deletes`` are this file's entries (:func:`_deletes_by_file`);
+    ``sidecars`` caches their parsed sidecars by ref so a task that
+    reads several files reads each sidecar once."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    if sidecars is None:
+        sidecars = {}
+
+    def sidecar(e):
+        if e["ref"] not in sidecars:
+            if e.get("kind") == "pos":
+                sidecars[e["ref"]] = pq.read_table(
+                    f"{root}/{e['ref']}", columns=["file", "pos"]
+                )
+            else:
+                kt = pq.read_table(f"{root}/{e['ref']}", columns=e["key_cols"])
+                sidecars[e["ref"]] = set(_row_keys(kt, e["key_cols"]))
+        return sidecars[e["ref"]]
+
+    t = pq.read_table(f"{root}/{rel}")
+    pos_sides = [sidecar(e) for e in deletes if e.get("kind") == "pos"]
+    if pos_sides and len(t):
+        keep = np.ones(len(t), dtype=bool)
+        for side in pos_sides:
+            pos = side.filter(pc.equal(side["file"], rel))["pos"].to_numpy()
+            keep[pos[pos < len(t)]] = False
+        if not keep.all():
+            t = t.filter(keep)
+    src_of = _source_columns(t.column_names, dir_map, name_by_id)
+    n = len(t)
+    t = pa.table(
+        [
+            t.column(src_of[f.name]).cast(f.type)
+            if f.name in src_of
+            else pa.nulls(n, f.type)
+            for f in target
+        ],
+        schema=target,
+    )
+    for e in deletes:
+        if e.get("kind") == "pos" or not len(t):
+            continue
+        keys = sidecar(e)
+        if keys:
+            keep = [k not in keys for k in _row_keys(t, e["cols"])]
+            if not all(keep):
+                t = t.filter(pa.array(keep))
+    return t
+
+
+def _stamped(t, version: int, change_types=None):
+    """``t`` with the feed's trailing columns appended: ``_change_type``
+    (a string or one per row) when given, then ``_commit_version``."""
+    import pyarrow as pa
+
+    n = len(t)
+    if change_types is not None:
+        if isinstance(change_types, str):
+            change_types = [change_types] * n
+        t = t.append_column(CHANGE_COL, pa.array(change_types, pa.string()))
+    return t.append_column(VERSION_COL, pa.array([version] * n, pa.int64()))
+
+
 class _CdfPartition(InputPartition):
     """One (version, table-partition) diff unit: the file rels present on
     only one side (or covered by a delete-entry delta), each side's
-    applicable MoR delete entries, and the commit's recorded merge keys
-    for update pairing."""
+    delete entries per file (:func:`_deletes_by_file`) and column-id map
+    per file, and the commit's recorded merge keys for update
+    pairing."""
 
     def __init__(
         self,
@@ -152,24 +307,24 @@ class _CdfPartition(InputPartition):
         version: int,
         old_rels: list[str],
         new_rels: list[str],
-        old_deletes: list[dict],
-        new_deletes: list[dict],
+        old_deletes: dict,
+        new_deletes: dict,
         change_keys: list[str] | None,
         arrow_schema_bytes: bytes,
-        old_maps: dict | None = None,
-        new_maps: dict | None = None,
+        old_maps: dict,
+        new_maps: dict,
         name_by_id: dict | None = None,
     ):
         self.root = root
         self.version = version
         self.old_rels = old_rels
         self.new_rels = new_rels
-        self.old_deletes = old_deletes
+        self.old_deletes = old_deletes  # {rel: [entry]} per side
         self.new_deletes = new_deletes
         self.change_keys = change_keys
         self.arrow_schema_bytes = arrow_schema_bytes
-        self.old_maps = old_maps or {}  # {rel: {file_col: id}} per side
-        self.new_maps = new_maps or {}
+        self.old_maps = old_maps  # {rel: {file_col: id}} per side
+        self.new_maps = new_maps
         self.name_by_id = name_by_id
 
 
@@ -368,7 +523,8 @@ class ManifestFeedStreamReader(DataSourceStreamReader):
                     d = frel.rsplit("/", 1)[0]
                     parts.append(
                         _FilePartition(
-                            f"{self.path}/{frel}",
+                            self.path,
+                            frel,
                             v,
                             self._arrow_schema_bytes,
                             self._head_dir_ids.get(d) or dci.get(d),
@@ -378,7 +534,9 @@ class ManifestFeedStreamReader(DataSourceStreamReader):
         # Spark requires >=1 partition per planned batch; an empty range
         # (e.g. a metadata-only commit) contributes an empty partition
         if not parts:
-            parts.append(_FilePartition("", -1, self._arrow_schema_bytes))
+            parts.append(
+                _FilePartition(self.path, "", -1, self._arrow_schema_bytes)
+            )
         return parts
 
     def _cdf_partitions(self, lo: int, hi: int) -> list:
@@ -445,20 +603,8 @@ class ManifestFeedStreamReader(DataSourceStreamReader):
                         v,
                         o_side,
                         n_side,
-                        [
-                            e
-                            for e in old.get("deletes") or []
-                            if any(
-                                _stage_of(r) in e["stages"] for r in o_side
-                            )
-                        ],
-                        [
-                            e
-                            for e in new.get("deletes") or []
-                            if any(
-                                _stage_of(r) in e["stages"] for r in n_side
-                            )
-                        ],
+                        _deletes_by_file(old.get("deletes") or [], o_side),
+                        _deletes_by_file(new.get("deletes") or [], n_side),
                         list(keys) if keys else None,
                         self._arrow_schema_bytes,
                         {
@@ -478,31 +624,19 @@ class ManifestFeedStreamReader(DataSourceStreamReader):
 
     def read(self, partition):
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         if isinstance(partition, _CdfPartition):
             return _read_cdf_partition(partition)
-        target = pa.ipc.read_schema(
-            pa.BufferReader(partition.arrow_schema_bytes)
-        )
-        if not partition.file_path:
+        if not partition.rel:
             return iter(())
-        t = pq.read_table(partition.file_path)
-        n = len(t)
-        src_of = _source_columns(
-            t.column_names, partition.dir_map, partition.name_by_id
+        t = _read_data_file(
+            partition.root,
+            partition.rel,
+            pa.ipc.read_schema(pa.BufferReader(partition.arrow_schema_bytes)),
+            partition.dir_map,
+            partition.name_by_id,
         )
-        cols = []
-        for field in target:
-            if field.name in src_of:
-                cols.append(t.column(src_of[field.name]).cast(field.type))
-            else:
-                cols.append(pa.nulls(n, field.type))  # pre-evolution file
-        cols.append(pa.array([partition.version] * n, pa.int64()))
-        out = pa.table(
-            cols, schema=target.append(pa.field(VERSION_COL, pa.int64()))
-        )
-        return iter(out.to_batches())
+        return iter(_stamped(t, partition.version).to_batches())
 
     def commit(self, end: dict) -> None:
         # progress lives in Spark's checkpoint; manifests are immutable.
@@ -513,213 +647,90 @@ class ManifestFeedStreamReader(DataSourceStreamReader):
         pass
 
 
-def _norm_value(v):
-    """Hashable, null-normalized stand-in for a cell value so identical
-    rows cancel in the multiset diff: NULL/NaN → sentinel (NaN != NaN
-    would keep every null-bearing survivor alive as phantom churn),
-    arrays/maps → tuples."""
-    import numpy as np
-    import pandas as pd
-
-    if isinstance(v, (list, tuple, np.ndarray)):
-        return tuple(_norm_value(x) for x in v)
-    if isinstance(v, dict):
-        return tuple(sorted((k, _norm_value(x)) for k, x in v.items()))
-    try:
-        if pd.isna(v):
-            return _NULL
-    except (TypeError, ValueError):
-        pass
-    return v
-
-
 def _read_cdf_partition(p: "_CdfPartition"):
     """Executor-side change computation for one (version, partition)
-    unit: read both file sets (aligned to the stream schema), apply each
-    side's merge-on-read delete masks, multiset-diff, and classify. Cost
-    is bounded by the rows of the files that actually CHANGED — the
-    file-granular writers keep that the touched slice, never the
-    partition."""
-    import numpy as np
-    import pandas as pd
+    unit: read both file sets through :func:`_read_data_file` (aligned
+    to the stream schema, each side's delete masks applied), take the
+    multiset difference on normalised Arrow rows, and emit the
+    differing rows by ``take``. Cost is bounded by the rows of the files
+    that actually CHANGED — the file-granular writers keep that the
+    touched slice, never the partition."""
+    from collections import Counter
+
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     target = pa.ipc.read_schema(pa.BufferReader(p.arrow_schema_bytes))
-    names = [f.name for f in target]
-    delete_keys_cache: dict[str, pd.DataFrame] = {}
+    sidecars: dict = {}  # shared by both sides: one read per sidecar
 
-    def _sentinel(df: pd.DataFrame, cols: list[str]) -> pd.DataFrame:
-        out = pd.DataFrame(index=df.index)
-        for c in cols:
-            s = df[c]
-            out[c] = s.astype(object).where(s.notna(), _NULL)
-        return out
-
-    def _load_side(
-        rels: list[str], deletes: list[dict], maps: dict
-    ) -> pd.DataFrame:
-        frames = []
-        for rel in rels:
-            t = pq.read_table(f"{p.root}/{rel}")
-            n = len(t)
-            src_of = _source_columns(
-                t.column_names, maps.get(rel), p.name_by_id
+    def side(rels: list[str], deletes: dict, maps: dict):
+        tables = [
+            _read_data_file(
+                p.root,
+                rel,
+                target,
+                maps.get(rel),
+                p.name_by_id,
+                deletes.get(rel, ()),
+                sidecars,
             )
-            cols = []
-            for field in target:
-                if field.name in src_of:
-                    cols.append(t.column(src_of[field.name]).cast(field.type))
-                else:
-                    cols.append(pa.nulls(n, field.type))
-            df = pa.table(cols, schema=target).to_pandas().reset_index(
-                drop=True
-            )
-            stage = rel.split("/__p")[0]
-            # POSITIONAL masks first: row_index refers to the PHYSICAL
-            # row order of the file, which is exactly the frame's index
-            # right now (whole-file read, 0..n-1) and stops being so the
-            # moment any other mask filters rows
-            for entry in deletes:
-                if entry.get("kind") != "pos" or df.empty:
-                    continue
-                if rel not in entry.get("files", []):
-                    continue
-                ck = (entry["ref"], "__pos__")
-                if ck not in delete_keys_cache:
-                    delete_keys_cache[ck] = (
-                        pq.read_table(f"{p.root}/{entry['ref']}")
-                        .to_pandas()
-                    )
-                kdf = delete_keys_cache[ck]
-                pos = kdf.loc[kdf["file"] == rel, "pos"]
-                if len(pos):
-                    df = df[~df.index.isin(set(pos.tolist()))]
-            df = df.reset_index(drop=True)
-            for entry in deletes:
-                if entry.get("kind") == "pos":
-                    continue
-                if stage not in entry["stages"] or df.empty:
-                    continue
-                ck = (entry["ref"], tuple(entry["cols"]))
-                if ck not in delete_keys_cache:
-                    kt = pq.read_table(f"{p.root}/{entry['ref']}")
-                    kdf = kt.to_pandas()
-                    # key files keep pre-rename physical names; re-label
-                    # to the entry's current logical match columns
-                    fcols = entry.get("key_cols", entry["cols"])
-                    kdf = kdf[list(fcols)]
-                    kdf.columns = list(entry["cols"])
-                    delete_keys_cache[ck] = kdf
-                kcols = list(entry["cols"])
-                rk = _sentinel(
-                    delete_keys_cache[ck], kcols
-                ).drop_duplicates()
-                rk = rk.assign(__hit=1)
-                m = _sentinel(df, kcols).merge(rk, on=kcols, how="left")
-                df = df[m["__hit"].isna().to_numpy()].reset_index(drop=True)
-            frames.append(df)
-        if not frames:
-            return pd.DataFrame(columns=names)
-        return pd.concat(frames, ignore_index=True)
+            for rel in rels
+        ]
+        return pa.concat_tables(tables) if tables else target.empty_table()
 
-    def _index(df: pd.DataFrame):
-        from collections import Counter
+    old = side(p.old_rels, p.old_deletes, p.old_maps)
+    new = side(p.new_rels, p.new_deletes, p.new_maps)
+    # FAST PATH: one side is empty, so every surviving row of the other
+    # side is a change of one type — no normalisation, no per-row
+    # hashing. This is the dominant shape (v1 backfill and append-only
+    # commits).
+    if not p.old_rels:
+        return iter(_stamped(new, p.version, "insert").to_batches())
+    if not p.new_rels:
+        return iter(_stamped(old, p.version, "delete").to_batches())
+    names = target.names
 
+    def index(t):
         counts: Counter = Counter()
         first: dict = {}
-        vals = (
-            df[names].to_numpy(dtype=object)
-            if len(df)
-            else np.empty((0, len(names)), dtype=object)
-        )
-        for i in range(len(vals)):
-            key = tuple(_norm_value(x) for x in vals[i])
+        for i, key in enumerate(_row_keys(t, names)):
             counts[key] += 1
-            first.setdefault(key, vals[i])
+            first.setdefault(key, i)
         return counts, first
 
-    def _emit_whole_side(df: pd.DataFrame, ctype: str):
-        # FAST PATH: one side is empty, so every surviving row of the
-        # other side is a change of one type — no normalization, no
-        # per-row hashing; vectorized pandas → Arrow. This is the
-        # dominant shape (v1 backfill and append-only commits).
-        n = len(df)
-        if not n:
-            return iter(())
-        cols = [
-            pa.array(df[f.name], type=f.type, from_pandas=True)
-            for f in target
+    oc, of_ = index(old)
+    nc, nf_ = index(new)
+    # (row index on its side, multiplicity, normalised row)
+    added = [(nf_[k], n - oc[k], k) for k, n in nc.items() if n > oc[k]]
+    removed = [(of_[k], n - nc[k], k) for k, n in oc.items() if n > nc[k]]
+
+    ki = [names.index(k) for k in p.change_keys or () if k in names]
+
+    def key_of(row):
+        return tuple(row[j] for j in ki)
+
+    removed_keys = {key_of(k) for _, _, k in removed} if ki else set()
+    added_keys = {key_of(k) for _, _, k in added} if ki else set()
+    add_idx, add_types, del_idx = [], [], []
+    for i, m, k in added:
+        add_idx += [i] * m
+        add_types += [
+            "update_post" if key_of(k) in removed_keys else "insert"
+        ] * m
+    for i, m, k in removed:
+        if key_of(k) in added_keys:
+            continue  # pre-image of an update: suppressed
+        del_idx += [i] * m
+    out = pa.concat_tables(
+        [
+            _stamped(
+                new.take(pa.array(add_idx, pa.int64())), p.version, add_types
+            ),
+            _stamped(
+                old.take(pa.array(del_idx, pa.int64())), p.version, "delete"
+            ),
         ]
-        cols.append(pa.array([ctype] * n, pa.string()))
-        cols.append(pa.array([p.version] * n, pa.int64()))
-        out_schema = target.append(
-            pa.field(CHANGE_COL, pa.string())
-        ).append(pa.field(VERSION_COL, pa.int64()))
-        return iter(pa.table(cols, schema=out_schema).to_batches())
-
-    if not p.old_rels:
-        return _emit_whole_side(
-            _load_side(p.new_rels, p.new_deletes, p.new_maps), "insert"
-        )
-    if not p.new_rels:
-        return _emit_whole_side(
-            _load_side(p.old_rels, p.old_deletes, p.old_maps), "delete"
-        )
-
-    oc, of_ = _index(_load_side(p.old_rels, p.old_deletes, p.old_maps))
-    nc, nf_ = _index(_load_side(p.new_rels, p.new_deletes, p.new_maps))
-    added, removed = [], []  # (original_row, multiplicity, norm_key)
-    for key in oc.keys() | nc.keys():
-        d = nc.get(key, 0) - oc.get(key, 0)
-        if d > 0:
-            added.append((nf_[key], d, key))
-        elif d < 0:
-            removed.append((of_[key], -d, key))
-
-    ki = (
-        [names.index(k) for k in p.change_keys if k in names]
-        if p.change_keys
-        else []
     )
-    out_rows: list[tuple] = []
-    if ki:
-        removed_keys = {tuple(k[j] for j in ki) for _, _, k in removed}
-        added_keys = {tuple(k[j] for j in ki) for _, _, k in added}
-        for row, m, k in added:
-            ctype = (
-                "update_post"
-                if tuple(k[j] for j in ki) in removed_keys
-                else "insert"
-            )
-            out_rows.extend([(row, ctype)] * m)
-        for row, m, k in removed:
-            if tuple(k[j] for j in ki) in added_keys:
-                continue  # pre-image of an update: suppressed
-            out_rows.extend([(row, "delete")] * m)
-    else:
-        for row, m, _ in added:
-            out_rows.extend([(row, "insert")] * m)
-        for row, m, _ in removed:
-            out_rows.extend([(row, "delete")] * m)
-    if not out_rows:
-        return iter(())
-
-    cols = []
-    for j, field in enumerate(target):
-        cols.append(
-            pa.array(
-                [r[0][j] for r in out_rows],
-                type=field.type,
-                from_pandas=True,
-            )
-        )
-    cols.append(pa.array([r[1] for r in out_rows], pa.string()))
-    cols.append(pa.array([p.version] * len(out_rows), pa.int64()))
-    out_schema = target.append(pa.field(CHANGE_COL, pa.string())).append(
-        pa.field(VERSION_COL, pa.int64())
-    )
-    return iter(pa.table(cols, schema=out_schema).to_batches())
+    return iter(out.to_batches())
 
 
 class ManifestFeedDataSource(DataSource):

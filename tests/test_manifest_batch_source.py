@@ -180,6 +180,37 @@ def test_missing_path_or_table_fails_loudly(spark, table_path):
         ).load().count()
 
 
+def test_raw_read_on_session_with_runtime_confs(spark, table_path):
+    """The raw ``spark.read.format("manifest")`` read of the module
+    docstring plans on any session that carries the engine's runtime
+    confs, without ``manifest_sql_register`` having run: the reader
+    implements pushFilters, which Spark refuses to plan with Python
+    filter pushdown off. Rows equal manifest_read, NULL/NaN-distinct
+    equality delete included."""
+    from data_management_service_run_etl_imputations_spark.session import (
+        ensure_runtime_confs,
+    )
+
+    rows = [(1, "d0", None), (2, "d0", float("nan")), (3, "d1", 1.0)]
+    manifest_upsert_partitioned(
+        _batch(spark, rows).coalesce(1), table_path, ["k"], "day"
+    )
+    manifest_delete(
+        spark.createDataFrame([(None,)], "v DOUBLE"), table_path, ["v"]
+    )
+    spark.conf.unset("spark.sql.python.filterPushdown.enabled")
+    ensure_runtime_confs(spark)
+    spark.dataSource.register(ManifestTableDataSource)
+    got = (
+        spark.read.format("manifest")
+        .option("path", table_path)
+        .load()
+        .select("k")
+    )
+    want = manifest_read(spark, table_path).select("k")
+    assert _rows(got) == _rows(want) == [(2,), (3,)]
+
+
 def test_sql_read_on_checkpointed_version_prunes_flat(spark, table_path):
     """On a checkpointed version the reader holds only the checkpoint's
     meta half and fetches file lists for just the partitions surviving

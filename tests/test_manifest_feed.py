@@ -349,6 +349,85 @@ def test_cdf_mode_emits_insert_update_delete(spark, table_path):
     ], got
 
 
+def _delete_null_v(spark, table_path):
+    from data_management_service_run_etl_imputations_spark.sources.sinks import (
+        manifest_delete,
+    )
+
+    manifest_delete(
+        spark.createDataFrame([(None,)], "v DOUBLE"), table_path, ["v"]
+    )
+
+
+def _upsert_nan_over_null(spark, table_path):
+    manifest_upsert_partitioned(
+        _batch(spark, [(3, "d1", float("nan"))]), table_path, ["k"], "day"
+    )
+
+
+@pytest.mark.parametrize(
+    "change, want_v2",
+    [
+        # a NULL equality-delete key masks the NULL row only: the NaN row
+        # stays in the table, so it must not emit a delete
+        (_delete_null_v, [(3, None, "delete", 2)]),
+        # NULL -> NaN is a real change of the row (manifest_diff agrees)
+        (_upsert_nan_over_null, [(3, "NaN", "update_post", 2)]),
+    ],
+    ids=["null_key_delete", "null_to_nan_upsert"],
+)
+def test_cdf_keeps_null_and_nan_apart(spark, table_path, change, want_v2):
+    """The CDF diff and its delete masks treat SQL NULL and float NaN as
+    distinct values (eqNullSafe semantics, as manifest_read), and emit a
+    NaN cell as NaN."""
+    import math
+
+    manifest_upsert_partitioned(
+        _batch(
+            spark,
+            [(1, "d1", float("nan")), (2, "d1", 1.0), (3, "d1", None)],
+        ).coalesce(1),
+        table_path,
+        ["k"],
+        "day",
+    )
+    change(spark, table_path)
+
+    spark.dataSource.register(ManifestFeedDataSource)
+    name = f"cdfn_{uuid.uuid4().hex[:8]}"
+    q = (
+        spark.readStream.format("manifest_feed")
+        .option("path", table_path)
+        .option("mode", "cdf")
+        .load()
+        .writeStream.format("memory")
+        .queryName(name)
+        .option("checkpointLocation", f"{table_path}_ckpt")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+        rows = spark.sql(
+            f"select k, v, _change_type, _commit_version from {name}"
+        ).collect()
+    finally:
+        q.stop()
+    got = sorted(
+        (
+            (k, "NaN" if v is not None and math.isnan(v) else v, c, ver)
+            for k, v, c, ver in rows
+        ),
+        key=repr,
+    )
+    want = [
+        (1, "NaN", "insert", 1),
+        (2, 1.0, "insert", 1),
+        (3, None, "insert", 1),
+        *want_v2,
+    ]
+    assert got == sorted(want, key=repr), got
+
+
 def test_cdf_mode_skips_content_identical_maintenance(spark, table_path):
     """Compaction and analyze commits are content-identical by protocol
     contract: the CDF planner skips them without reading any data, and a
