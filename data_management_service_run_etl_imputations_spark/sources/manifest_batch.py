@@ -477,6 +477,7 @@ def _native_read_frame(spark, path: str, version: int):
         _has_pos_deletes,
         _load_files_pruned,
         _load_table_files,
+        _local_frame,
         _materialize,
         _pruned_resolve,
     )
@@ -512,8 +513,8 @@ def _native_read_frame(spark, path: str, version: int):
     if len(rels) > _NATIVE_READ_MAX_FILES:
         return None
     if not rels:
-        return spark.createDataFrame(
-            [], StructType.fromJson(json.loads(schema_json))
+        return _local_frame(
+            spark, [], StructType.fromJson(json.loads(schema_json))
         )
     df = _load_table_files(
         spark, path, content, rels, with_pos=_has_pos_deletes(content)
@@ -1517,6 +1518,7 @@ def _dispatch_util_statement(spark, stmt: str):
     )
     if m:
         from data_management_service_run_etl_imputations_spark.sources.sinks import (
+            _local_frame,
             manifest_history,
         )
 
@@ -1533,7 +1535,8 @@ def _dispatch_util_statement(spark, stmt: str):
             )
             for h in reversed(manifest_history(path))  # newest first
         ]
-        return spark.createDataFrame(
+        return _local_frame(
+            spark,
             rows,
             "version INT, op STRING, committed_at DOUBLE, "
             "n_partitions INT, n_files INT, pending_deletes INT, "
@@ -1858,6 +1861,9 @@ def _dispatch_util_statement(spark, stmt: str):
             catalog_tables,
             catalog_views,
         )
+        from data_management_service_run_etl_imputations_spark.sources.sinks import (
+            _local_frame,
+        )
 
         wh = attached_warehouse()
         cat = catalog_tables(wh) if wh else {}
@@ -1884,7 +1890,8 @@ def _dispatch_util_statement(spark, stmt: str):
             )
         for k in sorted(set(cat_v) - set(reg_views)):
             rows.append((k, None, False, True, None, None, "view"))
-        return spark.createDataFrame(
+        return _local_frame(
+            spark,
             rows,
             "table STRING, location STRING, registered BOOLEAN, "
             "cataloged BOOLEAN, bound_version INT, follow_head BOOLEAN, "
@@ -2189,6 +2196,7 @@ def _dispatch_util_statement(spark, stmt: str):
     )
     if m:
         from data_management_service_run_etl_imputations_spark.sources.sinks import (
+            _local_frame,
             _partition_cols,
         )
 
@@ -2211,7 +2219,8 @@ def _dispatch_util_statement(spark, stmt: str):
             json.dumps(content.get("constraints") or {}, sort_keys=True),
             content.get("schema"),
         )
-        return spark.createDataFrame(
+        return _local_frame(
+            spark,
             [row],
             "format STRING, location STRING, version INT, "
             "partition_columns ARRAY<STRING>, num_partitions INT, "
@@ -2226,6 +2235,7 @@ def _dispatch_util_statement(spark, stmt: str):
         # SHOW PARTITIONS is core Spark SQL — ours only for registered
         # manifest views (pure manifest metadata, zero file listing)
         from data_management_service_run_etl_imputations_spark.sources.sinks import (
+            _local_frame,
             _partition_cols,
         )
 
@@ -2245,9 +2255,7 @@ def _dispatch_util_statement(spark, stmt: str):
             )
             for k in sorted(content.get("partitions", {}))
         ]
-        return spark.createDataFrame(
-            rows, "partition STRING, num_files INT"
-        )
+        return _local_frame(spark, rows, "partition STRING, num_files INT")
 
     m = re.match(
         r"RESTORE\s+(?:TABLE\s+)?(`[^`]+`|[A-Za-z_][\w.]*)\s+TO\s+"

@@ -9,9 +9,15 @@ Re-runs are idempotent by construction.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+from data_management_service_run_etl_imputations_spark.session import (
+    ensure_runtime_confs,
+)
 
 
 def incremental_new_rows(
@@ -90,6 +96,71 @@ def _observed_append(fresh: DataFrame, write) -> int:
     seen = Observation()
     write(fresh.observe(seen, F.count(F.lit(1)).alias("n")))
     return seen.get["n"]
+
+
+def _ddl_schema(schema) -> "StructType":
+    """``schema`` — a DDL string (``"a int, b string"``), a manifest's
+    ``struct<…>`` simpleString, or a StructType — as a StructType, parsed
+    without building a frame."""
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    return schema if isinstance(schema, StructType) else _parse_datatype_string(
+        schema
+    )
+
+
+def _arrow_value(v, dt):
+    """One driver value as pyarrow must see it to convert it the way
+    PySpark's row path does: a TIMESTAMP goes in as UTC, since pyarrow
+    reads a naive ``datetime`` as UTC (PySpark: process-local time) and
+    drops a fixed-offset tzinfo; inside arrays, maps and structs too."""
+    import datetime
+
+    from pyspark.sql.types import ArrayType, MapType, StructType, TimestampType
+
+    if v is None:
+        return None
+    if isinstance(dt, TimestampType):
+        return v.astimezone(datetime.timezone.utc)
+    if isinstance(dt, ArrayType):
+        return [_arrow_value(x, dt.elementType) for x in v]
+    if isinstance(dt, MapType):
+        return {
+            _arrow_value(k, dt.keyType): _arrow_value(x, dt.valueType)
+            for k, x in v.items()
+        }
+    if isinstance(dt, StructType):
+        if isinstance(v, dict):
+            v = [v.get(f.name) for f in dt.fields]
+        return tuple(_arrow_value(x, f.dataType) for f, x in zip(dt.fields, v))
+    return v
+
+
+def _local_frame(spark, rows, schema) -> DataFrame:
+    """A frame of driver-side ``rows`` (tuples in ``schema``'s column
+    order; ``schema`` as :func:`_ddl_schema` takes it). It is built from
+    a pyarrow Table, so Spark plans a LocalRelation: reading or
+    unioning it runs no job, a broadcast of it one one-task JVM job, and
+    none of it starts a Python worker. ``createDataFrame`` over a row
+    list (or ``[]``) instead pickles the rows into a Python RDD, and
+    every slice of it starts a Python worker."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = _ddl_schema(schema)
+    arrow_schema = to_arrow_schema(schema)
+    rows = list(rows)
+    table = pa.Table.from_arrays(
+        [
+            pa.array(
+                [_arrow_value(r[i], f.dataType) for r in rows],
+                type=arrow_schema.field(i).type,
+            )
+            for i, f in enumerate(schema.fields)
+        ],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def incremental_insert_only_jdbc(
@@ -699,32 +770,41 @@ class ConstraintViolation(RuntimeError):
         )
 
 
+def _observe_counts(df: DataFrame, flags: dict) -> tuple:
+    """Attach an ``Observation`` to ``df`` that counts, per name in
+    ``flags``, the rows whose boolean column is true. Returns ``(df,
+    counted)``; the counts ride whichever job first runs the plan (the
+    staging localCheckpoint of every row-level write), so call
+    ``counted()`` only after that job — it blocks until the metrics
+    arrive. A sum over zero rows is NULL and reads as 0."""
+    obs = Observation()
+    df = df.observe(
+        obs, *[F.sum(c.cast("long")).alias(n) for n, c in flags.items()]
+    )
+    return df, lambda: {n: int(v or 0) for n, v in obs.get.items()}
+
+
 def _observe_constraints(df: DataFrame, constraints: dict[str, str]):
-    """Attach a CollectMetrics node counting violations of every table
-    constraint to ``df``'s plan. The counters ride the write job itself
+    """Count the violations of every table constraint on ``df`` with
+    :func:`_observe_counts`. The counters ride the write job itself
     (``DataFrame.observe`` — zero extra scan, exactly the Delta CHECK
     mechanism); a NULL predicate result counts as a violation, the SQL
     CHECK stance inverted to proven-good-only, matching
-    operators/quality.py. Returns ``(df, observation)``."""
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    metrics = [
-        F.sum(
-            (~F.coalesce(F.expr(expr), F.lit(False))).cast("long")
-        ).alias(name)
-        for name, expr in constraints.items()
-    ]
-    return df.observe(obs, *metrics), obs
+    operators/quality.py. Returns ``(df, counted)``."""
+    return _observe_counts(
+        df,
+        {
+            name: ~F.coalesce(F.expr(expr), F.lit(False))
+            for name, expr in constraints.items()
+        },
+    )
 
 
-def _check_observed_constraints(obs, path: str, op: str) -> None:
+def _check_observed_constraints(counted, path: str, op: str) -> None:
     """Raise :class:`ConstraintViolation` if any observed counter is
     positive. Call only after the observed plan ran a job (the eager
-    localCheckpoint on every manifest write path) — ``obs.get`` blocks
-    until the metrics arrive."""
-    counts = {n: int(v or 0) for n, v in obs.get.items()}
-    bad = {n: c for n, c in counts.items() if c > 0}
+    localCheckpoint on every manifest write path)."""
+    bad = {n: c for n, c in counted().items() if c > 0}
     if bad:
         raise ConstraintViolation(path, op, bad)
 
@@ -925,7 +1005,7 @@ def _load_table_files(
         df = load(rels)
         if not content.get("schema"):
             return df
-        tgt = spark.createDataFrame([], content["schema"]).schema
+        tgt = _ddl_schema(content["schema"])
         want = [(f.name, f.dataType.simpleString()) for f in tgt.fields]
         have = [
             (f.name, f.dataType.simpleString())
@@ -950,7 +1030,7 @@ def _load_table_files(
             ],
             *([_POS_FILE, _POS_IDX] if with_pos else []),
         )
-    target = spark.createDataFrame([], content["schema"]).schema
+    target = _ddl_schema(content["schema"])
     aligned = []
     for group_rels in groups.values():
         df = load(group_rels)
@@ -1398,7 +1478,7 @@ def manifest_read(
     if not parts:
         schema = content.get("schema")
         if schema:
-            return spark.createDataFrame([], schema)
+            return _local_frame(spark, [], schema)
         raise ValueError(f"manifest table at {path} is empty (v{version})")
     if files_plan is not None:
         content["files"] = _load_files_pruned(
@@ -1445,13 +1525,13 @@ def manifest_read_where(
     schema = content.get("schema")
     if not parts:
         if schema:
-            return spark.createDataFrame([], schema).filter(condition)
+            return _local_frame(spark, [], schema).filter(condition)
         raise ValueError(f"manifest table at {path} is empty (v{version})")
     _, rels, _ = _prune_dml_probe(
         spark, path, version, content, condition, parts
     )
     if not rels:
-        return spark.createDataFrame([], schema).filter(condition)
+        return _local_frame(spark, [], schema).filter(condition)
     df = _load_table_files(
         spark, path, content, rels, with_pos=_has_pos_deletes(content)
     )
@@ -1589,10 +1669,6 @@ def _key_cols(pcols: list[str], names: "list[str] | None" = None) -> list:
 def _touched_keys(df: DataFrame, pcols: list[str]) -> list[str]:
     """Sorted distinct manifest keys of ``df``'s rows, computed by Spark
     under the pinned session zone (one collect job)."""
-    from data_management_service_run_etl_imputations_spark.session import (
-        ensure_runtime_confs,
-    )
-
     ensure_runtime_confs(df.sparkSession)
     rows = df.select(*_key_cols(pcols)).distinct().collect()
     return sorted(_part_key_tuple(tuple(r), pcols) for r in rows)
@@ -1611,10 +1687,6 @@ def _copy_value(key: str) -> "str | None":
 def _with_part_copies(df: DataFrame, pcols: list[str]) -> DataFrame:
     """``df`` plus its staged copy columns (the key cast under the pinned
     session zone, escaped as _copy_value escapes it)."""
-    from data_management_service_run_etl_imputations_spark.session import (
-        ensure_runtime_confs,
-    )
-
     # an injected vanilla session would otherwise cast timestamps in its
     # own zone and write INT96 timestamps (no parquet column statistics)
     ensure_runtime_confs(df.sparkSession)
@@ -2353,14 +2425,17 @@ def manifest_delete_where(
         )
 
     # --- merge-on-read: commit the matched addresses as a sidecar ---
-    matched = matched.localCheckpoint()  # one scan: count + mapping + write
-    n = matched.count()
+    # one scan: the per-file counts, the mapping and the write all read
+    # the checkpoint, and one collect returns the count and the files
+    matched = matched.localCheckpoint()
+    per_uri = matched.groupBy("uri").agg(F.count(F.lit(1)).alias("n")).collect()
+    n = sum(r["n"] for r in per_uri)
     if n == 0:
         return {"deleted_rows": 0, "files_matched": 0}
-    uris = [r["uri"] for r in matched.select("uri").distinct().collect()]
+    uris = [r["uri"] for r in per_uri]
     rel_of = _uris_to_rels_map(uris, rels, path)
-    mapping = spark.createDataFrame(
-        [(u, rel_of[u]) for u in uris], "uri string, file string"
+    mapping = _local_frame(
+        spark, [(u, rel_of[u]) for u in uris], "uri string, file string"
     )
     keys = matched.join(F.broadcast(mapping), "uri").select("file", "pos")
     ref = f"_deletes/{uuid.uuid4().hex[:12]}.parquet"
@@ -2452,9 +2527,7 @@ def _maybe_consolidate_pos(
             f"{path}/{e['ref']}"
         )
         merged = part if merged is None else merged.unionByName(part)
-    keep_df = spark.createDataFrame(
-        [(f,) for f in keep_files], "file string"
-    )
+    keep_df = _local_frame(spark, [(f,) for f in keep_files], "file string")
     addr = (
         merged.join(F.broadcast(keep_df), "file")
         .select("file", "pos")
@@ -2555,17 +2628,25 @@ def _delete_where_cow(
         content,
     )
     if content.get("schema"):
-        tdf = spark.createDataFrame([], content["schema"]).unionByName(
+        tdf = _local_frame(spark, [], content["schema"]).unionByName(
             tdf, allowMissingColumns=True
         )
-    # one evaluation serves the deleted count and the staged write
-    flagged = tdf.withColumn(
-        "__del",
-        F.coalesce(F.expr(condition).cast("boolean"), F.lit(False)),
-    ).localCheckpoint()
-    n_deleted = flagged.filter(F.col("__del")).count()
+    # the deleted count rides the staging checkpoint: one evaluation
+    # serves it and the staged write
+    flagged, counted = _observe_counts(
+        tdf.withColumn(
+            "__del",
+            F.coalesce(F.expr(condition).cast("boolean"), F.lit(False)),
+        ),
+        {"deleted_rows": F.col("__del")},
+    )
     survivors = flagged.filter(~F.col("__del")).drop("__del")
     pcols = _partition_cols(content)
+    result = {
+        "files_matched": len(matched_rels),
+        "files_rewritten": len(rewrite_rels),
+        "files_carried": sum(len(v) for v in carry_files.values()),
+    }
     _stage_and_commit(
         path,
         survivors,
@@ -2578,21 +2659,14 @@ def _delete_where_cow(
         op="delete",
         allow_fast_forward=False,
         carry_files=carry_files,
-        op_metrics_extra={
-            "deleted_rows": n_deleted,
-            "files_matched": len(matched_rels),
-            "files_rewritten": len(rewrite_rels),
-            "files_carried": sum(len(v) for v in carry_files.values()),
+        op_metrics_extra=lambda: {
+            **counted(),
+            **result,
             "mode": "copy-on-write",
             **(probe_metrics or {}),
         },
     )
-    return {
-        "deleted_rows": n_deleted,
-        "files_matched": len(matched_rels),
-        "files_rewritten": len(rewrite_rels),
-        "files_carried": sum(len(v) for v in carry_files.values()),
-    }
+    return {**counted(), **result}
 
 
 def manifest_update_where(
@@ -2671,7 +2745,7 @@ def manifest_update_where(
     parts = content.get("partitions", {})
     if not parts:
         return {"updated_rows": 0, "files_matched": 0}
-    tschema = spark.createDataFrame([], content["schema"]).schema
+    tschema = _ddl_schema(content["schema"])
     tcols = [f.name for f in tschema.fields]
     t_types = {f.name: f.dataType for f in tschema.fields}
     unknown = sorted(set(assignments) - set(tcols))
@@ -2711,25 +2785,39 @@ def manifest_update_where(
         return {"updated_rows": 0, "files_matched": 0, **probe_metrics}
     df = _load_table_files(spark, path, content, rels, with_pos=True)
     df = _apply_deletes(spark, path, df, content, keep_pos=True)
-    matched = df.filter(condition).localCheckpoint()
-    n = matched.count()
-    if n == 0:
-        return {"updated_rows": 0, "files_matched": 0}
-    uris = [r["uri"] for r in matched.select(
-        F.col(_POS_FILE).alias("uri")
-    ).distinct().collect()]
-    rel_of = _uris_to_rels_map(uris, rels, path)
-    matched_rels = sorted(rel_of.values())
+    matched = df.filter(condition)
+    if mode == "mor":
+        # the positional sidecar and the staged updated rows both read
+        # the matched rows: evaluate them once
+        matched = matched.localCheckpoint()
 
-    def transformed(src: DataFrame) -> DataFrame:
+    def transformed(src: DataFrame, *extra) -> DataFrame:
         out = src.select(
-            *[set_exprs.get(c, F.col(c)).alias(c) for c in tcols]
+            *[set_exprs.get(c, F.col(c)).alias(c) for c in tcols], *extra
         )
         return _apply_generated(out, gen) if gen else out
 
+    # ONE collect answers the matched row count, the matched files and
+    # the partitions the updated rows land in (row migration may move
+    # them), grouped by file and post-update key
+    ensure_runtime_confs(spark)
+    groups = (
+        transformed(matched, F.col(_POS_FILE).alias("__uri"))
+        .groupBy("__uri", *_key_cols(pcols))
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .collect()
+    )
+    n = sum(r["__n"] for r in groups)
+    if n == 0:
+        return {"updated_rows": 0, "files_matched": 0}
+    uris = sorted({r["__uri"] for r in groups})
+    rel_of = _uris_to_rels_map(uris, rels, path)
+    matched_rels = sorted(rel_of.values())
+    post_keys = {
+        _part_key_tuple(tuple(r[c] for c in pcols), pcols) for r in groups
+    }
+
     if mode == "cow":
-        updated_preview = transformed(matched)
-        post_keys = set(_touched_keys(updated_preview, pcols))
         matched_set = set(matched_rels)
         file_keys = {
             k
@@ -2750,7 +2838,7 @@ def manifest_update_where(
             content,
         )
         if content.get("schema"):
-            tdf = spark.createDataFrame([], content["schema"]).unionByName(
+            tdf = _local_frame(spark, [], content["schema"]).unionByName(
                 tdf, allowMissingColumns=True
             )
         flagged = tdf.withColumn(
@@ -2772,12 +2860,17 @@ def manifest_update_where(
         )
         if gen:
             out = _apply_generated(out, gen)
-        out = out.localCheckpoint()
-        n_updated = out.filter(F.col("__upd")).count()
-        staged = out.drop("__upd")
+        # the updated count rides the staging checkpoint
+        out, counted = _observe_counts(
+            out, {"rows_updated": F.col("__upd")}
+        )
+        result = {
+            "files_matched": len(matched_rels),
+            "files_rewritten": len(rewrite_rels),
+        }
         _stage_and_commit(
             path,
-            staged,
+            out.drop("__upd"),
             touched_keys,
             pcols if len(pcols) != 1 else pcols[0],
             fmt,
@@ -2787,24 +2880,19 @@ def manifest_update_where(
             op="update",
             allow_fast_forward=False,
             carry_files=carry_files,
-            op_metrics_extra={
-                "rows_updated": n_updated,
-                "files_matched": len(matched_rels),
-                "files_rewritten": len(rewrite_rels),
+            op_metrics_extra=lambda: {
+                **counted(),
+                **result,
                 "files_carried": sum(len(v) for v in carry_files.values()),
                 "mode": "copy-on-write",
                 **probe_metrics,
             },
         )
-        return {
-            "updated_rows": n_updated,
-            "files_matched": len(matched_rels),
-            "files_rewritten": len(rewrite_rels),
-        }
+        return {"updated_rows": counted()["rows_updated"], **result}
 
     # --- merge-on-read: positional mask + append, one atomic commit ---
-    mapping = spark.createDataFrame(
-        [(u, rel_of[u]) for u in uris], "uri string, file string"
+    mapping = _local_frame(
+        spark, [(u, rel_of[u]) for u in uris], "uri string, file string"
     )
     addr = (
         matched.select(
@@ -2823,7 +2911,7 @@ def manifest_update_where(
         "stages": sorted({_stage_of(r) for r in matched_rels}),
     }
     updated = transformed(matched)
-    touched_keys = _touched_keys(updated, pcols)
+    touched_keys = sorted(post_keys)
     # nothing is rewritten: every live file of the touched partitions
     # carries by reference next to the freshly staged updated rows
     carry_src = (
@@ -3101,7 +3189,7 @@ def manifest_upsert_partitioned(
         # align through an empty frame carrying the current schema (a
         # rewrite that loaded only a pre-evolution schema group, or a
         # pure-insert batch, would otherwise drop evolved columns)
-        merged = spark.createDataFrame([], content["schema"]).unionByName(
+        merged = _local_frame(spark, [], content["schema"]).unionByName(
             merged, allowMissingColumns=True
         )
 
@@ -3215,7 +3303,7 @@ def manifest_insert(
     }
     merged = incoming
     if content.get("schema"):
-        merged = spark.createDataFrame([], content["schema"]).unionByName(
+        merged = _local_frame(spark, [], content["schema"]).unionByName(
             merged, allowMissingColumns=True
         )
     n = _stage_and_commit(
@@ -3379,15 +3467,22 @@ def _stage_and_commit(
     op: str,
     sort_cols: list[str] | None = None,
     allow_fast_forward: bool = True,
-    op_metrics_extra: dict | None = None,
+    op_metrics_extra: "dict | Callable[[], dict] | None" = None,
     carry_files: dict[str, list] | None = None,
     lazy_actions: bool = False,
 ) -> int:
     """Write tail of the row-level writers (insert, upsert, merge,
     update, copy-on-write delete): stage ``merged`` for the touched
     partitions under an immutable directory, apply it with
-    :func:`_apply_stage` and publish. Returns the staged row count (one
-    job: count and write share the localCheckpoint).
+    :func:`_apply_stage` and publish. Returns the staged row count.
+
+    ``merged`` is evaluated once, by the staging ``localCheckpoint``:
+    the staged row count, the constraint counters and any counts the
+    caller observed on ``merged`` ride that job as ``Observation``
+    metrics, and the stage write reads the checkpoint. A constraint
+    violation therefore aborts before anything is staged.
+    ``op_metrics_extra`` is a dict, or a function returning one that is
+    called after the checkpoint, so it may read those observations.
 
     ``carry_files`` lists, per touched partition, the live files that
     stay by reference next to the staged ones (a narrow merge rewrites
@@ -3414,13 +3509,14 @@ def _stage_and_commit(
         merged, obs = _observe_constraints(merged, constraints)
     pcols = _pcols(partition_col)
     copies = _part_copy_cols(pcols)
-    merged = _with_part_copies(
-        merged, pcols
-    ).localCheckpoint()  # materialize once: count + write share it
+    merged, counted = _observe_counts(
+        _with_part_copies(merged, pcols), {"rows_staged": F.lit(True)}
+    )
+    merged = merged.localCheckpoint()
     if obs is not None:
         # metrics rode the checkpoint job; abort BEFORE anything is staged
         _check_observed_constraints(obs, path, op)
-    n_merged = merged.count()
+    n_merged = counted()["rows_staged"]
     staged = merged
     if sort_cols:
         # optimized write: contiguous (partition, sort key) ranges per
@@ -3444,7 +3540,11 @@ def _stage_and_commit(
         ),
         "files_added": sum(n_staged.values()),
         "files_carried": sum(len(v) for v in carry.values()),
-        **(op_metrics_extra or {}),
+        **(
+            op_metrics_extra()
+            if callable(op_metrics_extra)
+            else op_metrics_extra or {}
+        ),
     }
     if lazy_actions and schema.simpleString() != content.get("schema"):
         content = _materialize(path, version)
@@ -3918,9 +4018,9 @@ def _merge_insert_only(
     reference, ``files_rewritten`` is 0 by construction). A fully
     matched source commits NOTHING — a no-op re-run does not bump the
     table version, so history and CDF show exactly the loads that
-    changed something. Job count drops from ~9 (probe + pass-2 load +
-    full-outer + action counts) to ~4; the general path remains for any
-    merge with matched clauses. Legacy manifests without per-partition
+    changed something. It skips the general path's probe, pass-2 load
+    and full-outer join (~4 jobs in all); the general path remains for
+    any merge with matched clauses. Legacy manifests without per-partition
     file lists fall back to the general path (their carry set cannot be
     expressed)."""
     anti = src.alias("s")
@@ -3954,7 +4054,7 @@ def _merge_insert_only(
     # schema evolution for INSERT *: source columns the target lacks are
     # appended (the commit tail widens the recorded schema)
     tgt_schema = (
-        spark.createDataFrame([], content["schema"]).schema
+        _ddl_schema(content["schema"])
         if content.get("schema")
         else src.schema
     )
@@ -4124,14 +4224,38 @@ def manifest_merge(
     # (count_distinct over a literal STRUCT groups null fields exactly
     # like dropDuplicates' null-safe equality, and the struct itself is
     # never NULL) — the two separate .count() jobs here were a fifth of
-    # a small merge's job budget (round-12 commit-latency profile) — and
-    # the probe's source-key envelope, whose min/max/has-null over the
-    # source equal those over its distinct keys
+    # a small merge's job budget (round-12 commit-latency profile) — the
+    # probe's source-key envelope, whose min/max/has-null over the
+    # source equal those over its distinct keys, and the partitions the
+    # inserts may land in: the set of key-rule structs of the source
+    # rows (with insert_values, of the assigned partition EXPRESSIONS,
+    # which may name the source as ``s``)
+    ensure_runtime_confs(spark)
+    insert_part_agg = (
+        [
+            F.collect_set(
+                F.struct(
+                    *[
+                        (
+                            F.expr(insert_values[p])
+                            if insert_values is not None
+                            else F.col(p)
+                        ).cast("string")
+                        for p in pcols
+                    ]
+                )
+            ).alias("__ins_parts")
+        ]
+        if insert_not_matched
+        else []
+    )
     guard = (
-        src.agg(
+        src.alias("s")
+        .agg(
             F.count(F.lit(1)).alias("__total"),
             F.count_distinct(F.struct(*keys)).alias("__nk"),
             *_key_envelope_aggs(keys),
+            *insert_part_agg,
         )
         .collect()[0]
         .asDict()
@@ -4177,19 +4301,10 @@ def manifest_merge(
         if parts
         else (set(), set(), 0, 0, False)
     )
-    if insert_not_matched:
-        # with insert_values the partition value is the assigned
-        # EXPRESSION over the source, not the source's own column
-        part_src = (
-            src.alias("s").select(
-                *[F.expr(insert_values[p]).alias(p) for p in pcols]
-            )
-            if insert_values is not None
-            else src.select(*pcols)
-        )
-        insert_parts = set(_touched_keys(part_src, pcols))
-    else:
-        insert_parts = set()
+    insert_parts = {
+        _part_key_tuple(tuple(r), pcols)
+        for r in guard.get("__ins_parts", [])
+    }
     touched_keys = sorted(match_parts | insert_parts)
     if not touched_keys:
         return {"updated": 0, "deleted": 0, "inserted": 0}
@@ -4214,7 +4329,7 @@ def manifest_merge(
         if content.get("schema"):
             # a rewrite set confined to one pre-evolution schema group
             # must still expose the full table schema to the merge
-            tdf = spark.createDataFrame([], content["schema"]).unionByName(
+            tdf = _local_frame(spark, [], content["schema"]).unionByName(
                 tdf, allowMissingColumns=True
             )
         target = tdf.alias("t")
@@ -4222,9 +4337,9 @@ def manifest_merge(
         # insert-only into an existing table: target is empty but must
         # keep the TABLE schema (not the source's) so carried files and
         # the committed schema never regress to a narrower batch schema
-        target = spark.createDataFrame([], content["schema"]).alias("t")
+        target = _local_frame(spark, [], content["schema"]).alias("t")
     else:
-        target = spark.createDataFrame([], src.schema).alias("t")
+        target = _local_frame(spark, [], src.schema).alias("t")
     t_cols = target.columns
     # existence markers tagged BEFORE the full outer join: a side's key
     # columns cannot distinguish "row absent" from "row with null key"
@@ -4337,21 +4452,18 @@ def manifest_merge(
             .otherwise(F.lit(None).cast(s_types[c]))
             .alias(c)
         )
-    # delete/drop rows ride the checkpoint so ONE evaluation serves the
-    # action counts (incl. the "deleted" metric — no extra target.count()
-    # job) and the staged write; they filter out of the staged content
-    # below
-    flagged = (
-        joined.withColumn("__action", action)
-        .select(*out_cols, "__action")
-        .localCheckpoint()
+    # the action counts (the "deleted" metric included) are observed
+    # below the filter that drops delete/drop rows, so they ride the
+    # staging checkpoint: ONE evaluation of the join serves them and the
+    # staged write
+    flagged, counted = _observe_counts(
+        joined.withColumn("__action", action).select(*out_cols, "__action"),
+        {
+            "rows_updated": F.col("__action") == "update",
+            "rows_deleted": F.col("__action") == "delete",
+            "rows_inserted": F.col("__action") == "insert",
+        },
     )
-    counts = {
-        r["__action"]: r["n"]
-        for r in flagged.groupBy("__action")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
     merged = flagged.filter(
         ~F.col("__action").isin("delete", "drop")
     ).drop("__action")
@@ -4371,14 +4483,12 @@ def manifest_merge(
         op="merge",
         allow_fast_forward=False,
         carry_files=carry_files,
-        op_metrics_extra={
+        op_metrics_extra=lambda: {
             "probe_files": n_probe_files,
             "probe_exact": exact_ran,
             "live_files": n_live_files,
             "files_rewritten": len(rewrite_rels),
-            "rows_updated": counts.get("update", 0),
-            "rows_deleted": counts.get("delete", 0),
-            "rows_inserted": counts.get("insert", 0),
+            **counted(),
             "keys": list(keys),  # lets the CDF reader classify updates
         },
     )
@@ -4386,10 +4496,11 @@ def manifest_merge(
         _auto_compact(
             spark, path, touched_keys, pcols, fmt, auto_compact_min_files
         )
+    counts = counted()
     return {
-        "updated": counts.get("update", 0),
-        "deleted": counts.get("delete", 0),
-        "inserted": counts.get("insert", 0),
+        "updated": counts["rows_updated"],
+        "deleted": counts["rows_deleted"],
+        "inserted": counts["rows_inserted"],
     }
 
 
@@ -4539,7 +4650,8 @@ def manifest_compact(
             sz = sum(e[1] for e in files.get(k, []))
             fan_rows.append((*_comps(k), _math.ceil(sz / tgt) or 1))
         f_names = [f"__f{i}" for i in range(len(pcols))]
-        fan_df = spark.createDataFrame(
+        fan_df = _local_frame(
+            spark,
             fan_rows,
             ", ".join(f"{n} STRING" for n in f_names) + ", __fan INT",
         )
@@ -4698,7 +4810,7 @@ def manifest_diff(
     def _read(parts: dict, content: dict) -> DataFrame:
         rels = _live_file_rels(content, parts)
         if not rels:
-            return spark.createDataFrame([], content["schema"])
+            return _local_frame(spark, [], content["schema"])
         df = _load_table_files(
             spark, path, content, rels, with_pos=_has_pos_deletes(content)
         )

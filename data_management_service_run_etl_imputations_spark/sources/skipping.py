@@ -70,6 +70,7 @@ from data_management_service_run_etl_imputations_spark.sources.sinks import (
     _latest_manifest,
     _live_file_rels,
     _load_table_files,
+    _local_frame,
     _normalize_partition_value,
     _part_copy_cols,
     _partition_cols,
@@ -609,6 +610,9 @@ def _footer_stats_for_files(
                 out_d[rel] = json.loads(json.dumps(res))
         return out_d, left_d
     n_slices = min(len(file_rels), spark.sparkContext.defaultParallelism)
+    # a row-list frame, not _local_frame: these rows feed a mapInArrow
+    # that runs Python on the executors anyway, so a LocalRelation would
+    # spare no Python worker
     rels_df = spark.createDataFrame(
         [(r,) for r in sorted(file_rels)], "rel string"
     ).repartition(n_slices)
@@ -1093,7 +1097,7 @@ def manifest_read_point(
         schema = content.get("schema")
         if not schema:
             raise ValueError(f"manifest table at {path} has no schema")
-        df = spark.createDataFrame([], schema)
+        df = _local_frame(spark, [], schema)
     else:
         df = _apply_deletes(
             spark,
@@ -1125,7 +1129,7 @@ def manifest_read_skipping(
         schema = content.get("schema")
         if not schema:
             raise ValueError(f"manifest table at {path} has no schema")
-        df = spark.createDataFrame([], schema)
+        df = _local_frame(spark, [], schema)
     else:
         df = _apply_deletes(
             spark,

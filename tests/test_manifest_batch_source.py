@@ -4,6 +4,12 @@ merge-on-read deletes (positional AND equality), column mapping, and
 time travel — with filter pushdown pruning files at plan time
 (prune-only: every predicate is re-applied by Spark, so an unfaithful
 literal merely skips pruning).
+
+Every table here is small enough for ``manifest_sql_register`` to bind
+it natively (a JVM parquet scan), so each SQL case runs twice: once on
+that native binding and once forced onto the Python DataSource
+(``ManifestBatchReader.read``), and the plan is checked to show the
+binding the case asked for.
 """
 
 from __future__ import annotations
@@ -14,6 +20,9 @@ import uuid
 
 import pytest
 
+from data_management_service_run_etl_imputations_spark.sources import (
+    manifest_batch as mb,
+)
 from data_management_service_run_etl_imputations_spark.sources.manifest_batch import (
     ManifestBatchReader,
     ManifestTableDataSource,
@@ -40,6 +49,25 @@ def table_path():
     shutil.rmtree(path, ignore_errors=True)
 
 
+@pytest.fixture(params=["native", "datasource"])
+def register(request, spark, monkeypatch):
+    """``register(view, path, **kw)``: ``manifest_sql_register`` through
+    the native binding or, with the native size limit forced to 0,
+    through the Python DataSource."""
+
+    def _register(view, path, **kw):
+        with monkeypatch.context() as m:
+            if request.param == "datasource":
+                m.setattr(mb, "_NATIVE_READ_MAX_FILES", 0)
+            manifest_sql_register(spark, view, path, **kw)
+        plan = spark.table(view)._jdf.queryExecution().executedPlan()
+        assert ("(Python)" in plan.toString()) == (
+            request.param == "datasource"
+        )
+
+    return _register
+
+
 def _batch(spark, rows):
     return spark.createDataFrame(rows, "k LONG, day STRING, v DOUBLE")
 
@@ -59,19 +87,19 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def test_sql_read_equals_manifest_read(spark, table_path):
+def test_sql_read_equals_manifest_read(spark, table_path, register):
     _seed(spark, table_path)
     view = f"mb_{uuid.uuid4().hex[:8]}"
-    manifest_sql_register(spark, view, table_path)
+    register(view, table_path)
     got = spark.sql(f"SELECT k, day, v FROM {view}")
     want = manifest_read(spark, table_path).select("k", "day", "v")
     assert _rows(got) == _rows(want)
 
 
-def test_sql_where_prunes_and_matches(spark, table_path):
+def test_sql_where_prunes_and_matches(spark, table_path, register):
     _seed(spark, table_path)
     view = f"mb_{uuid.uuid4().hex[:8]}"
-    manifest_sql_register(spark, view, table_path)
+    register(view, table_path)
     got = spark.sql(
         f"SELECT k, v FROM {view} WHERE day = 'd1' AND v >= 105"
     )
@@ -110,7 +138,9 @@ def test_planner_prunes_partitions_and_zone_maps(spark, table_path):
     assert parts == []
 
 
-def test_unfaithful_partition_literal_skips_pruning(spark, table_path):
+def test_unfaithful_partition_literal_skips_pruning(
+    spark, table_path, register
+):
     """`day = 5` on the STRING partition col: the typed gate refuses to
     prune and Spark's own re-applied coercion decides the result."""
     rows = [(1, "05", 1.0), (2, "5", 2.0), (3, "7", 3.0)]
@@ -118,19 +148,21 @@ def test_unfaithful_partition_literal_skips_pruning(spark, table_path):
         _batch(spark, rows).coalesce(1), table_path, ["k"], "day"
     )
     view = f"mb_{uuid.uuid4().hex[:8]}"
-    manifest_sql_register(spark, view, table_path)
+    register(view, table_path)
     got = spark.sql(f"SELECT k FROM {view} WHERE day = 5")
     assert sorted(r["k"] for r in got.collect()) == [1, 2]
 
 
-def test_sql_sees_mor_deletes_positional_and_equality(spark, table_path):
+def test_sql_sees_mor_deletes_positional_and_equality(
+    spark, table_path, register
+):
     _seed(spark, table_path)
     manifest_delete_where(spark, table_path, "k IN (101, 102)")  # pos
     manifest_delete(
         spark.createDataFrame([(105,)], "k LONG"), table_path, ["k"]
     )  # equality entry
     view = f"mb_{uuid.uuid4().hex[:8]}"
-    manifest_sql_register(spark, view, table_path)
+    register(view, table_path)
     got = spark.sql(f"SELECT k FROM {view} WHERE day = 'd1'")
     want = manifest_read(spark, table_path).filter("day = 'd1'")
     assert sorted(r["k"] for r in got.collect()) == sorted(
@@ -140,23 +172,23 @@ def test_sql_sees_mor_deletes_positional_and_equality(spark, table_path):
     assert 105 not in {r["k"] for r in got.collect()}
 
 
-def test_time_travel_option(spark, table_path):
+def test_time_travel_option(spark, table_path, register):
     _seed(spark, table_path)
     manifest_delete_where(spark, table_path, "day = 'd0'")
     view = f"mb_{uuid.uuid4().hex[:8]}"
-    manifest_sql_register(spark, view, table_path, version=1)
+    register(view, table_path, version=1)
     n_v1 = spark.sql(f"SELECT count(*) AS n FROM {view}").first()["n"]
     assert n_v1 == 30  # pre-delete snapshot
-    manifest_sql_register(spark, view, table_path)
+    register(view, table_path)
     n_head = spark.sql(f"SELECT count(*) AS n FROM {view}").first()["n"]
     assert n_head == 20
 
 
-def test_column_rename_through_sql(spark, table_path):
+def test_column_rename_through_sql(spark, table_path, register):
     _seed(spark, table_path)
     manifest_rename_column(table_path, "v", "amount")
     view = f"mb_{uuid.uuid4().hex[:8]}"
-    manifest_sql_register(spark, view, table_path)
+    register(view, table_path)
     got = spark.sql(
         f"SELECT k, amount FROM {view} WHERE day = 'd2' ORDER BY k"
     )
@@ -211,7 +243,9 @@ def test_raw_read_on_session_with_runtime_confs(spark, table_path):
     assert _rows(got) == _rows(want) == [(2,), (3,)]
 
 
-def test_sql_read_on_checkpointed_version_prunes_flat(spark, table_path):
+def test_sql_read_on_checkpointed_version_prunes_flat(
+    spark, table_path, register
+):
     """On a checkpointed version the reader holds only the checkpoint's
     meta half and fetches file lists for just the partitions surviving
     pushed filters — results identical, plan telemetry shows the prune."""
@@ -224,7 +258,7 @@ def test_sql_read_on_checkpointed_version_prunes_flat(spark, table_path):
     _seed(spark, table_path, days=6)
     manifest_checkpoint(table_path)
     view = f"mb_{uuid.uuid4().hex[:8]}"
-    manifest_sql_register(spark, view, table_path)
+    register(view, table_path)
     got = spark.sql(f"SELECT k, v FROM {view} WHERE day = 'd2'")
     want = (
         manifest_read(spark, table_path)
@@ -244,7 +278,9 @@ def test_sql_read_on_checkpointed_version_prunes_flat(spark, table_path):
     assert "files" not in r.content  # meta stays files-free across plans
 
 
-def test_checkpointed_filter_pruning_to_zero_partitions(spark, table_path):
+def test_checkpointed_filter_pruning_to_zero_partitions(
+    spark, table_path, register
+):
     """A pushed filter that prunes EVERY partition on a checkpointed
     version must plan an empty scan (not crash on pyarrow's empty IN)."""
     from pyspark.sql.datasource import EqualTo
@@ -260,7 +296,7 @@ def test_checkpointed_filter_pruning_to_zero_partitions(spark, table_path):
     list(r.pushFilters([EqualTo(("day",), "no_such_day")]))
     assert r.partitions() == []
     view = f"mb_{uuid.uuid4().hex[:8]}"
-    manifest_sql_register(spark, view, table_path)
+    register(view, table_path)
     assert (
         spark.sql(f"SELECT * FROM {view} WHERE day = 'no_such_day'").count()
         == 0
@@ -290,7 +326,7 @@ def test_pushfilters_reset_between_plans(spark, table_path):
 
 
 def test_equality_delete_null_vs_nan_sql_matches_manifest_read(
-    spark, table_path
+    spark, table_path, register
 ):
     """ADVICE r8: SQL-read equality-delete masking must keep NULL and
     float NaN DISTINCT (eqNullSafe semantics: NULL<=>NULL true,
@@ -305,7 +341,7 @@ def test_equality_delete_null_vs_nan_sql_matches_manifest_read(
         spark.createDataFrame([(None,)], "v DOUBLE"), table_path, ["v"]
     )
     view = f"mb_{uuid.uuid4().hex[:8]}"
-    manifest_sql_register(spark, view, table_path)
+    register(view, table_path)
     got = sorted(r["k"] for r in spark.sql(f"SELECT k FROM {view}").collect())
     want = sorted(
         r["k"] for r in manifest_read(spark, table_path).select("k").collect()
@@ -318,7 +354,7 @@ def test_equality_delete_null_vs_nan_sql_matches_manifest_read(
         ["v"],
     )
     view2 = f"mb_{uuid.uuid4().hex[:8]}"
-    manifest_sql_register(spark, view2, table_path)
+    register(view2, table_path)
     got2 = sorted(
         r["k"] for r in spark.sql(f"SELECT k FROM {view2}").collect()
     )
