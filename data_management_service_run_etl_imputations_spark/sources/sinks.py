@@ -2332,151 +2332,60 @@ def manifest_delete_where(
       The delete is fully materialized at commit time (no read-side
       mask, metadata counts stay exact).
 
-    Plan shape at 100 TB: the match scan is one predicate-pushed,
-    column-pruned pass over the live files (Catalyst pushes
-    ``condition``'s conjuncts to the parquet scan); matched-file
-    identification collects ONE row per matched file, never data. MoR
-    then writes only the matched addresses; CoW reloads only the
-    matched files. A predicate matching most of the table belongs in
-    ``cow`` mode (a positional sidecar proportional to the table is the
-    pathological case — Delta's DV sizing guidance makes the same
-    point). SQL NULL semantics: rows where ``condition`` is NULL are
-    NOT deleted.
+    A predicate matching most of the table belongs in ``cow`` mode (a
+    positional sidecar proportional to the table is the pathological
+    case — Delta's DV sizing guidance makes the same point). SQL NULL
+    semantics: rows where ``condition`` is NULL are NOT deleted.
 
     Returns ``{"deleted_rows": n, "files_matched": m}`` (plus
     ``"files_rewritten"/"files_carried"`` in cow mode). Concurrency: a
     lost commit race raises :class:`CommitConflict`; wrap in
     :func:`with_commit_retry` to re-run against the new head."""
-    import uuid
-
     if mode not in ("mor", "cow"):
         raise ValueError(f"mode must be 'mor' or 'cow', got {mode!r}")
-    # LAZY PLAN (VERDICT r8 #2): a merge-on-read delete commits ONLY a
-    # new delete entry, so when the head's chain anchors at a parquet
-    # checkpoint the whole operation — probe, match scan, commit — can
-    # run without ever hydrating the O(files) driver dict: partition
-    # pruning on checkpoint meta, file lists fetched for surviving
-    # partitions only, and an ACTIONS-based publish that skips the
-    # parent re-materialization. Falls back to the ordinary path when
-    # no checkpoint anchors the chain, or when positional-entry
-    # consolidation is due (it rewrites table-wide address liveness).
-    files_plan = None
-    if mode == "mor":
-        v = _latest_version(path)
-        if v > 0:
-            resolved = _pruned_resolve(path, v)
-            if resolved is not None:
-                n_pos = len(
-                    [
-                        e
-                        for e in (resolved[0].get("deletes") or [])
-                        if e.get("kind") == "pos"
-                    ]
-                )
-                if n_pos + 1 <= POS_CONSOLIDATE_THRESHOLD:
-                    content, files_plan = resolved
-                    version = v
-    if files_plan is None:
-        version, content = _latest_manifest(path)
-    if version == 0:
-        raise ValueError(f"manifest table at {path} does not exist")
-    parts = content.get("partitions", {})
-    if not parts:
-        return {"deleted_rows": 0, "files_matched": 0}
-    if content.get("fmt", "parquet") != "parquet":
-        # physical addresses come from parquet's _metadata.row_index;
-        # other formats have no stable row index to mask on
-        raise ValueError(
-            "manifest_delete_where requires a parquet table "
-            f"(this table is {content.get('fmt')!r})"
-        )
-    # index-pruned probe, the MERGE discipline: partition-equality
-    # conjuncts and zone-map stats bound the match scan to files that
-    # CAN hold matching rows
-    _, rels, probe_metrics = _prune_dml_probe(
-        spark, path, version, content, condition, parts,
-        files_loader=(
-            (lambda pk: _load_files_pruned(path, files_plan, pk))
-            if files_plan is not None
-            else None
-        ),
-    )
-    if not rels:
-        return {"deleted_rows": 0, "files_matched": 0, **probe_metrics}
-    df = _load_table_files(spark, path, content, rels, with_pos=True)
-    # pending masks apply FIRST: an already-deleted row must not be
-    # re-counted (mor) or resurrected by its file's rewrite (cow)
-    df = _apply_deletes(spark, path, df, content, keep_pos=True)
-    matched = df.filter(condition).select(
-        F.col(_POS_FILE).alias("uri"), F.col(_POS_IDX).alias("pos")
-    )
-    if mode == "cow":
-        # cow reloads the matched files below; here only their identity
-        # is needed — one row per file, never data
-        uris = [
-            r["uri"] for r in matched.select("uri").distinct().collect()
-        ]
-        matched_rels = _uris_to_rels(uris, rels, path)
-        if not matched_rels:
-            return {"deleted_rows": 0, "files_matched": 0}
-        return _delete_where_cow(
-            spark, path, version, content, condition, matched_rels,
-            probe_metrics,
-        )
+    return _row_level_dml(spark, path, condition, mode)
 
-    # --- merge-on-read: commit the matched addresses as a sidecar ---
-    # one scan: the per-file counts, the mapping and the write all read
-    # the checkpoint, and one collect returns the count and the files
-    matched = matched.localCheckpoint()
-    per_uri = matched.groupBy("uri").agg(F.count(F.lit(1)).alias("n")).collect()
-    n = sum(r["n"] for r in per_uri)
-    if n == 0:
-        return {"deleted_rows": 0, "files_matched": 0}
-    uris = [r["uri"] for r in per_uri]
-    rel_of = _uris_to_rels_map(uris, rels, path)
-    mapping = _local_frame(
-        spark, [(u, rel_of[u]) for u in uris], "uri string, file string"
-    )
-    keys = matched.join(F.broadcast(mapping), "uri").select("file", "pos")
-    ref = f"_deletes/{uuid.uuid4().hex[:12]}.parquet"
-    keys.coalesce(1).write.mode("errorifexists").parquet(f"{path}/{ref}")
-    files_matched = sorted(rel_of.values())
-    entry = {
-        "ref": ref,
-        "kind": "pos",
-        "cols": [],  # no key columns: rename/drop checks no-op
-        "files": files_matched,
-        "stages": sorted({_stage_of(r) for r in files_matched}),
-    }
-    content = dict(content)
-    if files_plan is not None:
-        # lazy commit: the only change is the deletes list — publish it
-        # as an explicit action (consolidation guaranteed not due above)
-        content["deletes"] = [*(content.get("deletes") or []), entry]
-        actions = {"set": {"deletes": content["deletes"]}}
-    else:
-        content["deletes"] = _maybe_consolidate_pos(
-            spark,
-            path,
-            content,
-            [*(content.get("deletes") or []), entry],
-        )
-        actions = None
-    _publish_manifest(
-        path,
-        version + 1,
-        content,
-        op="delete",
-        op_metrics={
-            "deleted_rows": n,
-            "files_matched": len(files_matched),
-            "mode": "merge-on-read",
-            **probe_metrics,
-            **({"lazy_commit": True} if actions is not None else {}),
-        },
-        actions=actions,
-    )
-    return {"deleted_rows": n, "files_matched": len(files_matched)}
+
+def manifest_update_where(
+    spark,
+    path: str,
+    assignments: dict[str, str],
+    condition: str,
+    mode: str = "cow",
+) -> dict[str, int]:
+    """``UPDATE <table> SET col = expr, ... WHERE <condition>`` — the
+    remaining DML verb next to :func:`manifest_delete_where` and
+    :func:`manifest_merge` (which needs a source; UPDATE is
+    predicate-driven). ``assignments`` maps target columns to SQL
+    expressions over the CURRENT row (simultaneous-assignment UPDATE
+    semantics: every expression sees pre-update values; results cast to
+    the column's existing type — an UPDATE can never mutate the
+    schema). Two physical strategies:
+
+    - ``mode="cow"``: rewrite ONLY the files holding matched rows, with
+      the assignments applied to matching rows — the file-granular MERGE
+      discipline; every other file carries by reference.
+    - ``mode="mor"``: Iceberg-v2 row-level update — mask the matched
+      rows' physical addresses with a POSITIONAL delete entry and stage
+      the updated rows as NEW files, both in ONE atomic commit. Zero
+      existing bytes move; write cost tracks the UPDATED rows, not the
+      matched files (the right regime for narrow updates into huge
+      files; compaction materializes later).
+
+    Partition-column assignments are allowed — ROW MIGRATION: updated
+    rows land in their new partitions (mor masks the old address; cow's
+    rewrite drops them from the old file). Generated partition columns
+    cannot be assigned directly; they are recomputed from the recorded
+    expression after the assignments, so a base-column update migrates
+    its generated partition automatically. NULL-condition rows are not
+    updated. Returns ``{"updated_rows": n, "files_matched": m,
+    "files_rewritten": r}``; a lost commit race raises
+    :class:`CommitConflict` (wrap in :func:`with_commit_retry`)."""
+    if mode not in ("mor", "cow"):
+        raise ValueError(f"mode must be 'mor' or 'cow', got {mode!r}")
+    if not assignments:
+        raise ValueError("assignments must set at least one column")
+    return _row_level_dml(spark, path, condition, mode, assignments)
 
 
 # Pending positional entries beyond this many consolidate into ONE
@@ -2545,10 +2454,6 @@ def _maybe_consolidate_pos(
     return [*[e for e in deletes if e.get("kind") != "pos"], entry]
 
 
-def _uris_to_rels(uris: list[str], rels: list[str], path: str) -> list[str]:
-    return sorted(_uris_to_rels_map(uris, rels, path).values())
-
-
 def _scan_rel(uri: str, root_abs: str) -> str:
     """Table-relative path of a scanned file's URI (``input_file_name``,
     ``_metadata.file_path``). The URI percent-encodes the staged
@@ -2594,170 +2499,19 @@ def _uris_to_rels_map(
     return out
 
 
-def _delete_where_cow(
-    spark,
-    path: str,
-    version: int,
-    content: dict,
-    condition: str,
-    matched_rels: list[str],
-    probe_metrics: dict | None = None,
-) -> dict[str, int]:
-    """Copy-on-write tail of :func:`manifest_delete_where`: rewrite only
-    the matched files minus the matching rows; every other file of the
-    touched partitions carries by reference (``_stage_and_commit``'s
-    carry hook — the MERGE rewrite discipline). A file emptied entirely
-    drops from the manifest; a partition emptied entirely drops out.
-    Fast-forward is disabled: the match scan read the WHOLE table, so
-    any interleaved commit must re-run the delete."""
-    files: dict = content.get("files", {})
-    matched_set = set(matched_rels)
-    touched_keys = sorted(
-        k for k, es in files.items() if any(e[0] in matched_set for e in es)
-    )
-    rewrite_rels, carry_files = _split_rewrite_carry(
-        content, touched_keys, matched_set
-    )
-    tdf = _apply_deletes(
-        spark,
-        path,
-        _load_table_files(
-            spark, path, content, rewrite_rels,
-            with_pos=_has_pos_deletes(content),
-        ),
-        content,
-    )
-    if content.get("schema"):
-        tdf = _local_frame(spark, [], content["schema"]).unionByName(
-            tdf, allowMissingColumns=True
-        )
-    # the deleted count rides the staging checkpoint: one evaluation
-    # serves it and the staged write
-    flagged, counted = _observe_counts(
-        tdf.withColumn(
-            "__del",
-            F.coalesce(F.expr(condition).cast("boolean"), F.lit(False)),
-        ),
-        {"deleted_rows": F.col("__del")},
-    )
-    survivors = flagged.filter(~F.col("__del")).drop("__del")
-    pcols = _partition_cols(content)
-    result = {
-        "files_matched": len(matched_rels),
-        "files_rewritten": len(rewrite_rels),
-        "files_carried": sum(len(v) for v in carry_files.values()),
-    }
-    _stage_and_commit(
-        path,
-        survivors,
-        touched_keys,
-        pcols if len(pcols) != 1 else pcols[0],
-        content.get("fmt", "parquet"),
-        version,
-        content,
-        None,
-        op="delete",
-        allow_fast_forward=False,
-        carry_files=carry_files,
-        op_metrics_extra=lambda: {
-            **counted(),
-            **result,
-            "mode": "copy-on-write",
-            **(probe_metrics or {}),
-        },
-    )
-    return {**counted(), **result}
-
-
-def manifest_update_where(
-    spark,
-    path: str,
-    assignments: dict[str, str],
-    condition: str,
-    mode: str = "cow",
-) -> dict[str, int]:
-    """``UPDATE <table> SET col = expr, ... WHERE <condition>`` — the
-    remaining DML verb next to :func:`manifest_delete_where` and
-    :func:`manifest_merge` (which needs a source; UPDATE is
-    predicate-driven). ``assignments`` maps target columns to SQL
-    expressions over the CURRENT row (simultaneous-assignment UPDATE
-    semantics: every expression sees pre-update values; results cast to
-    the column's existing type — an UPDATE can never mutate the
-    schema). Two physical strategies:
-
-    - ``mode="cow"``: rewrite ONLY the files holding matched rows, with
-      the assignments applied to matching rows — the file-granular MERGE
-      discipline; every other file carries by reference.
-    - ``mode="mor"``: Iceberg-v2 row-level update — mask the matched
-      rows' physical addresses with a POSITIONAL delete entry and stage
-      the updated rows as NEW files, both in ONE atomic commit. Zero
-      existing bytes move; write cost tracks the UPDATED rows, not the
-      matched files (the right regime for narrow updates into huge
-      files; compaction materializes later).
-
-    Partition-column assignments are allowed — ROW MIGRATION: updated
-    rows land in their new partitions (mor masks the old address; cow's
-    rewrite drops them from the old file). Generated partition columns
-    cannot be assigned directly; they are recomputed from the recorded
-    expression after the assignments, so a base-column update migrates
-    its generated partition automatically. NULL-condition rows are not
-    updated. Returns ``{"updated_rows": n, "files_matched": m, ...}``;
-    a lost commit race raises :class:`CommitConflict` (wrap in
-    :func:`with_commit_retry`)."""
-    import uuid
-
-    if mode not in ("mor", "cow"):
-        raise ValueError(f"mode must be 'mor' or 'cow', got {mode!r}")
-    if not assignments:
-        raise ValueError("assignments must set at least one column")
-    # LAZY PLAN (the DELETE discipline extended to the second MoR verb):
-    # a merge-on-read update commits only a positional mask + freshly
-    # staged files, so when the head's chain anchors at a checkpoint the
-    # probe AND the commit run without hydrating the O(files) driver
-    # dict. Gates (any failing → eager path): positional consolidation
-    # not due, no zone-map sidecar (its refresh prunes against the full
-    # live file set), no column mapping (dir_col_ids pruning likewise).
-    files_plan = None
-    if mode == "mor":
-        v = _latest_version(path)
-        if v > 0:
-            resolved = _pruned_resolve(path, v)
-            if resolved is not None:
-                meta = resolved[0]
-                n_pos = len(
-                    [
-                        e
-                        for e in (meta.get("deletes") or [])
-                        if e.get("kind") == "pos"
-                    ]
-                )
-                if (
-                    n_pos + 1 <= POS_CONSOLIDATE_THRESHOLD
-                    and not meta.get("stats_cols")
-                    and not meta.get("col_ids")
-                ):
-                    content, files_plan = resolved
-                    version = v
-    if files_plan is None:
-        version, content = _latest_manifest(path)
-    if version == 0:
-        raise ValueError(f"manifest table at {path} does not exist")
-    parts = content.get("partitions", {})
-    if not parts:
-        return {"updated_rows": 0, "files_matched": 0}
+def _assignment_projection(content: dict, assignments: dict[str, str]):
+    """Check UPDATE ``assignments`` against the table and return
+    ``project(df, hit=None, *extra)``: ``df``'s table columns with the
+    assignments applied where the boolean column ``hit`` holds (every
+    row when ``hit`` is None), generated columns recomputed, then
+    ``extra``."""
     tschema = _ddl_schema(content["schema"])
     tcols = [f.name for f in tschema.fields]
-    t_types = {f.name: f.dataType for f in tschema.fields}
     unknown = sorted(set(assignments) - set(tcols))
     if unknown:
         raise ValueError(
             f"assignments set column(s) {unknown} that do not exist in "
             f"the table (have {tcols})"
-        )
-    if content.get("fmt", "parquet") != "parquet":
-        raise ValueError(
-            "manifest_update_where requires a parquet table "
-            f"(this table is {content.get('fmt')!r})"
         )
     gen = content.get("generated_cols") or {}
     gen_set = sorted(set(assignments) & set(gen))
@@ -2766,12 +2520,135 @@ def manifest_update_where(
             f"column(s) {gen_set} are generated — update their base "
             "columns instead; the recorded expression recomputes them"
         )
+    t_types = {f.name: f.dataType for f in tschema.fields}
     set_exprs = {
         c: F.expr(e).cast(t_types[c]) for c, e in assignments.items()
     }
+
+    def project(df: DataFrame, hit=None, *extra) -> DataFrame:
+        out = df.select(
+            *[
+                (
+                    set_exprs[c]
+                    if hit is None
+                    else F.when(hit, set_exprs[c]).otherwise(F.col(c))
+                ).alias(c)
+                if c in set_exprs
+                else F.col(c)
+                for c in tcols
+            ],
+            *extra,
+        )
+        return _apply_generated(out, gen) if gen else out
+
+    return project
+
+
+def _write_pos_sidecar(
+    spark, path: str, content: dict, matched: DataFrame,
+    rel_of: dict[str, str], lazy: bool,
+) -> list[dict]:
+    """Write ``matched``'s physical addresses as a positional delete
+    sidecar and return the table's delete entries with the new one
+    appended — consolidated on the eager path; a lazy plan's gate made
+    sure consolidation is not due. Each scanned URI maps to its
+    table-relative file through a literal map (``rel_of`` comes from the
+    grouped collect of these rows, so every URI is a key): no join."""
+    import uuid
+
+    rel_map = F.create_map(*[F.lit(s) for kv in rel_of.items() for s in kv])
+    ref = f"_deletes/{uuid.uuid4().hex[:12]}.parquet"
+    matched.select(
+        F.element_at(rel_map, F.col(_POS_FILE)).alias("file"),
+        F.col(_POS_IDX).alias("pos"),
+    ).coalesce(1).write.mode("errorifexists").parquet(f"{path}/{ref}")
+    files = sorted(rel_of.values())
+    entry = {
+        "ref": ref,
+        "kind": "pos",
+        "cols": [],  # no key columns: rename/drop checks no-op
+        "files": files,
+        "stages": sorted({_stage_of(r) for r in files}),
+    }
+    deletes = [*(content.get("deletes") or []), entry]
+    return deletes if lazy else _maybe_consolidate_pos(
+        spark, path, content, deletes
+    )
+
+
+def _row_level_dml(
+    spark,
+    path: str,
+    condition: str,
+    mode: str,
+    assignments: "dict[str, str] | None" = None,
+) -> dict[str, int]:
+    """The row-level engine of :func:`manifest_delete_where`
+    (``assignments`` None: matched rows are dropped) and
+    :func:`manifest_update_where` (matched rows become the assignments
+    projection). A DELETE is an UPDATE whose matched rows vanish, so
+    both verbs share one plan:
+
+    1. resolve the head — lazily (no O(files) driver dict) for a
+       merge-on-read statement when the chain anchors at a checkpoint
+       and the gate below holds;
+    2. index-prune the match scan (:func:`_prune_dml_probe`), load the
+       kept files with their row addresses, apply pending masks FIRST
+       (an already-deleted row is neither re-counted nor resurrected),
+       filter on ``condition``;
+    3. one grouped collect by (file URI, post-update partition key)
+       gives the row count, the matched files and the partitions the
+       updated rows land in (row migration may move them);
+    4. merge-on-read commits the matched addresses as a positional
+       sidecar (an UPDATE stages the updated rows as new files in the
+       same commit); copy-on-write rewrites only the matched files with
+       every row flagged ``coalesce(condition, false)`` and the verb's
+       action applied, carrying every other file of the touched
+       partitions by reference. Fast-forward is disabled: the match
+       scan read outside the touched partitions.
+
+    A statement that matches no row commits nothing and returns the
+    zero counts."""
+    update = assignments is not None
+    verb = "update" if update else "delete"
+    counted_as = "rows_updated" if update else "deleted_rows"
+    returned_as = "updated_rows" if update else "deleted_rows"
+    zero = {returned_as: 0, "files_matched": 0}
+    # LAZY PLAN gate (any failing → eager path): positional consolidation
+    # not due (it rewrites table-wide address liveness); a statement that
+    # stages rows also needs no zone-map sidecar (its refresh prunes
+    # against the full live file set) and no column mapping (dir_col_ids
+    # pruning likewise)
+    files_plan = None
+    if mode == "mor":
+        v = _latest_version(path)
+        resolved = _pruned_resolve(path, v) if v > 0 else None
+        if resolved is not None:
+            meta = resolved[0]
+            n_pos = sum(
+                1 for e in meta.get("deletes") or [] if e.get("kind") == "pos"
+            )
+            if n_pos + 1 <= POS_CONSOLIDATE_THRESHOLD and not (
+                update and (meta.get("stats_cols") or meta.get("col_ids"))
+            ):
+                (content, files_plan), version = resolved, v
+    if files_plan is None:
+        version, content = _latest_manifest(path)
+    if version == 0:
+        raise ValueError(f"manifest table at {path} does not exist")
+    parts = content.get("partitions", {})
+    if not parts:
+        return zero
+    if content.get("fmt", "parquet") != "parquet":
+        # physical addresses come from parquet's _metadata.row_index;
+        # other formats have no stable row index to mask on
+        raise ValueError(
+            f"manifest_{verb}_where requires a parquet table "
+            f"(this table is {content.get('fmt')!r})"
+        )
+    project = _assignment_projection(content, assignments) if update else None
     pcols = _partition_cols(content)
-    fmt = content.get("fmt", "parquet")
-    files: dict = content.get("files", {})
+    partition_col = pcols if len(pcols) != 1 else pcols[0]
 
     _, rels, probe_metrics = _prune_dml_probe(
         spark, path, version, content, condition, parts,
@@ -2782,40 +2659,38 @@ def manifest_update_where(
         ),
     )
     if not rels:
-        return {"updated_rows": 0, "files_matched": 0, **probe_metrics}
+        return zero
     df = _load_table_files(spark, path, content, rels, with_pos=True)
-    df = _apply_deletes(spark, path, df, content, keep_pos=True)
-    matched = df.filter(condition)
+    matched = _apply_deletes(spark, path, df, content, keep_pos=True).filter(
+        condition
+    )
+    if not update:
+        matched = matched.select(_POS_FILE, _POS_IDX)
     if mode == "mor":
-        # the positional sidecar and the staged updated rows both read
-        # the matched rows: evaluate them once
+        # the sidecar (and an UPDATE's staged rows) read the matched
+        # rows: evaluate them once
         matched = matched.localCheckpoint()
-
-    def transformed(src: DataFrame, *extra) -> DataFrame:
-        out = src.select(
-            *[set_exprs.get(c, F.col(c)).alias(c) for c in tcols], *extra
-        )
-        return _apply_generated(out, gen) if gen else out
-
-    # ONE collect answers the matched row count, the matched files and
-    # the partitions the updated rows land in (row migration may move
-    # them), grouped by file and post-update key
     ensure_runtime_confs(spark)
     groups = (
-        transformed(matched, F.col(_POS_FILE).alias("__uri"))
-        .groupBy("__uri", *_key_cols(pcols))
+        (project(matched, None, _POS_FILE) if update else matched)
+        .groupBy(_POS_FILE, *(_key_cols(pcols) if update else []))
         .agg(F.count(F.lit(1)).alias("__n"))
         .collect()
     )
+    if not groups:
+        return zero
     n = sum(r["__n"] for r in groups)
-    if n == 0:
-        return {"updated_rows": 0, "files_matched": 0}
-    uris = sorted({r["__uri"] for r in groups})
-    rel_of = _uris_to_rels_map(uris, rels, path)
+    rel_of = _uris_to_rels_map(
+        sorted({r[_POS_FILE] for r in groups}), rels, path
+    )
     matched_rels = sorted(rel_of.values())
-    post_keys = {
-        _part_key_tuple(tuple(r[c] for c in pcols), pcols) for r in groups
-    }
+    post_keys = (
+        {_part_key_tuple(tuple(r[c] for c in pcols), pcols) for r in groups}
+        if update
+        else set()
+    )
+    files: dict = content.get("files", {})
+    result = {"files_matched": len(matched_rels)}
 
     if mode == "cow":
         matched_set = set(matched_rels)
@@ -2826,7 +2701,7 @@ def manifest_update_where(
         }
         touched_keys = sorted(file_keys | post_keys)
         rewrite_rels, carry_files = _split_rewrite_carry(
-            content, touched_keys, set(matched_rels)
+            content, touched_keys, matched_set
         )
         tdf = _apply_deletes(
             spark,
@@ -2837,124 +2712,95 @@ def manifest_update_where(
             ),
             content,
         )
-        if content.get("schema"):
-            tdf = _local_frame(spark, [], content["schema"]).unionByName(
-                tdf, allowMissingColumns=True
-            )
-        flagged = tdf.withColumn(
-            "__upd",
-            F.coalesce(F.expr(condition).cast("boolean"), F.lit(False)),
+        # the count rides the staging checkpoint: one evaluation serves
+        # it and the staged write
+        hit = F.col("__hit")
+        flagged, counted = _observe_counts(
+            tdf.withColumn(
+                "__hit",
+                F.coalesce(F.expr(condition).cast("boolean"), F.lit(False)),
+            ),
+            {counted_as: hit},
         )
-        out = flagged.select(
-            *[
-                (
-                    F.when(F.col("__upd"), set_exprs[c])
-                    .otherwise(F.col(c))
-                    .alias(c)
-                    if c in set_exprs
-                    else F.col(c)
-                )
-                for c in tcols
-            ],
-            "__upd",
-        )
-        if gen:
-            out = _apply_generated(out, gen)
-        # the updated count rides the staging checkpoint
-        out, counted = _observe_counts(
-            out, {"rows_updated": F.col("__upd")}
-        )
-        result = {
-            "files_matched": len(matched_rels),
-            "files_rewritten": len(rewrite_rels),
-        }
+        result["files_rewritten"] = len(rewrite_rels)
+        carried = {"files_carried": sum(len(v) for v in carry_files.values())}
         _stage_and_commit(
             path,
-            out.drop("__upd"),
+            (
+                project(flagged, hit)
+                if update
+                else flagged.filter(~hit).drop("__hit")
+            ),
             touched_keys,
-            pcols if len(pcols) != 1 else pcols[0],
-            fmt,
+            partition_col,
+            "parquet",
             version,
             content,
             None,
-            op="update",
+            op=verb,
             allow_fast_forward=False,
             carry_files=carry_files,
             op_metrics_extra=lambda: {
                 **counted(),
                 **result,
-                "files_carried": sum(len(v) for v in carry_files.values()),
+                **carried,
                 "mode": "copy-on-write",
                 **probe_metrics,
             },
         )
-        return {"updated_rows": counted()["rows_updated"], **result}
+        return {
+            returned_as: counted()[counted_as],
+            **result,
+            **({} if update else carried),
+        }
 
-    # --- merge-on-read: positional mask + append, one atomic commit ---
-    mapping = _local_frame(
-        spark, [(u, rel_of[u]) for u in uris], "uri string, file string"
-    )
-    addr = (
-        matched.select(
-            F.col(_POS_FILE).alias("uri"), F.col(_POS_IDX).alias("pos")
+    lazy = files_plan is not None
+    deletes = _write_pos_sidecar(spark, path, content, matched, rel_of, lazy)
+    if not update:
+        _publish_manifest(
+            path,
+            version + 1,
+            {**content, "deletes": deletes},
+            op=verb,
+            op_metrics={
+                counted_as: n,
+                **result,
+                "mode": "merge-on-read",
+                **probe_metrics,
+                **({"lazy_commit": True} if lazy else {}),
+            },
+            # lazy commit: the only change is the deletes list
+            actions={"set": {"deletes": deletes}} if lazy else None,
         )
-        .join(F.broadcast(mapping), "uri")
-        .select("file", "pos")
-    )
-    ref = f"_deletes/{uuid.uuid4().hex[:12]}.parquet"
-    addr.coalesce(1).write.mode("errorifexists").parquet(f"{path}/{ref}")
-    entry = {
-        "ref": ref,
-        "kind": "pos",
-        "cols": [],
-        "files": matched_rels,
-        "stages": sorted({_stage_of(r) for r in matched_rels}),
-    }
-    updated = transformed(matched)
+        return {returned_as: n, **result}
+    # nothing is rewritten: every live file of the partitions the updated
+    # rows land in carries by reference next to the staged rows
     touched_keys = sorted(post_keys)
-    # nothing is rewritten: every live file of the touched partitions
-    # carries by reference next to the freshly staged updated rows
     carry_src = (
-        _load_files_pruned(path, files_plan, touched_keys)
-        if files_plan is not None
-        else files
+        _load_files_pruned(path, files_plan, touched_keys) if lazy else files
     )
-    carry_files = {k: list(carry_src.get(k, [])) for k in touched_keys}
-    if files_plan is not None:
-        # lazy commit: consolidation guaranteed not due by the gate
-        # above — append the entry as-is; purge/consolidation happen at
-        # the next eager commit or checkpoint
-        new_deletes = [*(content.get("deletes") or []), entry]
-    else:
-        new_deletes = _maybe_consolidate_pos(
-            spark, path, content, [*(content.get("deletes") or []), entry]
-        )
+    result["files_rewritten"] = 0
     _stage_and_commit(
         path,
-        updated,
+        project(matched),
         touched_keys,
-        pcols if len(pcols) != 1 else pcols[0],
-        fmt,
+        partition_col,
+        "parquet",
         version,
         content,
-        {"deletes": new_deletes},
-        op="update",
+        {"deletes": deletes},
+        op=verb,
         allow_fast_forward=False,
-        carry_files=carry_files,
+        carry_files={k: list(carry_src.get(k, [])) for k in touched_keys},
         op_metrics_extra={
-            "rows_updated": n,
-            "files_matched": len(matched_rels),
-            "files_rewritten": 0,
+            counted_as: n,
+            **result,
             "mode": "merge-on-read",
             **probe_metrics,
         },
-        lazy_actions=files_plan is not None,
+        lazy_actions=lazy,
     )
-    return {
-        "updated_rows": n,
-        "files_matched": len(matched_rels),
-        "files_rewritten": 0,
-    }
+    return {returned_as: n, **result}
 
 
 def _purge_dead_deletes(content: dict) -> list[dict]:
@@ -4317,7 +4163,8 @@ def manifest_merge(
         content, touched_keys, matched_rels
     )
     if rewrite_rels:
-        tdf = _apply_deletes(
+        # _load_table_files aligns the rewrite set to the table schema
+        target = _apply_deletes(
             spark,
             path,
             _load_table_files(
@@ -4325,14 +4172,7 @@ def manifest_merge(
                 with_pos=_has_pos_deletes(content),
             ),
             content,
-        )
-        if content.get("schema"):
-            # a rewrite set confined to one pre-evolution schema group
-            # must still expose the full table schema to the merge
-            tdf = _local_frame(spark, [], content["schema"]).unionByName(
-                tdf, allowMissingColumns=True
-            )
-        target = tdf.alias("t")
+        ).alias("t")
     elif content.get("schema"):
         # insert-only into an existing table: target is empty but must
         # keep the TABLE schema (not the source's) so carried files and

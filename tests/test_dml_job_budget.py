@@ -8,7 +8,9 @@ LocalRelations (``sinks._local_frame``), which start no Python worker.
 The tests count each statement's jobs by job group, check the returned
 counts and the ``op_metrics`` of the commit against the expected values
 (0 for a zero-row match included), and check that ``_local_frame`` plans
-as a ``LocalTableScan`` for every column type.
+as a ``LocalTableScan`` for every column type. DELETE and UPDATE, in both
+modes, also run against a DuckDB model table on an evolved,
+two-column-partitioned table with a pending positional delete.
 """
 
 from __future__ import annotations
@@ -19,15 +21,21 @@ import shutil
 import tempfile
 import uuid
 
+import duckdb
 import pytest
 
+from data_management_service_run_etl_imputations_spark.sources.fsck import (
+    manifest_fsck,
+)
 from data_management_service_run_etl_imputations_spark.sources.manifest_batch import (
     manifest_sql,
     manifest_sql_register,
     manifest_sql_unregister,
 )
 from data_management_service_run_etl_imputations_spark.sources.sinks import (
+    _latest_manifest,
     _local_frame,
+    manifest_add_column,
     manifest_history,
     manifest_read,
     manifest_upsert_partitioned,
@@ -186,7 +194,7 @@ def test_update_cow_job_budget_and_counts(spark, fact):
 
 def test_update_mor_counts(spark, fact):
     view, path = fact
-    result, _ = _run(
+    result, jobs = _run(
         spark,
         f"UPDATE {view} SET horas = horas + 0.5 "
         f"WHERE fecha = DATE '{_day(2)}' AND empleado_id % 10 = 4",
@@ -196,6 +204,7 @@ def test_update_mor_counts(spark, fact):
     m = _last_metrics(path)
     assert m["rows_updated"] == 8 and m["mode"] == "merge-on-read"
     assert m["rows_staged"] == 8  # only the updated rows are staged
+    assert jobs <= 6, jobs
 
 
 def test_update_partition_migration_counts(spark, fact):
@@ -234,13 +243,13 @@ def test_delete_mor_job_budget_and_counts(spark, fact):
     assert result["deleted_rows"] == 8 and result["files_matched"] == 1
     m = _last_metrics(path)
     assert m["deleted_rows"] == 8 and m["mode"] == "merge-on-read"
-    assert jobs <= 5, jobs
+    assert jobs <= 4, jobs
     assert manifest_read(spark, path).count() == DAYS * EMPLOYEES * 2 - 8
 
 
 def test_delete_cow_counts_and_emptied_partition(spark, fact):
     view, path = fact
-    result, _ = _run(
+    result, jobs = _run(
         spark,
         f"DELETE FROM {view} WHERE fecha = DATE '{_day(0)}' AND tarea = 't1'",
         mode="cow",
@@ -249,6 +258,7 @@ def test_delete_cow_counts_and_emptied_partition(spark, fact):
     m = _last_metrics(path)
     assert m["deleted_rows"] == EMPLOYEES and m["mode"] == "copy-on-write"
     assert m["rows_staged"] == EMPLOYEES
+    assert jobs <= 4, jobs
     # deleting the rest of the day stages zero rows: the observed row
     # count over zero rows reads 0 and the partition drops out
     result, _ = _run(
@@ -257,6 +267,89 @@ def test_delete_cow_counts_and_emptied_partition(spark, fact):
     assert result["deleted_rows"] == EMPLOYEES
     m = _last_metrics(path)
     assert m["rows_staged"] == 0 and m["partitions_dropped"] == 1
+
+
+MODEL_COLS = ("empleado_id", "fecha", "tarea", "horas", "nota")
+MODEL_STATEMENTS = {
+    "delete": [
+        "DELETE FROM {v} WHERE empleado_id % 4 = 1 AND tarea = 't0'",
+        "DELETE FROM {v} WHERE nota IS NOT NULL OR horas > 20",
+    ],
+    "update": [
+        "UPDATE {v} SET horas = horas + 0.5, nota = 'u' "
+        "WHERE empleado_id % 4 = 1",
+        # migrates rows along the second partition column
+        "UPDATE {v} SET tarea = 't2' "
+        f"WHERE empleado_id < 4 AND fecha = DATE '{_day(1)}'",
+    ],
+}
+
+
+def _sorted_rows(rows) -> list[tuple]:
+    return sorted(
+        (tuple(r) for r in rows),
+        key=lambda r: tuple((v is None, "" if v is None else v) for v in r),
+    )
+
+
+@pytest.mark.parametrize("mode", ["mor", "cow"])
+@pytest.mark.parametrize("verb", ["delete", "update"])
+def test_row_level_dml_matches_duckdb_model(spark, verb, mode):
+    """Both verbs in both modes on a table partitioned by (fecha, tarea),
+    with a column added after its first files and a pending positional
+    delete: after every statement the table holds the rows a DuckDB
+    model holds after the same SQL, and ``manifest_fsck`` is clean."""
+    path = f"{tempfile.gettempdir()}/jobmodel_{uuid.uuid4().hex[:12]}"
+    view = f"jm_{uuid.uuid4().hex[:8]}"
+    old = [
+        (e, _day(d), f"t{t}", float(2 * e + d + t))
+        for d in range(2)
+        for e in range(12)
+        for t in range(2)
+    ]
+    new = [
+        (e, _day(2), f"t{t}", float(2 * e + t), f"n{e}" if e % 2 else None)
+        for e in range(12)
+        for t in range(2)
+    ]
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE m (empleado_id INTEGER, fecha DATE, tarea VARCHAR, "
+        "horas DOUBLE)"
+    )
+    con.executemany("INSERT INTO m VALUES (?, ?, ?, ?)", old)
+    con.execute("ALTER TABLE m ADD COLUMN nota VARCHAR")
+    con.executemany("INSERT INTO m VALUES (?, ?, ?, ?, ?)", new)
+    con.execute("DELETE FROM m WHERE empleado_id = 0")
+    try:
+        manifest_upsert_partitioned(
+            spark.createDataFrame(old, COLS).coalesce(1),
+            path, list(KEYS), ["fecha", "tarea"],
+        )
+        manifest_add_column(path, "nota", "STRING")
+        manifest_upsert_partitioned(
+            spark.createDataFrame(new, f"{COLS}, nota STRING").coalesce(1),
+            path, list(KEYS), ["fecha", "tarea"],
+        )
+        manifest_sql_register(spark, view, path)
+        _run(spark, f"DELETE FROM {view} WHERE empleado_id = 0", mode="mor")
+        deletes = _latest_manifest(path)[1].get("deletes") or []
+        assert [e.get("kind") for e in deletes] == ["pos"]
+        for stmt in MODEL_STATEMENTS[verb]:
+            result, _ = _run(spark, stmt.format(v=view), mode=mode)
+            con.execute(stmt.format(v="m"))
+            assert result["statement"] == verb
+            got = manifest_read(spark, path).select(*MODEL_COLS).collect()
+            want = con.execute(f"SELECT {', '.join(MODEL_COLS)} FROM m")
+            assert _sorted_rows(got) == _sorted_rows(want.fetchall()), stmt
+            assert manifest_history(path)[-1]["op_metrics"]["mode"] == (
+                "merge-on-read" if mode == "mor" else "copy-on-write"
+            )
+            assert manifest_fsck(path)["errors"] == [], stmt
+    finally:
+        manifest_sql_unregister(spark, view)
+        con.close()
+        shutil.rmtree(path, ignore_errors=True)
 
 
 ALL_TYPES = (
